@@ -133,19 +133,36 @@ def channel_report(spark: SparkSession, sf_dir: str, top_n: int = 3) -> DataFram
 # faithfully) with '-1' placeholders for collapsed columns (:349/:445).
 #
 # Deviations (deterministic refinements of unspecified reference behavior):
-# the packed rating string renders via decimal(20,8) (engine-identical) and
-# the collect_set pack is array_sort'ed before concat_ws (the reference's
-# set order is undefined).
+# the packed rating is integer-exact (truncated at the 8th digit, see
+# `_rating_pack`) and the collect_set pack is array_sort'ed before
+# concat_ws (the reference's set order is undefined).
 #
-# Scale: every dim join is a broadcast; the fact shuffles are the three
-# per-grain aggs keyed on (terminal, geo, channel[, program, user]) — all
-# high-cardinality composites; coarser grains re-aggregate the ALREADY
-# REDUCED finer outputs (the reference's own trick), never the fact;
-# day-count/report-date scalars ride a 1-row broadcast, no driver collect.
+# Scale: every dim join is a broadcast.  The three grains are ONE pipeline:
+# each aggregate family is a single grouping-sets aggregate (the Data Cube
+# operator, Gray et al. ICDE 1996) over the region, city and province key
+# sets, and rank/pack/join run once, keyed on (grain, geo, channel).  The
+# fact feeds two aggregations — per-user and per-program, both keyed on
+# high-cardinality composites — and one 1-row broadcast of the
+# day-count/report-date scalars (no driver collect).  Nothing is cached:
+# the result is lazy and all work runs in the caller's action, so the fact
+# is scanned once per consumer — four scans, of which only the per-user
+# and per-program ones parse the props JSON (uv and the scalars need no
+# channel and read just the timestamp and user columns).
 
 _REG = ["f_terminal", "f_region_id", "f_city_id", "f_province_id"]
 _CH = ["f_channel_id"]
 _PROG = ["f_program_id"]
+# the city and province grains collapse the finer geo ids (grouping sets
+# null them; the report writes -1); grain = number of collapsed levels
+_GRAIN_SETS = (
+    _REG,
+    ["f_terminal", "f_city_id", "f_province_id"],
+    ["f_terminal", "f_province_id"],
+)
+_KEYS = ["grain", *_REG]
+# the 1-row day-count/report-date scalars: ONE aggregate, crossed onto the
+# uv and tier inputs and carried through both as constant grouping keys
+_SCAL = ["tg", "f_date_label"]
 
 
 def build_channel_base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -156,10 +173,10 @@ def build_channel_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     f_channel_name = 'ch_'+id, program name/relevance/start_time all derive
     from f_program_id, city/province names are 25/5-row dim lookups), so
     this base carries only the 9 numeric columns.  Names are derived or
-    broadcast-joined AFTER aggregation (`_with_geo_names`) — at 100 TB that
-    keeps repeated strings out of every one of the report's nine shuffles
-    instead of hashing/sorting them billions of times.  Geo ids come from
-    the customer→nation dims (broadcast, tiny)."""
+    broadcast-joined AFTER aggregation (end of `channel_report_full`) — at
+    100 TB that keeps repeated strings out of every one of the report's
+    shuffles instead of hashing/sorting them billions of times.  Geo ids
+    come from the customer→nation dims (broadcast, tiny)."""
     ev = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
@@ -210,11 +227,28 @@ def _prog_name() -> F.Column:
     )
 
 
-def _tier_counts(per_user: DataFrame, keys: list[str]) -> DataFrame:
+def _grains(df: DataFrame, extra: list[str], *aggs: F.Column) -> DataFrame:
+    """One aggregate at all three grains: grouping sets over the region,
+    city and province key sets (each plus ``extra``), keyed on
+    ``_KEYS + extra`` with the collapsed geo ids written as -1."""
+    grain = F.grouping("f_region_id") + F.grouping("f_city_id")
+    return (
+        df.groupingSets([[*k, *extra] for k in _GRAIN_SETS], *_REG, *extra)
+        .agg(*aggs, grain.alias("grain"))
+        .withColumns(
+            {c: F.coalesce(c, F.lit(-1)) for c in ("f_region_id", "f_city_id")}
+        )
+    )
+
+
+def _tier_counts(per_user: DataFrame) -> DataFrame:
     """df_1: browse/hobby/steady user counts from per-user playtime/day
-    (ChannelReport.scala:166-180)."""
+    (ChannelReport.scala:166-180).  A coarser grain counts the region-grain
+    per-user rows, i.e. sums the region counts like the reference."""
     avg_sec = F.col("upt") / F.col("tg")
-    return per_user.groupBy(*keys).agg(
+    return _grains(
+        per_user,
+        _CH + _SCAL,
         F.sum(F.when(avg_sec < 600, 1).otherwise(0)).cast("bigint").alias(
             "f_browse_user_count"
         ),
@@ -228,7 +262,7 @@ def _tier_counts(per_user: DataFrame, keys: list[str]) -> DataFrame:
 
 
 def _rating_pack(cat: DataFrame, keys: list[str], top_n: int) -> DataFrame:
-    """df_3: rating>0 → dense_rank ≤ topN per (geo, channel) → sorted
+    """df_3: rating>0 → dense_rank ≤ topN per (grain, geo, channel) → sorted
     collect_set pack (ChannelReport.scala:220-251).
 
     The reference's ``round(playtime/(uv*days*86400), 8)`` is a double
@@ -285,14 +319,10 @@ def channel_report_full(spark: SparkSession, sf_dir: str, top_n: int = 3) -> Dat
     """groupByCategory_NEW full column parity: f_date, terminal, 3-level
     geo ids+names, channel, packed rating array, packed user-type tiers —
     one row family per grain (region, city with region='-1', province with
-    region=city='-1'), ChannelReport.scala:122-454."""
-    from pyspark.storagelevel import StorageLevel
+    region=city='-1'), ChannelReport.scala:122-454.
 
-    # the base fans out to 3 aggregation families × 3 grains; persist it
-    # once like the reference (`base.persist(StorageLevel.DISK_ONLY)`,
-    # ChannelReport.scala:110) so the scan+parse+dim-join runs once — and
-    # narrow (9 numeric columns): names re-attach post-agg, see finalize
-    base = build_channel_base(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    Lazy: returns the plan; every aggregation runs in the caller's action."""
+    base = build_channel_base(spark, sf_dir)
     scal = F.broadcast(
         base.agg(
             F.countDistinct("f_date").alias("tg"),
@@ -300,16 +330,11 @@ def channel_report_full(spark: SparkSession, sf_dir: str, top_n: int = 3) -> Dat
         )
     )
 
-    # ---- region grain (the fact-touching pass) -------------------------
-    # TWO fact shuffles, not three: the per-user frame df_1 needs anyway
-    # (region, channel, user → playtime) also answers df_0's region UV as
-    # a re-aggregation — countDistinct(user) over the reduced per-user
-    # rows is exactly the distinct-user count of the base (guide §2.3
-    # "aggregate before you shuffle").  Only df_2 (per-program playtime)
-    # still shuffles the base directly; each output feeds its own grain
-    # AND the city/province re-aggregations — cache them like the
-    # reference's df_[012]_region .cache() calls
-    # (ChannelReport.scala:165/181/212).
+    # TWO fact aggregations: per-user (region, channel, user → playtime)
+    # for df_1's tiers and per-program for df_2's playtime.  df_0's uv needs
+    # no channel, so it counts users straight off the fact's narrow columns
+    # (no props parse).  Each family covers all three grains in one
+    # grouping-sets aggregate (`_grains`).
     #
     # Measured rejection (r11): collapsing these two into ONE exchange at
     # the finer (geo, channel, program, user) grain was tried and REVERTED
@@ -323,59 +348,22 @@ def channel_report_full(spark: SparkSession, sf_dir: str, top_n: int = 3) -> Dat
     # densifies at ANY SF — see OPTIMIZATION_r11.md.
     pu = base.groupBy(*_REG, *_CH, "f_user_id").agg(
         F.sum("f_play_sec").alias("upt")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    df0_r = pu.groupBy(*_REG).agg(
-        F.countDistinct("f_user_id").alias("f_uv")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    per_user_r = pu.crossJoin(scal)
-    df1_r = _tier_counts(per_user_r, _REG + _CH).persist(
-        StorageLevel.MEMORY_AND_DISK
+    ).crossJoin(scal)
+    # a coarser grain's uv is the SUM of its region uvs (the reference's
+    # approximation): each user counts once per region-grain geo
+    df0 = _grains(
+        base.crossJoin(scal),
+        _SCAL,
+        F.countDistinct("f_region_id", "f_city_id", "f_user_id").alias("f_uv"),
     )
-    df2_r = base.groupBy(*_REG, *_CH, *_PROG).agg(
-        F.sum("f_play_sec").cast("bigint").alias("f_program_play_time")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    cat_r = df0_r.join(df2_r, _REG).crossJoin(scal)
-    df3_r = _rating_pack(cat_r, _REG + _CH, top_n)
-    df4_r = df1_r.join(df3_r, _REG + _CH).crossJoin(scal)
-
-    # ---- city grain: RE-AGGREGATED from the region outputs -------------
-    city_k = ["f_terminal", "f_city_id", "f_province_id"]
-    df0_c = df0_r.groupBy(*city_k).agg(F.sum("f_uv").cast("bigint").alias("f_uv"))
-    df1_c = df1_r.groupBy(*city_k, *_CH).agg(
-        F.sum("f_browse_user_count").cast("bigint").alias("f_browse_user_count"),
-        F.sum("f_hobby_user_count").cast("bigint").alias("f_hobby_user_count"),
-        F.sum("f_steady_user_count").cast("bigint").alias("f_steady_user_count"),
+    df1 = _tier_counts(pu)
+    df2 = _grains(
+        base,
+        _CH + _PROG,
+        F.sum("f_play_sec").cast("bigint").alias("f_program_play_time"),
     )
-    df2_c = df2_r.groupBy(*city_k, *_CH, *_PROG).agg(
-        F.sum("f_program_play_time").cast("bigint").alias("f_program_play_time")
-    )
-    cat_c = df0_c.join(df2_c, city_k).crossJoin(scal)
-    df3_c = _rating_pack(cat_c, city_k + _CH, top_n)
-    df4_c = df1_c.join(df3_c, city_k + _CH).crossJoin(scal)
-
-    # ---- province grain: re-aggregated again ---------------------------
-    prov_k = ["f_terminal", "f_province_id"]
-    df0_p = df0_r.groupBy(*prov_k).agg(F.sum("f_uv").cast("bigint").alias("f_uv"))
-    df1_p = df1_r.groupBy(*prov_k, *_CH).agg(
-        F.sum("f_browse_user_count").cast("bigint").alias("f_browse_user_count"),
-        F.sum("f_hobby_user_count").cast("bigint").alias("f_hobby_user_count"),
-        F.sum("f_steady_user_count").cast("bigint").alias("f_steady_user_count"),
-    )
-    df2_p = df2_r.groupBy(*prov_k, *_CH, *_PROG).agg(
-        F.sum("f_program_play_time").cast("bigint").alias("f_program_play_time")
-    )
-    cat_p = df0_p.join(df2_p, prov_k).crossJoin(scal)
-    df3_p = _rating_pack(cat_p, prov_k + _CH, top_n)
-    df4_p = df1_p.join(df3_p, prov_k + _CH).crossJoin(scal)
-
-    user_type = F.concat(
-        F.lit("1:"),
-        F.col("f_browse_user_count"),
-        F.lit(",2:"),
-        F.col("f_hobby_user_count"),
-        F.lit(",3:"),
-        F.col("f_steady_user_count"),
-    )
+    df3 = _rating_pack(df0.join(df2, _KEYS), _KEYS + _CH, top_n)
+    df4 = df1.join(df3, _KEYS + _CH)
 
     # city/province display names are 25/5-row dim lookups — broadcast
     # joined onto the AGGREGATED rows (thousands), never onto the fact
@@ -391,27 +379,32 @@ def channel_report_full(spark: SparkSession, sf_dir: str, top_n: int = 3) -> Dat
             F.col("r_name").alias("f_province_name"),
         )
     )
-
-    def finalize(df: DataFrame, region: bool, city: bool) -> DataFrame:
-        df = df.join(reg_names, ["f_province_id"])
-        if city:
-            df = df.join(nat_names, ["f_city_id"])
-        return df.select(
+    user_type = F.concat(
+        F.lit("1:"),
+        F.col("f_browse_user_count"),
+        F.lit(",2:"),
+        F.col("f_hobby_user_count"),
+        F.lit(",3:"),
+        F.col("f_steady_user_count"),
+    )
+    # the province grain's city id is -1: no name row, so the left join
+    # leaves its name null and it renders as '-1' like the region name
+    return (
+        df4.join(reg_names, ["f_province_id"])
+        .join(nat_names, ["f_city_id"], "left")
+        .select(
             F.col("f_date_label").alias("f_date"),
             "f_terminal",
-            (F.col("f_region_id").cast("string") if region else F.lit("-1")).alias(
-                "f_region_id"
-            ),
-            (F.col("f_city_id").cast("string") if city else F.lit("-1")).alias(
-                "f_city_id"
-            ),
+            F.col("f_region_id").cast("string").alias("f_region_id"),
+            F.col("f_city_id").cast("string").alias("f_city_id"),
             F.col("f_province_id").cast("string").alias("f_province_id"),
-            (
-                F.concat(F.lit("rg_"), F.col("f_region_id").cast("string"))
-                if region
-                else F.lit("-1")
-            ).alias("f_region_name"),
-            (F.col("__city_name") if city else F.lit("-1")).alias("f_city_name"),
+            F.when(
+                F.col("grain") == 0,
+                F.concat(F.lit("rg_"), F.col("f_region_id").cast("string")),
+            )
+            .otherwise(F.lit("-1"))
+            .alias("f_region_name"),
+            F.coalesce("__city_name", F.lit("-1")).alias("f_city_name"),
             "f_province_name",
             F.col("f_channel_id").cast("string").alias("f_channel_id"),
             F.concat(F.lit("ch_"), F.col("f_channel_id").cast("string")).alias(
@@ -420,18 +413,4 @@ def channel_report_full(spark: SparkSession, sf_dir: str, top_n: int = 3) -> Dat
             "f_rating_arr",
             user_type.alias("f_user_type"),
         )
-
-    out = (
-        finalize(df4_r, True, True)
-        .unionAll(finalize(df4_c, False, True))
-        .unionAll(finalize(df4_p, False, False))
     )
-    # materialize the (small) result now, then release the four caches —
-    # otherwise every invocation pins base+3 aggregates for the session's
-    # lifetime (the reference unpersists its df_* caches the same way,
-    # ChannelReport.scala:362/368/402); localCheckpoint keeps only the
-    # final rows resident
-    out = out.localCheckpoint(eager=True)
-    for df in (base, pu, df0_r, df1_r, df2_r):
-        df.unpersist()
-    return out

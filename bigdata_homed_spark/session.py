@@ -21,6 +21,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory holding this package: Python workers import the package
+# from it, whatever the working directory and PYTHONPATH
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -68,6 +71,9 @@ def get_spark(
             "true",
         )
         .config("spark.ui.enabled", "false")
+        # merged with the launching environment's PYTHONPATH by the worker
+        # factory, so a worker can unpickle functions defined in the package
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )
     if master:

@@ -632,6 +632,26 @@ def test_merge_commit_job_count_ceiling(spark, tmp_path):
     assert len(tr.getJobIdsForGroup(None)) - before <= 10
 
 
+def test_channel_report_full_job_count_ceiling(spark, sf_dir):
+    """Pin the grouping-sets shape of channel_report_full (51 -> 17 jobs).
+
+    The three grains share one aggregate per family and the function
+    returns a lazy plan, so a warm call's build plus collect() schedules
+    at most 20 jobs and leaves no cached RDD behind.  The per-grain
+    pipelines with eager persists and a localCheckpoint took 51 jobs."""
+    from bigdata_homed_spark.reports.channel_report import channel_report_full
+
+    jsc = spark.sparkContext._jsc.sc()
+    tr = jsc.statusTracker()
+    channel_report_full(spark, sf_dir).collect()  # warm-up
+    # the session is shared: other tests' caches may already be resident
+    cached = jsc.getPersistentRDDs().size()
+    before = len(tr.getJobIdsForGroup(None))
+    channel_report_full(spark, sf_dir).collect()
+    assert len(tr.getJobIdsForGroup(None)) - before <= 20
+    assert jsc.getPersistentRDDs().size() == cached
+
+
 def test_merge_latest_job_count_ceiling(spark, tmp_path):
     """Pin the state store's per-batch floor: merge_latest is TWO logical
     actions (bounded touched-bucket collect + staged bucket write), which

@@ -4,6 +4,11 @@ truncated lines — RunLogParser blacklists + regex guards)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
 from pyspark.sql import functions as F
 
 from bigdata_homed_spark.functions.maps import kv_string_to_map
@@ -94,3 +99,44 @@ def test_subtree_descendants_matches_naive_closure():
         assert got == expected, (parent_of, roots)
 
     check()
+
+
+def test_python_workers_import_package_from_any_cwd(tmp_path):
+    """get_spark puts the package's parent directory on the Python workers'
+    path: a UDF that imports the package runs in a fresh process whose
+    working directory is outside the checkout and whose PYTHONPATH is
+    unset (without the fix the worker raises ModuleNotFoundError)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "udf_import.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+            sys.path.insert(0, {root!r})
+            from pyspark.sql import functions as F
+            from bigdata_homed_spark.session import get_spark
+
+            spark = get_spark("worker_path", master="local[1]")
+
+            @F.udf("string")
+            def package_name(_):
+                import bigdata_homed_spark
+                return bigdata_homed_spark.__name__
+
+            print(spark.range(1).select(package_name("id")).first()[0])
+            spark.stop()
+            """
+        )
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split()[-1] == "bigdata_homed_spark"

@@ -99,7 +99,7 @@ INTENTIONAL_BNL = {
         '1-row query-vector broadcast for the relevance scan, then one ON-true left join per MMR round against the selected set (broadcast, <=K=5 rows) — every BNL build side is <=5 rows and the probe side is the 50-row cached candidate cut, never the corpus (the raw count re-expands the cached cut per round, pre-execution inflation as above)'
     ),
     "bpe_vocab_merges": (
-        "per merge round: the 1-row argmax pair broadcast (the chosen merge) and the 1-row tokens-after aggregate broadcast — all scalar-sized.  Raw counts here are inflated like channel_report_full's: the plan is analyzed pre-execution, so each round's .persist() reuse point re-expands the prior rounds' subtree; at runtime each round is one pass over the cached token frame"
+        "per merge round: the 1-row argmax pair broadcast (the chosen merge) and the 1-row tokens-after aggregate broadcast — all scalar-sized.  Raw counts here are inflated: the plan is analyzed pre-execution, so each round's .persist() reuse point re-expands the prior rounds' subtree; at runtime each round is one pass over the cached token frame"
     ),
     "bpe_apply_segmentation": (
         "same machinery as bpe_vocab_merges (shared _bpe_train): one 1-row "
@@ -129,12 +129,11 @@ INTENTIONAL_BNL = {
         "pattern); the funnel chain itself is equi-joins (the 5 BHJs)"
     ),
     "channel_report_full": (
-        "9× the 1-row day-count/report-date scalar broadcast (one per grain "
-        "branch).  Its raw shuffle count is also inflated in THIS table: the "
-        "plan is analyzed before execution, so the four .persist() reuse "
-        "points (base + the three region-grain aggregates, mirroring the "
-        "reference's caches) each appear as a fully re-expanded subtree; at "
-        "runtime the cached branches collapse to one pass each."
+        "the 1-row day-count/report-date scalar broadcast, crossed onto the "
+        "uv input (the narrow geo/user fact projection) and onto the "
+        "per-user rows for the tiers.  It is one scalar aggregate that both "
+        "carry as constant grouping keys, and the three grains share one "
+        "grouping-sets aggregate per family, so there is no per-grain BNL."
     ),
 }
 
