@@ -9,12 +9,13 @@ cross-engine determinism rules).
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bigdata_homed_spark.plans import ORACLES, QUERIES  # noqa: E402
 

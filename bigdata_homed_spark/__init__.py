@@ -2,7 +2,7 @@
 
 A from-scratch re-expression of the query and data-processing
 capabilities of the reference IPTV/OTT analytics backend
-(`milton4code/bigdata_homed`, surveyed in /root/repo/SURVEY.md) as an
+(`milton4code/bigdata_homed`, surveyed in the repository's SURVEY.md) as an
 idiomatic Spark 4.x DataFrame/SQL/Structured-Streaming engine, plus
 the large-scale training-data-pipeline operators (dedup, similarity
 search, text analysis, multimodal plumbing) such an engine needs at

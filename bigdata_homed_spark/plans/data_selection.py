@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64_sql
+from ..session import session_dir
 from .registry import query
 from .text_pipeline import TOKS
 
@@ -538,8 +539,6 @@ def bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def incremental_substring_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sources.tables import load_table
 
     W = SUBSTR_W
@@ -563,7 +562,7 @@ def incremental_substring_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # stage the historical window-hash index exactly as the nightly job
     # would: written once, read back as the join side (8 bytes per window)
-    index_dir = tempfile.mkdtemp(prefix="substr_index_")
+    index_dir = session_dir(spark, "substr_index_")
     win.where(~F.col("is_new")).select("wh").distinct().write.mode(
         "overwrite"
     ).parquet(index_dir)

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..functions.maps import kv_string_to_map
 from ..operators.sessionize import pair_start_end, sessionize_by_gap, stitch_heartbeats
 from ..operators.timegrid import explode_time_grid
+from ..session import session_dir
 from .core_relational import dsum
 from .registry import query
 
@@ -251,14 +252,12 @@ def bitmap_multi_period_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         bitmap_merge,
     )
 
-    import tempfile
-
     ev = events_sec(spark, sf_dir).withColumn("day_num", F.expr("sec div 86400"))
     # stage the day-grain bitmap index exactly as a nightly job would:
     # ONE pass over raw events writes it; every period grain below reads
     # the (tiny) index, never the fact table (at 100 TB it is partitioned
     # by day and appended to, never rebuilt)
-    index_dir = tempfile.mkdtemp(prefix="bm_index_")
+    index_dir = session_dir(spark, "bm_index_")
     bitmap_build(ev, ["day_num"], "user_id").write.mode("overwrite").parquet(index_dir)
     daily_bm = spark.read.parquet(index_dir)
 

@@ -7,34 +7,32 @@ batch session windows, packed user arrays (A4/O4), composite-key dedup
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import session_dir, session_fixture
 from ..sources.sinks import write_partitioned_fact
+from ..sources.snapshots import ConstraintViolationError, SnapshotTable
 from ..sources.tables import load_table
 from .core_relational import dsum
 from .homed_behavior import EV_SEC, events_sec
 from .registry import query
 
-_FACT_CACHE: dict[str, str] = {}
-
 
 def _fact_path(spark: SparkSession, sf_dir: str) -> str:
     """Write the day-partitioned behavior fact once per (session, sf) —
     the S7/S8 sink under test — and reuse the directory for the scan."""
-    from ..session import session_cache_key, session_scoped_path
 
-    cached = session_scoped_path(_FACT_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_fact_"), "behavior_fact")
+    def build():
+        path = os.path.join(session_dir(spark, "homed_fact_"), "behavior_fact")
         ev = load_table(spark, sf_dir, "events").withColumn(
             "day", F.date_format(F.timestamp_seconds(F.col("ts_sec")), "yyyyMMdd")
         )
-        write_partitioned_fact(ev, cached, ["day"], output_files_per_partition=1)
-        _FACT_CACHE[session_cache_key(spark, sf_dir)] = cached
-    return cached
+        write_partitioned_fact(ev, path, ["day"], output_files_per_partition=1)
+        return path
+
+    return session_fixture(spark, sf_dir, "behavior_fact", build)
 
 
 # --------------------------------------------------------------------------
@@ -526,17 +524,13 @@ def program_demand_counter_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per-partition op and the re-reduce shuffles ALREADY-REDUCED per-user
 # rows, never raw events.
 
-_BUS_ARRAY_CACHE: dict[str, str] = {}
-
 
 def _bus_array_path(spark: SparkSession, sf_dir: str) -> str:
     """Write the packed daily user-array table once per (session, sf):
     the saveBusinessArray analog."""
-    from ..session import session_cache_key, session_scoped_path
 
-    cached = session_scoped_path(_BUS_ARRAY_CACHE, spark, sf_dir)
-    if cached is None:
-        path = os.path.join(tempfile.mkdtemp(prefix="homed_busarr_"), "t_bus_array_day")
+    def build():
+        path = os.path.join(session_dir(spark, "homed_busarr_"), "t_bus_array_day")
         ev = load_table(spark, sf_dir, "events")
         k = F.coalesce(F.get_json_object("props", "$.k").cast("bigint"), F.lit(0))
         daily = ev.select(
@@ -568,9 +562,9 @@ def _bus_array_path(spark: SparkSession, sf_dir: str) -> str:
             "f_date", "f_region_id", "f_terminal", "f_service_type"
         ).agg(F.array_sort(F.collect_list(pack)).alias("f_user_array"))
         write_partitioned_fact(packed, path, ["f_date"], output_files_per_partition=1)
-        _BUS_ARRAY_CACHE[session_cache_key(spark, sf_dir)] = path
-        cached = path
-    return cached
+        return path
+
+    return session_fixture(spark, sf_dir, "t_bus_array_day", build)
 
 
 @query(
@@ -668,22 +662,18 @@ def business_user_array_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partitioned parallel read (one cursor per stride), then a broadcast
 # join into the event fact.  The dim is regenerated deterministically so
 # the DuckDB oracle reproduces it from generate_series.
-_JDBC_DIM_CACHE: dict[str, str] = {}
 
 
 def _jdbc_dim_url(spark: SparkSession, sf_dir: str) -> str:
     """Write the 30-row dim into embedded Derby once per (session, sf).
 
-    Plain dict cache (not session_scoped_path, which validates a
-    directory): the in-memory Derby DB lives exactly as long as the JVM,
-    same lifetime as the applicationId key.
+    The in-memory Derby DB lives exactly as long as the JVM, the same
+    lifetime as the memo's applicationId key.
     """
-    from ..session import session_cache_key
     from ..sources.sinks import write_jdbc
 
-    cached = _JDBC_DIM_CACHE.get(session_cache_key(spark, sf_dir))
-    if cached is None:
-        cached = "jdbc:derby:memory:homed_dim;create=true"
+    def build():
+        url = "jdbc:derby:memory:homed_dim;create=true"
         i = F.col("id")
         dim = spark.range(0, 30).select(
             i.alias("id"),
@@ -692,14 +682,15 @@ def _jdbc_dim_url(spark: SparkSession, sf_dir: str) -> str:
         )
         write_jdbc(
             dim,
-            cached,
+            url,
             "jdbc_dim",
             mode="overwrite",
             num_partitions=2,
             properties={"driver": "org.apache.derby.jdbc.EmbeddedDriver"},
         )
-        _JDBC_DIM_CACHE[session_cache_key(spark, sf_dir)] = cached
-    return cached
+        return url
+
+    return session_fixture(spark, sf_dir, "jdbc_dim", build)
 
 
 @query(
@@ -823,28 +814,22 @@ def scd2_status_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # comes from the manifest itself, so the oracle's literals verify the
 # commit protocol produced exactly the promised file sets, and v2 = v3
 # row/sum equality proves compaction preserved the data.
-_SNAP_CACHE: dict[str, str] = {}
 _SNAP_CUT = "1998-01-01"
 
 
 def _snapshot_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAP_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snap_"), "orders_snap")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snap_"), "orders_snap")
+        t = SnapshotTable(path)
         orders = load_table(spark, sf_dir, "orders")
         early = orders.where(F.col("o_orderdate") < F.lit(_SNAP_CUT).cast("timestamp"))
         late = orders.where(F.col("o_orderdate") >= F.lit(_SNAP_CUT).cast("timestamp"))
         t.commit_append(early, n_files=2)            # v1
         t.commit_append(late, n_files=2)             # v2 = v1 files + 2
         t.commit_rewrite(t.read(spark, 2), n_files=1)  # v3: compaction
-        _SNAP_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_snap", build))
 
 
 @query(
@@ -899,17 +884,12 @@ def table_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # move, never whole rows.  Separate cached table from
 # table_snapshot_timetravel's — diffing must not grow that query's
 # version list.
-_SNAPDIFF_CACHE: dict[str, str] = {}
 
 
 def _snapdiff_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPDIFF_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapdiff_"), "orders_cdc")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapdiff_"), "orders_cdc")
+        t = SnapshotTable(path)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         )
@@ -924,10 +904,9 @@ def _snapdiff_table(spark: SparkSession, sf_dir: str):
         )
         t.commit_rewrite(v1, n_files=2)
         t.commit_rewrite(v2, n_files=2)
-        _SNAPDIFF_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_cdc", build))
 
 
 @query(
@@ -987,19 +966,14 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decision, so the oracle's literals (2 of 7) verify the zone maps
 # actually skipped, while n_rows/sum verify the surviving files + residual
 # filter return exactly the right rows.
-_SNAPPRUNE_CACHE: dict[str, str] = {}
 _PRUNE_LO = "1997-01-01 00:00:00"
 _PRUNE_HI = "1998-12-31 23:59:59"
 
 
 def _snapprune_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPPRUNE_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapzm_"), "orders_zm")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapzm_"), "orders_zm")
+        t = SnapshotTable(path)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderdate"
         )
@@ -1011,10 +985,9 @@ def _snapprune_table(spark: SparkSession, sf_dir: str):
                 n_files=1,
                 stats_cols=["o_orderdate"],
             )
-        _SNAPPRUNE_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_zm", build))
 
 
 @query(
@@ -1059,17 +1032,12 @@ def snapshot_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MINIMALITY, while n_rows/sum verify the merged state.  At 100 TB this is
 # the point of clustered layout + zone maps: a merge touches the files its
 # keys live in, not the table.
-_SNAPMERGE_CACHE: dict[str, str] = {}
 
 
 def _snapmerge_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPMERGE_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapmg_"), "orders_mg")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapmg_"), "orders_mg")
+        t = SnapshotTable(path)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderdate"
         )
@@ -1097,10 +1065,9 @@ def _snapmerge_table(spark: SparkSession, sf_dir: str):
             n_new_files=1,
             stats_cols=["o_orderdate"],
         )
-        _SNAPMERGE_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_mg", build))
 
 
 @query(
@@ -1157,17 +1124,12 @@ def snapshot_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # merged state.  At 100 TB this is the Delta/Iceberg answer to frequent
 # small deletes/upserts on huge clustered files: write O(deleted rows),
 # not O(hit-file bytes), and let OPTIMIZE fold the DVs in off-peak.
-_SNAPMOR_CACHE: dict[str, str] = {}
 
 
 def _snapmor_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPMOR_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapmor_"), "orders_mor")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapmor_"), "orders_mor")
+        t = SnapshotTable(path)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderdate"
         )
@@ -1201,10 +1163,9 @@ def _snapmor_table(spark: SparkSession, sf_dir: str):
             n_new_files=1,
             stats_cols=["o_orderdate"],
         )
-        _SNAPMOR_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_mor", build))
 
 
 @query(
@@ -1265,17 +1226,12 @@ def snapshot_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rewritten (n_files_carried=7 of 7), write cost O(matched rows).  The
 # oracle replays the UPDATE as a CASE projection; the protocol literals
 # pin zero rewrite amplification and the single-DV commit.
-_SNAPUPD_CACHE: dict[str, str] = {}
 
 
 def _snapupd_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPUPD_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapupd_"), "orders_upd")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapupd_"), "orders_upd")
+        t = SnapshotTable(path)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderdate"
         )
@@ -1291,10 +1247,9 @@ def _snapupd_table(spark: SparkSession, sf_dir: str):
             {"o_totalprice": F.col("o_totalprice") + F.lit(25.0)},
             stats_cols=["o_orderdate"],
         )
-        _SNAPUPD_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_upd", build))
 
 
 @query(
@@ -1347,17 +1302,12 @@ def snapshot_update_inplace(spark: SparkSession, sf_dir: str) -> DataFrame:
 # version behind, n_staged_left=0 proves both staged manifests resolved.
 # At 100 TB the expensive write happens ONCE and quality gating is a
 # metadata decision — no quarantine copy, no double write.
-_SNAPWAP_CACHE: dict[str, str] = {}
 
 
 def _snapwap_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPWAP_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapwap_"), "orders_wap")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapwap_"), "orders_wap")
+        t = SnapshotTable(path)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderdate"
         )
@@ -1384,10 +1334,9 @@ def _snapwap_table(spark: SparkSession, sf_dir: str):
         )
         assert ok.count() == 0
         t.publish_staged(sid)
-        _SNAPWAP_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_wap", build))
 
 
 @query(
@@ -1432,17 +1381,12 @@ def snapshot_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 # version it rolled back over: sum_total_restored equals the clean build,
 # sum_total_bad is 0, and n_versions=3 pins the never-rewrite-history
 # contract (v2 stays readable for the post-mortem).
-_SNAPRESTORE_CACHE: dict[str, str] = {}
 
 
 def _snaprestore_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPRESTORE_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snaprs_"), "orders_rs")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snaprs_"), "orders_rs")
+        t = SnapshotTable(path)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         )
@@ -1451,10 +1395,9 @@ def _snaprestore_table(spark: SparkSession, sf_dir: str):
             orders.withColumn("o_totalprice", F.lit(0.0)), n_files=2
         )
         t.restore(1)                         # v3: rollback, zero data moved
-        _SNAPRESTORE_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_rs", build))
 
 
 @query(
@@ -1493,17 +1436,12 @@ def snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
 # modular rule, so the hash verifies both the union schema and the
 # null-backfill semantics.  Zero data movement: old files are never
 # touched (contrast ALTER TABLE + full rewrite).
-_SNAPEVO_CACHE: dict[str, str] = {}
 
 
 def _snapevo_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPEVO_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapev_"), "orders_ev")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapev_"), "orders_ev")
+        t = SnapshotTable(path)
         orders = load_table(spark, sf_dir, "orders")
         old = orders.where(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_totalprice"
@@ -1515,10 +1453,9 @@ def _snapevo_table(spark: SparkSession, sf_dir: str):
         )
         t.commit_append(old, n_files=1)
         t.commit_append(new, n_files=1)
-        _SNAPEVO_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_ev", build))
 
 
 @query(
@@ -1596,17 +1533,12 @@ def snapshot_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stats comparison, no residual filter — the partition IS the predicate).
 # The oracle's 2-of-7 literals verify the pruning decision itself;
 # n_rows/sum verify the surviving partitions return exactly the range.
-_SNAPPART_CACHE: dict[str, str] = {}
 
 
 def _snappart_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPPART_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snappt_"), "orders_pt")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snappt_"), "orders_pt")
+        t = SnapshotTable(path)
         orders = (
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_totalprice", "o_orderdate")
@@ -1618,10 +1550,9 @@ def _snappart_table(spark: SparkSession, sf_dir: str):
         t.commit_append(
             orders, n_files=1, stats_cols=["o_orderdate"], partition_by=["o_year"]
         )
-        _SNAPPART_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_pt", build))
 
 
 @query(
@@ -1666,17 +1597,12 @@ def snapshot_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFram
 # to run online.  The oracle pins the scattered count (7 = nothing
 # pruned), the strict improvement, the bound, and the row-level result
 # from the clustered pruned read.
-_SNAPCLUST_CACHE: dict[str, str] = {}
 
 
 def _snapclust_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPCLUST_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapcl_"), "orders_cl")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapcl_"), "orders_cl")
+        t = SnapshotTable(path)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderdate"
         )
@@ -1695,10 +1621,9 @@ def _snapclust_table(spark: SparkSession, sf_dir: str):
             stats_cols=["o_orderdate"],
             cluster_by=["o_orderdate"],
         )
-        _SNAPCLUST_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_cl", build))
 
 
 @query(
@@ -1754,17 +1679,12 @@ def snapshot_clustering_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle pins both file counts, both ranges' live aggregates, and the
 # version count — pruning decisions, row-level DV subtraction, and the
 # no-rewrite protocol all verified in one row.
-_SNAPPART_EVO_CACHE: dict[str, str] = {}
 
 
 def _snap_partition_evo_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPPART_EVO_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapevo_"), "orders_evo")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapevo_"), "orders_evo")
+        t = SnapshotTable(path)
         orders = (
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_totalprice", "o_orderdate")
@@ -1784,10 +1704,9 @@ def _snap_partition_evo_table(spark: SparkSession, sf_dir: str):
         )
         # v3: one DV delete spanning BOTH layout generations
         t.commit_delete(spark, F.col("o_orderkey") % 7 == 0)
-        _SNAPPART_EVO_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_evo", build))
 
 
 @query(
@@ -1860,17 +1779,12 @@ def snapshot_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (28) and after (7), the post-OPTIMIZE pruning decision (2 entries for a
 # 2-year probe), the DV-fold (no delete_files left), and the live
 # row-level aggregate.
-_SNAPPOPT_CACHE: dict[str, str] = {}
 
 
 def _snap_popt_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPPOPT_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snappo_"), "orders_po")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snappo_"), "orders_po")
+        t = SnapshotTable(path)
         orders = (
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_totalprice", "o_orderdate")
@@ -1888,10 +1802,9 @@ def _snap_popt_table(spark: SparkSession, sf_dir: str):
         t.commit_delete(spark, F.col("o_orderkey") % 10 == 3)
         # the nightly OPTIMIZE: per-partition bin-pack, DVs folded in
         t.commit_compact_small(spark, threshold_bytes=1 << 30, n_files=1)
-        _SNAPPOPT_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_po", build))
 
 
 @query(
@@ -1945,17 +1858,12 @@ def snapshot_partitioned_optimize(spark: SparkSession, sf_dir: str) -> DataFrame
 # file accounting, the layout-preservation invariant, and the row-level
 # upsert result (prices of matched keys replaced, everything else
 # untouched).
-_SNAPPMRG_CACHE: dict[str, str] = {}
 
 
 def _snap_pmerge_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPPMRG_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snappm_"), "orders_pm")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snappm_"), "orders_pm")
+        t = SnapshotTable(path)
         orders = (
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_totalprice", "o_orderdate")
@@ -1975,10 +1883,9 @@ def _snap_pmerge_table(spark: SparkSession, sf_dir: str):
             ),
         )
         t.commit_merge(upd, key="o_orderkey", stats_cols=["o_orderkey"])
-        _SNAPPMRG_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_pm", build))
 
 
 @query(
@@ -2034,17 +1941,12 @@ def snapshot_partitioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the violating append being refused with the HEAD UNMOVED, NULL passing
 # (SQL CHECK semantics), and the metadata-only protocol (file list
 # unchanged by the constraint commit).
-_SNAPCONS_CACHE: dict[str, str] = {}
 
 
 def _snap_cons_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import ConstraintViolationError, SnapshotTable
-
-    cached = session_scoped_path(_SNAPCONS_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapck_"), "orders_ck")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapck_"), "orders_ck")
+        t = SnapshotTable(path)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderdate", "o_orderpriority"
         )
@@ -2078,14 +1980,10 @@ def _snap_cons_table(spark: SparkSession, sf_dir: str):
         outcomes["files_unchanged_by_decl"] = t.files(head_before) == t.files(
             head_before - 1
         )
-        _SNAPCONS_STATE[cached] = outcomes
-        _SNAPCONS_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path, outcomes
 
-    return _ST(cached), _SNAPCONS_STATE[cached]
-
-
-_SNAPCONS_STATE: dict[str, dict] = {}
+    path, outcomes = session_fixture(spark, sf_dir, "orders_ck", build)
+    return SnapshotTable(path), outcomes
 
 
 @query(
@@ -2134,17 +2032,12 @@ def snapshot_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # o_orderpriority, and pins: the file list untouched by both DDL commits,
 # the old name live at v1 (time travel), and the post-merge aggregate
 # under the new name.
-_SNAPCMAP_CACHE: dict[str, str] = {}
 
 
 def _snap_cmap_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPCMAP_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapcm_"), "orders_cm")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapcm_"), "orders_cm")
+        t = SnapshotTable(path)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice", "o_orderdate", "o_orderpriority"
         )
@@ -2163,10 +2056,9 @@ def _snap_cmap_table(spark: SparkSession, sf_dir: str):
         )
         t.commit_merge_on_read(upd, key="o_orderkey")  # v3
         t.drop_column(spark, "o_orderpriority")  # v4, metadata-only
-        _SNAPCMAP_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_cm", build))
 
 
 @query(
@@ -2221,17 +2113,12 @@ def snapshot_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle.  Reference provenance: the partitioned refresh cycle this
 # protects is the `etl/MysqlToHive.scala:52-54` drop/rename swap shape,
 # rebuilt on manifests.
-_SNAPTYP_CACHE: dict[str, str] = {}
 
 
 def _snap_type_fidelity_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPTYP_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapty_"), "orders_ty")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapty_"), "orders_ty")
+        t = SnapshotTable(path)
         orders = (
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_totalprice", "o_orderdate")
@@ -2265,10 +2152,9 @@ def _snap_type_fidelity_table(spark: SparkSession, sf_dir: str):
         t.commit_append(
             orders.where(F.col("o_orderkey") % 2 == 1), n_files=1, evolve=True
         )
-        _SNAPTYP_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_ty", build))
 
 
 @query(
@@ -2332,17 +2218,12 @@ def snapshot_evolved_type_fidelity(spark: SparkSession, sf_dir: str) -> DataFram
 # (`bytes_match_disk` compares each manifest `bytes` to os.path.getsize).
 # At 100 TB this is the contract that lets an OPTIMIZE planner pick bins
 # over a million files without opening one footer.
-_SNAPFMETA_CACHE: dict[str, str] = {}
 
 
 def _snap_fmeta_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPFMETA_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapfm_"), "orders_fm")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapfm_"), "orders_fm")
+        t = SnapshotTable(path)
         orders = (
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_totalprice", "o_orderdate")
@@ -2355,10 +2236,9 @@ def _snap_fmeta_table(spark: SparkSession, sf_dir: str):
         # files_table must report per-file dead-row counts WITHOUT a data
         # pass (DV reads are O(dead rows))
         t.commit_delete(spark, F.col("o_orderkey") % 13 == 0)
-        _SNAPFMETA_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_fm", build))
 
 
 @query(
@@ -2423,17 +2303,12 @@ def snapshot_files_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 # `orders`: partition count, the exact pre-/post-compact file census
 # (distinct (month, ingest-parity) pairs — no hardcoded counts), and the
 # live row/sum fidelity after the fold.
-_SNAPPOOL_CACHE: dict[str, str] = {}
 
 
 def _snap_pool_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPPOOL_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snappool_"), "orders_pool")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snappool_"), "orders_pool")
+        t = SnapshotTable(path)
         orders = (
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_totalprice", "o_orderdate")
@@ -2451,10 +2326,9 @@ def _snap_pool_table(spark: SparkSession, sf_dir: str):
         # the nightly OPTIMIZE: one bin per month partition, fanned out
         # 8-wide over the maintenance pool (~80 concurrent-safe bins)
         t.commit_compact_small(spark, threshold_bytes=1 << 30, n_files=1)
-        _SNAPPOOL_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_pool", build))
 
 
 @query(
@@ -2523,17 +2397,12 @@ def snapshot_pooled_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # row-level merge result.  (Reference: Hive's escapePathName; the
 # reference app dodges this by using digit-only day partitions —
 # `etl/LogParser.scala:92-101` — so this is new-engine hardening.)
-_SNAPESC_CACHE: dict[str, str] = {}
 
 
 def _snap_esc_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPESC_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snapesc_"), "orders_esc")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snapesc_"), "orders_esc")
+        t = SnapshotTable(path)
         orders = (
             load_table(spark, sf_dir, "orders")
             .select("o_orderkey", "o_totalprice", "o_orderstatus", "o_orderpriority")
@@ -2556,10 +2425,9 @@ def _snap_esc_table(spark: SparkSession, sf_dir: str):
             ),
         )
         t.commit_merge(upd, key="o_orderkey", stats_cols=["o_orderkey"])
-        _SNAPESC_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_esc", build))
 
 
 @query(
@@ -2628,17 +2496,12 @@ def snapshot_escaped_partition_values(spark: SparkSession, sf_dir: str) -> DataF
 # raw-data reconstructions.  Reference provenance: the reference rewrites
 # report tables in place (DELETE-then-append, `utils/DBUtils.scala:36-44`)
 # — zero reproducibility; this is the 100 TB lineage answer.
-_SNAPTAG_CACHE: dict[str, str] = {}
 
 
 def _snap_tag_table(spark: SparkSession, sf_dir: str):
-    from ..session import session_cache_key, session_scoped_path
-    from ..sources.snapshots import SnapshotTable
-
-    cached = session_scoped_path(_SNAPTAG_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_snaptag_"), "orders_tag")
-        t = SnapshotTable(cached)
+    def build():
+        path = os.path.join(session_dir(spark, "homed_snaptag_"), "orders_tag")
+        t = SnapshotTable(path)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         )
@@ -2659,10 +2522,9 @@ def _snap_tag_table(spark: SparkSession, sf_dir: str):
         t.tag("train-v2")
         t.commit_delete(spark, F.col("o_orderkey") % 5 == 0)            # v4
         t.vacuum(keep_last=1)  # v2 expires; v3 survives tagged (gap repair)
-        _SNAPTAG_CACHE[session_cache_key(spark, sf_dir)] = cached
-    from ..sources.snapshots import SnapshotTable as _ST
+        return path
 
-    return _ST(cached)
+    return SnapshotTable(session_fixture(spark, sf_dir, "orders_tag", build))
 
 
 @query(

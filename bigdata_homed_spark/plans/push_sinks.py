@@ -17,12 +17,11 @@ covered by unit tests with recording fakes rather than a roundtrip query
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash64_sql
+from ..session import session_dir
 from ..sources.external_sinks import (
     FileBackedKVClient,
     encode_hbase_cells,
@@ -93,7 +92,7 @@ def rank_list_publish_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         pack_rank_list_col("ns", "uids").alias("payload"),
     )
 
-    root = tempfile.mkdtemp(prefix="rank_publish_")
+    root = session_dir(spark, "rank_publish_")
     publish_rank_lists(payloads, lambda: FileBackedKVClient(root))
 
     recs = read_kv_records(spark, root).where(
@@ -168,7 +167,7 @@ def hbase_cell_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         cf="d",
         salt_buckets=_HB_SALT_BUCKETS,
     )
-    root = tempfile.mkdtemp(prefix="hbase_cells_")
+    root = session_dir(spark, "hbase_cells_")
     write_hbase_cells(
         cells, lambda: FileBackedKVClient(root), "t_report", n_partitions=4
     )

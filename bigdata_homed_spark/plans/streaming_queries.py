@@ -12,10 +12,10 @@ its realtime jobs and nightly repair jobs (SURVEY §2.9 T6).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import session_dir, session_fixture
 from ..streaming.jobs import hourly_event_counts, read_events_stream, run_stream_to_memory
 from .analysis_queries import (
     HDR_QS,
@@ -34,25 +34,18 @@ from .registry import query
 # for the Kafka topic a production job would read.  The staged bytes are a
 # pure function of (sf_dir, fixture tag incl. batch count), so re-staging
 # them on every invocation is repeated fixture CONSTRUCTION, not
-# computation: stage once per session, the same `session_scoped_path`
-# convention the snapshot fixtures have used since r7.  Only the immutable
+# computation: stage once per session through the `session_fixture` memo
+# the snapshot fixtures use.  Only the immutable
 # INPUT is reused — each invocation still runs its full drain (fresh
 # checkpoint, fresh state/table dirs, every commit recomputed), so nothing
 # the oracle checks is ever served from a cache.
-_STAGED_SOURCES: dict[str, str] = {}
-
-
 def _stage_source_once(spark: SparkSession, sf_dir: str, tag: str, write) -> str:
-    from ..session import session_cache_key
-
-    key = f"{session_cache_key(spark, sf_dir)}:{tag}"
-    path = _STAGED_SOURCES.get(key)
-    if path is not None and os.path.isdir(path):
+    def build():
+        path = session_dir(spark, f"{tag}_")
+        write(path)
         return path
-    path = tempfile.mkdtemp(prefix=f"{tag}_")
-    write(path)
-    _STAGED_SOURCES[key] = path
-    return path
+
+    return session_fixture(spark, sf_dir, tag, build)
 
 
 @query(
@@ -422,14 +415,12 @@ def _run_keyed_upsert_stream(
     driver-held running max of event time, so it is genuinely monotonic
     rather than batch-local.  Per-batch I/O stays O(batch ∪ touched
     buckets) throughout."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..sources.sinks import PartitionedStateStore
 
     store = PartitionedStateStore(
-        tempfile.mkdtemp(prefix="upsert_state_"), ["user_id"], n_buckets=16
+        session_dir(spark, "upsert_state_"), ["user_id"], n_buckets=16
     )
     hi = {"max_sec": None}
 
@@ -448,7 +439,7 @@ def _run_keyed_upsert_stream(
     q = (
         events.writeStream.foreachBatch(process_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="upsert_ckpt_"))
+        .option("checkpointLocation", session_dir(spark, "upsert_ckpt_"))
         .start()
     )
     q.awaitTermination()
@@ -762,8 +753,6 @@ def dedup_merge_batch(store, batch_df: DataFrame, batch_id: int) -> None:
     """,
 )
 def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..sources.sinks import PartitionedStateStore
@@ -779,7 +768,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     store = PartitionedStateStore(
-        tempfile.mkdtemp(prefix="dedup_index_"), ["text_hash"], n_buckets=16
+        session_dir(spark, "dedup_index_"), ["text_hash"], n_buckets=16
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -797,7 +786,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         stream.writeStream.foreachBatch(process_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="dedup_ckpt_"))
+        .option("checkpointLocation", session_dir(spark, "dedup_ckpt_"))
         .start()
     )
     q.awaitTermination()
@@ -908,8 +897,6 @@ def stream_channel_live_counts(
     because keep-latest leaves one row per user), the A7 re-agg trick,
     so no second pass and no grouping-sets expansion of the fact.
     """
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..sources.sinks import PartitionedStateStore
@@ -945,7 +932,7 @@ def stream_channel_live_counts(
     )
 
     store = PartitionedStateStore(
-        tempfile.mkdtemp(prefix="chl_state_"), ["user_id"], n_buckets=16
+        session_dir(spark, "chl_state_"), ["user_id"], n_buckets=16
     )
     hi = {"max_sec": None}
 
@@ -1022,7 +1009,7 @@ def stream_channel_live_counts(
         .load(staged)
         .writeStream.foreachBatch(process_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="chl_ckpt_"))
+        .option("checkpointLocation", session_dir(spark, "chl_ckpt_"))
         .start()
     )
     q.awaitTermination()
@@ -1121,8 +1108,6 @@ def stream_cdc_apply(
     per user, minus users whose last op was a delete.  Split-independent
     and replay-idempotent for the same reason merge_latest is.
     """
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..sources.sinks import PartitionedStateStore
@@ -1136,7 +1121,7 @@ def stream_cdc_apply(
     )
 
     store = PartitionedStateStore(
-        tempfile.mkdtemp(prefix="cdc_state_"), ["user_id"], n_buckets=16
+        session_dir(spark, "cdc_state_"), ["user_id"], n_buckets=16
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1162,7 +1147,7 @@ def stream_cdc_apply(
         .load(staged)
         .writeStream.foreachBatch(process_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="cdc_ckpt_"))
+        .option("checkpointLocation", session_dir(spark, "cdc_ckpt_"))
         .start()
     )
     q.awaitTermination()
@@ -1205,8 +1190,6 @@ def stream_cdc_apply(
 def stream_snapshot_commits(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..sources.snapshots import SnapshotTable
@@ -1219,7 +1202,7 @@ def stream_snapshot_commits(
         ).repartitionByRange(n_batches, "event_id").write.mode("overwrite").parquet(p),
     )
 
-    t = SnapshotTable(tempfile.mkdtemp(prefix="snapstream_tbl_"))
+    t = SnapshotTable(session_dir(spark, "snapstream_tbl_"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         t.commit_append(
@@ -1239,7 +1222,7 @@ def stream_snapshot_commits(
         .load(staged)
         .writeStream.foreachBatch(process_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="snapstream_ckpt_"))
+        .option("checkpointLocation", session_dir(spark, "snapstream_ckpt_"))
         .start()
     )
     q.awaitTermination()
@@ -1293,8 +1276,6 @@ def stream_snapshot_commits(
 def stream_dual_snapshot_commits(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..sources.snapshots import SnapshotTable
@@ -1307,8 +1288,8 @@ def stream_dual_snapshot_commits(
         ).repartitionByRange(n_batches, "event_id").write.mode("overwrite").parquet(p),
     )
 
-    fact = SnapshotTable(tempfile.mkdtemp(prefix="snapdual_fact_"))
-    agg = SnapshotTable(tempfile.mkdtemp(prefix="snapdual_agg_"))
+    fact = SnapshotTable(session_dir(spark, "snapdual_fact_"))
+    agg = SnapshotTable(session_dir(spark, "snapdual_agg_"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         rows = batch_df.select("event_id", "event_type", "value")
@@ -1325,7 +1306,7 @@ def stream_dual_snapshot_commits(
         .load(staged)
         .writeStream.foreachBatch(process_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="snapdual_ckpt_"))
+        .option("checkpointLocation", session_dir(spark, "snapdual_ckpt_"))
         .start()
     )
     q.awaitTermination()
@@ -1398,8 +1379,6 @@ def stream_dual_snapshot_commits(
 def stream_mor_upsert(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -1413,7 +1392,7 @@ def stream_mor_upsert(
         ).repartitionByRange(n_batches, "event_id").write.mode("overwrite").parquet(p),
     )
 
-    t = SnapshotTable(tempfile.mkdtemp(prefix="morups_tbl_"))
+    t = SnapshotTable(session_dir(spark, "morups_tbl_"))
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts_sec").desc(), F.col("event_id").desc()
     )
@@ -1449,7 +1428,7 @@ def stream_mor_upsert(
         .load(staged)
         .writeStream.foreachBatch(process_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="morups_ckpt_"))
+        .option("checkpointLocation", session_dir(spark, "morups_ckpt_"))
         .start()
     )
     q.awaitTermination()
@@ -1499,8 +1478,6 @@ def stream_mor_upsert(
 def stream_partitioned_snapshot_sink(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..sources.snapshots import SnapshotTable
@@ -1513,7 +1490,7 @@ def stream_partitioned_snapshot_sink(
         ).repartitionByRange(n_batches, "event_id").write.mode("overwrite").parquet(p),
     )
 
-    t = SnapshotTable(tempfile.mkdtemp(prefix="snappart_tbl_"))
+    t = SnapshotTable(session_dir(spark, "snappart_tbl_"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         partial = (
@@ -1534,7 +1511,7 @@ def stream_partitioned_snapshot_sink(
         .load(staged)
         .writeStream.foreachBatch(process_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="snappart_ckpt_"))
+        .option("checkpointLocation", session_dir(spark, "snappart_ckpt_"))
         .start()
     )
     q.awaitTermination()
@@ -1593,8 +1570,6 @@ def stream_partitioned_snapshot_sink(
 def stream_ivm_aggregates(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..sources.snapshots import SnapshotTable
@@ -1633,7 +1608,7 @@ def stream_ivm_aggregates(
         ).repartitionByRange(n_batches, "seq").write.mode("overwrite").parquet(p),
     )
 
-    t = SnapshotTable(tempfile.mkdtemp(prefix="ivmagg_tbl_"))
+    t = SnapshotTable(session_dir(spark, "ivmagg_tbl_"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         delta = batch_df.groupBy("event_type").agg(
@@ -1678,7 +1653,7 @@ def stream_ivm_aggregates(
         .load(staged)
         .writeStream.foreachBatch(process_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ivmagg_ckpt_"))
+        .option("checkpointLocation", session_dir(spark, "ivmagg_ckpt_"))
         .start()
     )
     q.awaitTermination()
@@ -1767,8 +1742,6 @@ def stream_ivm_aggregates(
 def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..sources.tables import load_table
@@ -1783,7 +1756,7 @@ def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).repartitionByRange(4, "event_id").write.mode("overwrite").parquet(p),
     )
 
-    state_path = os.path.join(tempfile.mkdtemp(prefix="kmv_state_"), "sketch.json")
+    state_path = os.path.join(session_dir(spark, "kmv_state_"), "sketch.json")
 
     def load_state() -> dict:
         try:
@@ -1825,7 +1798,7 @@ def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         stream.writeStream.foreachBatch(process_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="kmv_ckpt_"))
+        .option("checkpointLocation", session_dir(spark, "kmv_ckpt_"))
         .start()
     )
     q.awaitTermination()
@@ -1899,8 +1872,6 @@ def stream_hdr_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import math
     import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..sources.tables import load_table
@@ -1912,7 +1883,7 @@ def stream_hdr_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).repartitionByRange(4, "event_id").write.mode("overwrite").parquet(p),
     )
 
-    state_path = os.path.join(tempfile.mkdtemp(prefix="hdr_state_"), "sketch.json")
+    state_path = os.path.join(session_dir(spark, "hdr_state_"), "sketch.json")
 
     def load_state() -> dict:
         try:
@@ -1957,7 +1928,7 @@ def stream_hdr_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         stream.writeStream.foreachBatch(process_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hdr_ckpt_"))
+        .option("checkpointLocation", session_dir(spark, "hdr_ckpt_"))
         .start()
     )
     q.awaitTermination()

@@ -38,6 +38,7 @@ from ..functions.text import (
     tokens,
     word_shingles,
 )
+from ..session import session_dir
 from .core_relational import dsum
 from .registry import query
 
@@ -1210,8 +1211,6 @@ def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def incremental_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1242,7 +1241,7 @@ def incremental_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage the historical signature index exactly as a nightly job would:
     # written once, read back as the join side (at 100 TB this table is
     # partitioned by band_idx and appended to per day, never rebuilt)
-    index_dir = tempfile.mkdtemp(prefix="sig_index_")
+    index_dir = session_dir(spark, "sig_index_")
     bands.where(~F.col("is_new")).select("doc_id", "band_idx", "band_key").write.mode(
         "overwrite"
     ).parquet(index_dir)

@@ -34,6 +34,7 @@ from ..functions.maps import kv_string_to_map
 from ..operators.enrich import dim_join
 from ..operators.sessionize import pair_start_end
 from ..operators.setops import split_by_predicate
+from ..session import session_dir, session_fixture
 from ..sources.tables import load_table
 
 # event_type → run-log keyword (play-start / play-end / behavior / junk)
@@ -168,9 +169,6 @@ def terminal_of_device(col: F.Column) -> F.Column:
     )
 
 
-_RUNLOG_CACHE: dict[str, str] = {}
-
-
 def _runlog_path(spark: SparkSession, sf_dir: str) -> str:
     """Stage the synthetic run-log lines as a REAL text dataset once per
     (session, sf) and parse from disk — the reference's S1 input was raw
@@ -180,19 +178,16 @@ def _runlog_path(spark: SparkSession, sf_dir: str) -> str:
     get_json_object) into every downstream filter/extract consumer, which
     measured ~4x slower than parsing staged text on local[32]."""
     import os
-    import tempfile
 
-    from ..session import session_cache_key, session_scoped_path
-
-    cached = session_scoped_path(_RUNLOG_CACHE, spark, sf_dir)
-    if cached is None:
-        cached = os.path.join(tempfile.mkdtemp(prefix="homed_runlog_"), "runlog")
+    def build():
+        path = os.path.join(session_dir(spark, "homed_runlog_"), "runlog")
         events = load_table(spark, sf_dir, "events").repartition(
             spark.sparkContext.defaultParallelism
         )
-        build_raw_lines(events).select("line").write.mode("overwrite").text(cached)
-        _RUNLOG_CACHE[session_cache_key(spark, sf_dir)] = cached
-    return cached
+        build_raw_lines(events).select("line").write.mode("overwrite").text(path)
+        return path
+
+    return session_fixture(spark, sf_dir, "runlog", build)
 
 
 def build_video_play(spark: SparkSession, sf_dir: str) -> DataFrame:

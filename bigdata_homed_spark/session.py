@@ -16,14 +16,27 @@ parameter, not a constant, for exactly that reason.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # the directory holding this package: Python workers import the package
 # from it, whatever the working directory and PYTHONPATH
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# the session-fixture memo: one temp root per application, removed at
+# interpreter exit, and the values built under it, keyed on
+# (applicationId, sf_dir, tag)
+_roots: dict[str, str] = {}
+_fixtures: dict[tuple[str, str, str], object] = {}
 
 
 def get_spark(
@@ -87,23 +100,49 @@ def get_spark(
     return spark
 
 
-def session_scoped_path(cache: dict[str, str], spark: SparkSession, sf_dir: str):
-    """Session-lifetime cache lookup for derived temp datasets.
+def _app_root(app: str) -> str:
+    """The application's temp root, made on first use and again if removed.
 
-    Keys on ``applicationId`` (unique per JVM app lifetime) rather than
-    ``id(spark)``, which CPython can reuse after an old session object is
-    collected; a hit whose directory was removed externally is treated as a
-    miss instead of crashing the reader.  Returns the cached path or None;
-    the caller writes the dataset and records it with ``cache[key] = path``
-    using the key from :func:`session_cache_key`.
+    A removed root drops every fixture the application memoized, so the
+    next lookup rebuilds instead of handing back a path that is gone.
     """
-    key = session_cache_key(spark, sf_dir)
-    path = cache.get(key)
-    if path is not None and os.path.isdir(path):
-        return path
-    cache.pop(key, None)
-    return None
+    root = _roots.get(app)
+    if root is not None and os.path.isdir(root):
+        return root
+    if root is None:
+        root = os.path.join(
+            tempfile.gettempdir(), f"bigdata_homed_spark-{os.getpid()}-{app}"
+        )
+        _roots[app] = root
+        atexit.register(shutil.rmtree, root, True)
+    for key in [k for k in _fixtures if k[0] == app]:
+        del _fixtures[key]
+    os.makedirs(root, exist_ok=True)
+    return root
 
 
-def session_cache_key(spark: SparkSession, sf_dir: str) -> str:
-    return f"{spark.sparkContext.applicationId}:{sf_dir}"
+def session_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh directory under the application's temp root."""
+    return tempfile.mkdtemp(
+        prefix=prefix, dir=_app_root(spark.sparkContext.applicationId)
+    )
+
+
+def session_fixture(
+    spark: SparkSession, sf_dir: str, tag: str, build: Callable[[], T]
+) -> T:
+    """Build a derived dataset once per (application, sf_dir, tag).
+
+    The reference writes each derived table once and lets many jobs read
+    it; this memo is that pattern for one driver session.  It keys on
+    ``applicationId`` rather than ``id(spark)``, which CPython can reuse
+    after an old session object is collected.  ``build`` takes no
+    arguments; a fixture that writes files puts them under
+    :func:`session_dir`, so they go when the root goes.
+    """
+    app = spark.sparkContext.applicationId
+    _app_root(app)
+    key = (app, sf_dir, tag)
+    if key not in _fixtures:
+        _fixtures[key] = build()
+    return _fixtures[key]

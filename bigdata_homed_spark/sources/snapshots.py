@@ -359,13 +359,16 @@ class SnapshotTable:
         timestamps/dates/strings are rendered in Spark's cast-to-string
         form ('yyyy-MM-dd HH:mm:ss'), so lexicographic order matches
         native order and existing callers' literals keep working.
+        Decimal columns get no zone map: their string form does not sort
+        in numeric order ("10.50" < "9.40"), and pyarrow cannot read the
+        stats of a decimal stored as INT32/INT64.  Such files take the
+        same "footer can't vouch" path as a column without statistics.
 
         Recording row/byte counts in manifest entries is what lets
         :meth:`files_table` be a pure manifest read — Iceberg manifests
         carry exactly these so a 100 TB maintenance planner never opens
         O(files) footers."""
         import datetime
-        import decimal
 
         import pyarrow.parquet as pq
 
@@ -377,8 +380,6 @@ class SnapshotTable:
                 return s if v.microsecond == 0 else s + f".{v.microsecond:06d}"
             if isinstance(v, (datetime.date,)):
                 return v.isoformat()
-            if isinstance(v, decimal.Decimal):
-                return str(v)
             return v  # int/float/str: JSON-native
 
         for e in entries:
@@ -390,6 +391,8 @@ class SnapshotTable:
             for c in stats_cols:
                 if c not in idx:
                     continue  # partition column: lives in the path, not the file
+                if md.schema.column(idx[c]).logical_type.type == "DECIMAL":
+                    continue  # no order-preserving rendering -> no zone map
                 lo = hi = None
                 ok = True
                 for rg in range(md.num_row_groups):

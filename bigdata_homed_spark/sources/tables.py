@@ -14,6 +14,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..session import session_fixture
 
 TABLES = (
     "region",
@@ -30,6 +33,7 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+
 # Session-scoped catalog of LAZY scan frames, the Hive-metastore/manifest
 # analog (guide §6: catalogs exist so scans don't re-list and re-infer
 # schemas).  `spark.read.parquet` runs a driver-side file listing + footer
@@ -38,14 +42,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # memo stores the unexecuted DataFrame (a logical plan + resolved schema):
 # every action still scans the parquet files; no rows, results or cached
 # blocks are held, so repeat invocations stay honest recomputations.
-# Keyed on applicationId (the session_scoped_path convention): a new
+# Held in the `session_fixture` memo, keyed on applicationId: a new
 # driver session re-infers from scratch.  The catalog dirs are immutable
 # within a session (testdata is read-only; derived SF dirs are written
 # once before first read), which is what makes the memoized file listing
 # safe.
-_SCAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one catalog table (SURVEY S2/S8 analog).
 
@@ -63,25 +64,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # downstream queries use (oracles assume UTC) — re-asserted per
         # call even on a catalog hit, preserving the pre-memo contract
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _SCAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        from pyspark.sql import functions as F
 
+    def scan():
+        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        if name != "events":
+            return df
         # ts_sec is pure NTZ wall-clock arithmetic — NO session-timezone
         # dependence, so a caller resetting the tz after load_table but
         # before an action cannot shift it (the lazy NTZ→TIMESTAMP→LONG
         # cast chain it replaces was tz-sensitive at ACTION time, not
         # load time)
-        df = df.withColumn(
+        return df.withColumn(
             "ts_sec",
             F.expr("timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"),
         )
-    _SCAN_CACHE[key] = df
-    return df
+
+    return session_fixture(spark, sf_dir, f"scan:{name}", scan)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

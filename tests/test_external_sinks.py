@@ -5,7 +5,6 @@ HTTP topN push with retries, and the monitor report file."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -69,8 +68,8 @@ def test_pack_unpack_columns(spark):
 # ---------------------------------------------------------- S12 publish
 
 
-def test_publish_pipelined_flushes_and_expire(spark):
-    root = tempfile.mkdtemp(prefix="pubtest_")
+def test_publish_pipelined_flushes_and_expire(spark, tmp_path):
+    root = str(tmp_path)
     n = 300  # > pipeline_size=128 → multiple flushes within one partition
     df = spark.createDataFrame(
         [(f"k{i:04d}", bytes([i % 250])) for i in range(n)],
@@ -150,7 +149,7 @@ def test_push_topn_json_default_poster_is_documented_stub(spark):
 # ----------------------------------------------------- S15 report file
 
 
-def test_write_report_file_atomic_and_deterministic(spark, sf_dir):
+def test_write_report_file_atomic_and_deterministic(spark, sf_dir, tmp_path):
     from bigdata_homed_spark.sources.tables import load_table
 
     sec = (
@@ -159,7 +158,7 @@ def test_write_report_file_atomic_and_deterministic(spark, sf_dir):
         .orderBy("r_regionkey")
     )
     body = render_section(sec)
-    path = os.path.join(tempfile.mkdtemp(prefix="monitor_"), "monitor.log")
+    path = str(tmp_path / "monitor.log")
     content = write_report_file(path, [("regions", body), ("empty", "-")])
     with open(path, encoding="utf-8") as f:
         assert f.read() == content

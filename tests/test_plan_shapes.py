@@ -142,8 +142,8 @@ def test_interval_join_is_not_nested_loop(spark, sf_dir):
     assert "Join" in plan
 
 
-def test_partition_pruning_on_fact(spark, sf_dir):
-    path = os.path.join(tempfile.mkdtemp(prefix="prune_"), "fact")
+def test_partition_pruning_on_fact(spark, sf_dir, tmp_path):
+    path = str(tmp_path / "fact")
     ev = load_table(spark, sf_dir, "events").withColumn(
         "day", F.date_format(F.timestamp_seconds(F.col("ts_sec")), "yyyyMMdd")
     )

@@ -140,3 +140,67 @@ def test_python_workers_import_package_from_any_cwd(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert out.stdout.split()[-1] == "bigdata_homed_spark"
+
+
+def test_session_fixture_memo_hits_keys_and_rebuilds(spark):
+    """One build per (application, sf_dir, tag); a removed temp root makes
+    the next lookup rebuild instead of returning a path that is gone."""
+    import shutil
+
+    from bigdata_homed_spark.session import session_dir, session_fixture
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return session_dir(spark, "memo_test_")
+
+    first = session_fixture(spark, "memo-sf", "memo", build)
+    assert session_fixture(spark, "memo-sf", "memo", build) == first
+    assert len(builds) == 1
+    other_sf = session_fixture(spark, "memo-sf-2", "memo", build)
+    other_tag = session_fixture(spark, "memo-sf", "memo-2", build)
+    assert len({first, other_sf, other_tag}) == 3 and len(builds) == 3
+
+    root = os.path.dirname(first)
+    assert os.path.dirname(other_sf) == root and os.path.isdir(first)
+    shutil.rmtree(root)
+    rebuilt = session_fixture(spark, "memo-sf", "memo", build)
+    assert len(builds) == 4
+    assert rebuilt != first and os.path.isdir(rebuilt)
+
+
+def test_package_temp_dirs_removed_at_exit(tmp_path, sf_dir):
+    """Fixture directories (the day-partitioned fact) and per-call ones (a
+    stream's table and checkpoint) all live under the application's temp
+    root, which is removed when the interpreter exits: the process leaves
+    nothing in TMPDIR."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    script = tmp_path / "temp_cleanup.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+            sys.path.insert(0, {root!r})
+            from bigdata_homed_spark.plans import QUERIES
+            from bigdata_homed_spark.session import get_spark
+
+            spark = get_spark("temp_cleanup", master="local[1]")
+            for name in ("partitioned_fact_roundtrip", "stream_mor_upsert"):
+                assert QUERIES[name](spark, {sf_dir!r}).count() > 0
+            """
+        )
+    )
+    env = dict(os.environ, TMPDIR=str(tmpdir), SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert os.listdir(tmpdir) == []

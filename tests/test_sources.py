@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from bigdata_homed_spark.sources.jdbc import (
     jdbc_partitioned_options,
     jdbc_subquery_options,
@@ -3496,3 +3498,47 @@ def test_snapshot_merge_nan_keyed_rows_replaced_not_duplicated(spark, tmp_path):
     assert nan_rows[0].v == 999
     vals = {r.v for r in rows}
     assert vals == {10, 20, 999, 70}
+
+
+@pytest.mark.parametrize("dtype", ["decimal(10,2)", "decimal(27,6)"])
+@pytest.mark.parametrize("verb", ["commit_merge", "commit_merge_on_read"])
+def test_snapshot_decimal_key_merge_and_pruned_read(spark, tmp_path, dtype, verb):
+    """Decimal keys merge and prune like the unpruned reference.
+
+    Decimal footer stats used to be rendered as strings and compared
+    lexicographically ("10.50" < "9.40"), so a file spanning [9.50, 10.50]
+    was skipped by a [9.40, 9.60] probe and a merge appended a second 9.50
+    row; precision <= 18 decimals (stored as INT64) failed the footer read
+    outright.  A decimal column records no zone map, so every file is
+    kept: the merge must equal a dict-model upsert and the pruned read
+    the unpruned filter."""
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "k string, v bigint").select(
+            F.col("k").cast(dtype).alias("k"), "v"
+        )
+
+    t = SnapshotTable(str(tmp_path / "snap_dec"))
+    model = {}
+    for rows in ([("1.00", 1), ("2.00", 2)], [("9.50", 3), ("10.50", 4)],
+                 [("20.00", 5), ("30.00", 6)]):
+        t.commit_append(frame(rows), n_files=1, stats_cols=["k"])
+        model.update({Decimal(k): v for k, v in rows})
+    upd = [("9.50", 30), ("2.00", 20), ("40.00", 7)]
+    v = getattr(t, verb)(frame(upd), key="k", n_new_files=1, stats_cols=["k"])
+    model.update({Decimal(k): v for k, v in upd})
+
+    rows = t.read(spark, v).collect()
+    assert len(rows) == len(model), f"duplicate or lost key: {rows}"
+    assert {r.k: r.v for r in rows} == model
+
+    lo, hi = Decimal("9.40"), Decimal("9.60")
+    probe = F.col("k").between(F.lit(lo).cast(dtype), F.lit(hi).cast(dtype))
+    pruned = t.read_pruned(spark, col="k", lo=lo, hi=hi, version=v).where(probe)
+    full = t.read(spark, v).where(probe)
+    assert sorted(pruned.collect()) == sorted(full.collect()) == [(Decimal("9.50"), 30)]

@@ -243,113 +243,6 @@ def test_online_user_state_totals(spark, sf_dir):
     assert s == b
 
 
-def test_transform_with_state_v2(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas spelling of the keyed-state job.
-
-    The SUPPORTED keyed-state contract is the v1 ``applyInPandasWithState``
-    path (streaming/jobs.py::online_user_state — oracle-shaped and driver-
-    verified); v2 is the forward-compatible spelling whose control channel
-    needs python-protobuf ≥ the gencode version (6.33 here).  This
-    container ships no protobuf and installs are disallowed (the
-    google-cloud-sdk vendored copy is 4.23 — too old for the 6.33
-    gencode), so when the probe reports unavailable this test PASSES by
-    asserting the probe tells the truth (google.protobuf really is
-    unimportable) — the execution branch runs as-is on a cluster image."""
-    from bigdata_homed_spark.streaming.stateful_v2 import (
-        online_user_state_v2,
-        transform_with_state_available,
-    )
-
-    if not transform_with_state_available():
-        try:
-            import google.protobuf  # noqa: F401
-
-            raise AssertionError("probe said unavailable but import works")
-        except ImportError:
-            return
-
-    from pyspark.sql import functions as F
-
-    from bigdata_homed_spark.streaming.jobs import (
-        read_events_stream,
-        run_stream_to_memory,
-    )
-
-    events = read_events_stream(spark, sf_dir)
-    out = run_stream_to_memory(online_user_state_v2(events), output_mode="update")
-    batch = (
-        events.sparkSession.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    # final snapshot per user must match the batch totals
-    final = out.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
-    joined = final.join(batch, "user_id")
-    assert joined.where(F.col("n_events") != F.col("n")).count() == 0
-
-
-def test_stateful_v2_processor_logic():
-    """The v2 fold/TTL logic tested WITHOUT the protobuf control channel
-    (container impossibility note in streaming/stateful_v2.py): drive the
-    StatefulProcessor directly against a fake handle + state.  Covers the
-    fold semantics (micro-unit determinism, cross-call accumulation) and
-    the TTL wiring (ttlDurationMs passed through to getValueState — the
-    Phoenix-TTL retention parity of UserStatusByRunLog.scala:102-318)."""
-    import pandas as pd
-
-    from bigdata_homed_spark.streaming.stateful_v2 import STATE_SCHEMA, UserCounter
-
-    class FakeState:
-        def __init__(self):
-            self.value = None
-
-        def exists(self):
-            return self.value is not None
-
-        def get(self):
-            return self.value
-
-        def update(self, v):
-            self.value = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.calls = []
-            self.state = FakeState()
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            self.calls.append((name, schema, ttlDurationMs))
-            return self.state
-
-    # TTL wiring: ttl_sec*1000 must reach getValueState
-    proc = UserCounter(ttl_ms=7200 * 1000)
-    handle = FakeHandle()
-    proc.init(handle)
-    assert handle.calls == [("agg", STATE_SCHEMA, 7200 * 1000)]
-
-    # fold: two micro-batches accumulate; totals are exact micro-units
-    out1 = list(
-        proc.handleInputRows(
-            (7,), iter([pd.DataFrame({"value": [1.25, 2.5]})]), None
-        )
-    )[0]
-    assert out1["n_events"][0] == 2
-    assert out1["total_value"][0] == 3.75
-    out2 = list(
-        proc.handleInputRows((7,), iter([pd.DataFrame({"value": [0.25]})]), None)
-    )[0]
-    assert out2["n_events"][0] == 3
-    assert out2["total_value"][0] == 4.0
-    # state holds integer units — order/batch independent by construction
-    assert handle.state.value == (3, 4_000_000)
-
-    # no-TTL default: None passed through (keep-forever contract)
-    proc2 = UserCounter()
-    handle2 = FakeHandle()
-    proc2.init(handle2)
-    assert handle2.calls[0][2] is None
-
-
 def test_incremental_dedup_batch_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: re-running the SAME (batch_df,
     batch_id) must leave the fingerprint index byte-identical (no

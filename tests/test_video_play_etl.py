@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -67,9 +66,9 @@ def test_build_video_play_sessions_positive(spark, sf_dir):
     assert all(r.end_ts >= r.start_ts for r in rows)
 
 
-def test_dynamic_partition_overwrite(spark):
+def test_dynamic_partition_overwrite(spark, tmp_path):
     """S7 semantics: overwriting one day must not clobber other days."""
-    base = os.path.join(tempfile.mkdtemp(prefix="dynpart_"), "t")
+    base = str(tmp_path / "t")
     df1 = spark.createDataFrame([("d1", 1), ("d2", 2)], ["day", "v"])
     write_partitioned_fact(df1, base, ["day"])
     df2 = spark.createDataFrame([("d2", 99)], ["day", "v"])

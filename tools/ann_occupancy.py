@@ -8,7 +8,7 @@ planes = max(6, ceil(log2(n/32))), candidate pairs grow ~linearly in n,
 never quadratically.
 
 Usage: python tools/ann_occupancy.py [sf_dir ...]
-       (default: /root/testdata/sf0.1 /root/repo/.localdata/sf1)
+       (default: the catalog default SF and .localdata/sf1 in the checkout)
 """
 
 from __future__ import annotations
@@ -16,7 +16,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -26,9 +27,9 @@ from bigdata_homed_spark.plans.similarity import (
     _table_bucket_col,
 )
 from bigdata_homed_spark.session import get_spark
-from bigdata_homed_spark.sources.tables import load_table
+from bigdata_homed_spark.sources.tables import DEFAULT_SF_DIR, load_table
 
-DIRS = sys.argv[1:] or ["/root/testdata/sf0.1", "/root/repo/.localdata/sf1"]
+DIRS = sys.argv[1:] or [DEFAULT_SF_DIR, os.path.join(REPO, ".localdata", "sf1")]
 
 
 def main() -> None:

@@ -17,7 +17,7 @@ exactly the scale pressure we want to measure):
   see a degenerate 90% exact-dup corpus).
 - embeddings: copy i shifts vec_id; labels unchanged (10× vectors/label).
 
-Output: /root/repo/.localdata/sf1/*.parquet (gitignored).
+Output: .localdata/sf1/*.parquet in the checkout (gitignored).
 Usage: python tools/gen_scale.py [n_copies=10] [dst_dir=.localdata/sf1]
 """
 
@@ -30,8 +30,10 @@ import duckdb
 
 SRC = "/root/testdata/sf0.1"
 # default output; pass a second arg to derive bigger points (e.g.
-# `gen_scale.py 30 /root/repo/.localdata/sf3` for the 30-copy decade)
-DST = "/root/repo/.localdata/sf1"
+# `gen_scale.py 30 .localdata/sf3` for the 30-copy decade)
+DST = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".localdata", "sf1"
+)
 DIMS = ("region", "nation", "customer", "supplier", "part")
 
 

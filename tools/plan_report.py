@@ -12,9 +12,10 @@ Usage: python tools/plan_report.py > SCALING.md
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata_homed_spark.plans import QUERIES
 from bigdata_homed_spark.session import get_spark

@@ -16,7 +16,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata_homed_spark.plans import QUERIES
 from bigdata_homed_spark.session import get_spark

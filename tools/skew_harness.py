@@ -43,15 +43,16 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
 from bigdata_homed_spark.plans.registry import QUERIES
 from bigdata_homed_spark.session import get_spark
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.localdata/sf1"
-WORK = "/root/repo/.localdata/skew_harness"
+SF_DIR = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".localdata", "sf1")
+WORK = os.path.join(REPO, ".localdata", "skew_harness")
 TABLES = (
     "region nation customer supplier part orders lineitem documents embeddings"
 ).split()

@@ -8,11 +8,12 @@ Usage: python tools/stream_phase_profile.py SF_DIR query [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bigdata_homed_spark.plans import QUERIES
 from bigdata_homed_spark.session import get_spark
