@@ -26,7 +26,12 @@ object stores).  Each entry can carry two tiers of skipping metadata:
 - ``"partitions"``: Hive partition values (``commit_* (partition_by=...)``)
   — partition pruning drops entries before any file is touched;
 - ``"stats"``: per-file min/max zone maps lifted from the parquet FOOTERS
-  at commit time (metadata reads, never a second data pass).
+  at commit time (metadata reads, never a second data pass).  One
+  ordering, ``_stat_key``, folds and compares every zone-map value: numbers
+  numerically with NaN greatest (Spark's order), decimals as numbers
+  rounded outward, dates/timestamps/strings by their native-order string
+  form.  ``timestamp`` columns (parquet INT96) have no footer stats and so
+  no zone map; ``timestamp_ntz`` columns have one.
 
 **Merge-on-read deletion vectors** (Iceberg v2 positional deletes / Delta
 deletion vectors): ``commit_delete`` and ``commit_merge_on_read`` never
@@ -42,12 +47,69 @@ file set.  Positions are stable because data files are immutable.
 from __future__ import annotations
 
 import contextlib
+import datetime
 import json
 import math
 import os
+import shutil
 import uuid
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _stat_key(v):
+    """Sort key of a zone-map value or a pruning bound — the ONE ordering
+    every stat fold and every pruning comparison uses.  Numbers (int,
+    float, Decimal) compare numerically with NaN greatest, above +inf, as
+    Spark orders them (a join matches NaN = NaN, so a NaN key must widen a
+    range, never vanish from it); dates, timestamps and strings compare by
+    their ``str()`` form, which is how they are stored and sorts in
+    native order."""
+    if isinstance(v, (int, float, Decimal)) and not isinstance(v, bool):
+        return (1, 0) if isinstance(v, float) and math.isnan(v) else (0, v)
+    return (0, str(v))
+
+
+def _footer_zone_map(md, i: int, scale: int | None):
+    """[min, max] of column ``i`` over every row group of a parquet footer
+    under ``_stat_key``, or None when some row group carries no min/max
+    (the footer can't vouch: all-null chunks, INT96 timestamps) or no row
+    group exists (an empty file).  A decimal column (``scale`` given)
+    comes back as exact ``Decimal``s: one stored as INT32/INT64 is read
+    from its unscaled raw stats (pyarrow cannot convert those), a
+    FIXED_LEN_BYTE_ARRAY one converts directly.  Byte strings decode, so
+    they order as the strings they hold."""
+    lo = hi = None
+    for rg in range(md.num_row_groups):
+        st = md.row_group(rg).column(i).statistics
+        if st is None or not st.has_min_max:
+            return None
+        if scale is not None and st.physical_type != "FIXED_LEN_BYTE_ARRAY":
+            mn, mx = (Decimal(r).scaleb(-scale) for r in (st.min_raw, st.max_raw))
+        else:
+            mn, mx = (
+                v.decode("utf-8", "replace") if isinstance(v, bytes) else v
+                for v in (st.min, st.max)
+            )
+        lo = mn if lo is None else min(lo, mn, key=_stat_key)
+        hi = mx if hi is None else max(hi, mx, key=_stat_key)
+    return None if lo is None else (lo, hi)
+
+
+def _render_stat(v, toward: float):
+    """A folded stat as a JSON-native zone-map value.  A decimal becomes
+    the nearest float, stepped one ulp ``toward`` -inf (a min) or +inf (a
+    max) when rounding moved it inward — a zone map only has to be a
+    superset, and a tightened bound would skip a probe sitting exactly on
+    it.  Dates and timestamps become their ``str()`` form."""
+    if isinstance(v, Decimal):
+        f = float(v)
+        inward = f > v if toward < 0 else f < v
+        return math.nextafter(f, toward) if inward else f
+    if isinstance(v, datetime.date):
+        return str(v)
+    return v
 
 
 def _unescape_path_name(s: str) -> str:
@@ -232,13 +294,13 @@ class SnapshotTable:
         never lists or opens non-matching partitions.  ``n_files`` then
         means files PER partition value (usually 1).
         """
-        stage = os.path.join(self.path, f"_stage_{uuid.uuid4().hex}")
         if partition_by:
             from pyspark.sql import functions as F
 
             # one task per partition value -> n_files files per partition
-            (df.repartition(n_files, *[F.col(c) for c in partition_by])
-               .write.mode("overwrite").partitionBy(*partition_by).parquet(stage))
+            writer = df.repartition(
+                n_files, *[F.col(c) for c in partition_by]
+            ).write.partitionBy(*partition_by)
         elif cluster_by:
             # OPTIMIZE-style clustering: range-partition + sort so each
             # file owns a disjoint slice of the cluster key — this is what
@@ -253,14 +315,11 @@ class SnapshotTable:
             # about to read anyway, and the boundaries are a pure function
             # of the data.
             clustered = self._cluster_exact(df, n_files, cluster_by)
+            writer = clustered.write
             if "__cbucket" in clustered.columns:
                 # one file per bucket via partitionBy (the bucket dirs are
-                # stripped below — __cbucket is layout-only, not schema)
-                clustered.write.mode("overwrite").partitionBy(
-                    "__cbucket"
-                ).parquet(stage)
-            else:
-                clustered.write.mode("overwrite").parquet(stage)
+                # stripped on landing — __cbucket is layout-only, not schema)
+                writer = writer.partitionBy("__cbucket")
         elif narrow and n_files == 1:
             # file-bounded rewrite (one hit file / one OPTIMIZE bin): the
             # input is a narrow scan of the very files being replaced, so
@@ -270,16 +329,34 @@ class SnapshotTable:
             # parallelism at scale lives ACROSS files in the maintenance
             # pool, not within one file's rewrite (how Iceberg/Delta
             # schedule CoW rewrites: one file group per task).
-            df.coalesce(1).write.mode("overwrite").parquet(stage)
+            writer = df.coalesce(1).write
         else:
-            df.repartition(n_files).write.mode("overwrite").parquet(stage)
+            writer = df.repartition(n_files).write
+        entries = self._land(writer, self.data_dir, partition_by)
+        if entries:
+            # always attach n_rows/bytes (one footer read per file the
+            # commit just wrote — what Iceberg/Delta writers record in
+            # manifests so downstream planners never re-open footers)
+            self._attach_footer_stats(entries, stats_cols or [])
+        return entries
+
+    def _land(
+        self, writer, dest: str, partition_by: list[str] | None = None
+    ) -> list[dict]:
+        """Write ``writer`` into a fresh staging dir, move each parquet file
+        it produced under ``dest`` with a uuid name, and remove the staging
+        dir — a crash mid-write can never be confused with committed
+        files.  Returns one ``{"path"}`` entry per file; the ``col=value``
+        directories of ``partition_by`` columns are kept below ``dest`` and
+        recorded as the entry's ``"partitions"`` (any other directory
+        level, e.g. clustering buckets, is layout-only and flattened)."""
+        stage = os.path.join(self.path, f"_stage_{uuid.uuid4().hex}")
+        writer.mode("overwrite").parquet(stage)
         entries = []
         for root, _dirs, names in os.walk(stage):
             rel = os.path.relpath(root, stage)
             parts: dict[str, str] = {}
             if rel != "." and partition_by:
-                # only user-requested partition values are recorded; the
-                # clustering bucket dirs (__cbucket=N) are layout-only
                 for seg in rel.split(os.sep):
                     if "=" in seg:
                         k, _, v = seg.partition("=")
@@ -289,7 +366,7 @@ class SnapshotTable:
             for name in sorted(names):
                 if not name.endswith(".parquet"):
                     continue
-                sub = os.path.join(self.data_dir, rel) if parts else self.data_dir
+                sub = os.path.join(dest, rel) if parts else dest
                 os.makedirs(sub, exist_ok=True)
                 final = os.path.join(sub, f"{uuid.uuid4().hex}.parquet")
                 os.replace(os.path.join(root, name), final)
@@ -297,15 +374,7 @@ class SnapshotTable:
                 if parts:
                     entry["partitions"] = parts
                 entries.append(entry)
-        for root, dirs, names in os.walk(stage, topdown=False):
-            for name in names:
-                os.remove(os.path.join(root, name))
-            os.rmdir(root)
-        if entries:
-            # always attach n_rows/bytes (one footer read per file the
-            # commit just wrote — what Iceberg/Delta writers record in
-            # manifests so downstream planners never re-open footers)
-            self._attach_footer_stats(entries, stats_cols or [])
+        shutil.rmtree(stage)
         return entries
 
     @staticmethod
@@ -354,36 +423,25 @@ class SnapshotTable:
         OPTIMIZE bin-packing and DESCRIBE DETAIL report; row-group
         ``total_byte_size`` would be the uncompressed size and skew bin
         decisions by compression ratio).  ``stats_cols`` additionally
-        attaches min/max zone maps.  Values are JSON-native where possible
-        (int/float stay numeric so pruning can compare numerically);
-        timestamps/dates/strings are rendered in Spark's cast-to-string
-        form ('yyyy-MM-dd HH:mm:ss'), so lexicographic order matches
-        native order and existing callers' literals keep working.
-        Decimal columns get no zone map: their string form does not sort
-        in numeric order ("10.50" < "9.40"), and pyarrow cannot read the
-        stats of a decimal stored as INT32/INT64.  Such files take the
-        same "footer can't vouch" path as a column without statistics.
+        attaches min/max zone maps, folded across row groups under
+        ``_stat_key`` (see ``_footer_zone_map``) and stored JSON-native
+        (``_render_stat``): ints and floats stay numbers (NaN included),
+        decimals become outward-rounded floats, and timestamps/dates/
+        strings are rendered in Spark's cast-to-string form ('yyyy-MM-dd
+        HH:mm:ss'), so string order is native order and existing callers'
+        literals keep working.  A column whose footer can't vouch gets no
+        zone map, and files without one are never pruned.
 
         Recording row/byte counts in manifest entries is what lets
         :meth:`files_table` be a pure manifest read — Iceberg manifests
         carry exactly these so a 100 TB maintenance planner never opens
         O(files) footers."""
-        import datetime
-
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        def render(v):
-            if isinstance(v, bytes):
-                return v.decode("utf-8", "replace")
-            if isinstance(v, datetime.datetime):
-                s = v.strftime("%Y-%m-%d %H:%M:%S")
-                return s if v.microsecond == 0 else s + f".{v.microsecond:06d}"
-            if isinstance(v, (datetime.date,)):
-                return v.isoformat()
-            return v  # int/float/str: JSON-native
-
         for e in entries:
-            md = pq.ParquetFile(e["path"]).metadata
+            pf = pq.ParquetFile(e["path"])
+            md, arrow = pf.metadata, pf.schema_arrow
             e["n_rows"] = md.num_rows
             e["bytes"] = os.path.getsize(e["path"])
             idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
@@ -391,19 +449,15 @@ class SnapshotTable:
             for c in stats_cols:
                 if c not in idx:
                     continue  # partition column: lives in the path, not the file
-                if md.schema.column(idx[c]).logical_type.type == "DECIMAL":
-                    continue  # no order-preserving rendering -> no zone map
-                lo = hi = None
-                ok = True
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx[c]).statistics
-                    if st is None or not st.has_min_max:
-                        ok = False  # footer can't vouch -> no zone map (safe)
-                        break
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-                if ok and lo is not None:
-                    stats[c] = {"min": render(lo), "max": render(hi)}
+                t = arrow.field(c).type
+                zm = _footer_zone_map(
+                    md, idx[c], t.scale if pa.types.is_decimal(t) else None
+                )
+                if zm is not None:
+                    stats[c] = {
+                        "min": _render_stat(zm[0], -math.inf),
+                        "max": _render_stat(zm[1], math.inf),
+                    }
             if stats:
                 e["stats"] = stats
 
@@ -783,6 +837,12 @@ class SnapshotTable:
         )
 
     @staticmethod
+    def _physical_names(mapping: dict[str, str], cols) -> list[str]:
+        """Logical column names -> the physical names zone maps are keyed
+        by (footers of immutable files), deduplicated in order."""
+        return list(dict.fromkeys(mapping.get(c, c) for c in cols or []))
+
+    @staticmethod
     def _to_logical(df: DataFrame, mapping: dict[str, str], keep: tuple = ()) -> DataFrame:
         """Map a PHYSICAL scan to the logical schema: mapped columns
         alias to their logical names in mapping order, dropped physical
@@ -944,8 +1004,7 @@ class SnapshotTable:
         mapping = self.column_map()
         ext = self._extended_map(df.columns, mapping)
         df = self._to_physical(df, mapping)
-        if stats_cols and mapping:
-            stats_cols = [mapping.get(c, c) for c in stats_cols]
+        stats_cols = self._physical_names(mapping, stats_cols)
         versions = self.versions()
         parent = self._manifest(versions[-1]) if versions else {}
         prev = list(parent.get("files", []))
@@ -1132,14 +1191,9 @@ class SnapshotTable:
             version = self.version_at(as_of)
         v = version if version is not None else self._head()
         m = self._manifest(v)
-        entries = m["files"]
-        if not entries:
+        if not m["files"]:
             raise ValueError(f"snapshot table {self.path} has no commits")
-        out = self._read_entries(
-            spark, entries, merge_schema, m.get("delete_files"),
-            m.get("partition_types"),
-        )
-        return self._to_logical(out, m.get("column_map", {}))
+        return self._read_entries(spark, m, merge_schema=merge_schema)
 
     @staticmethod
     def _group_key(e: dict) -> tuple:
@@ -1219,129 +1273,87 @@ class SnapshotTable:
     def _read_entries(
         self,
         spark: SparkSession,
-        entries: list[dict],
+        m: dict,
+        entries: list[dict] | None = None,
         merge_schema: bool = False,
-        delete_files: list[str] | None = None,
-        partition_types: dict[str, str] | None = None,
+        with_pos: bool = False,
     ) -> DataFrame:
-        """Scan an entry list.  Entries are grouped by their partition-key
-        tuple (one group per layout generation under partition evolution);
-        each group scans with its own discovery mode (basePath recovers
-        path-encoded columns for Hive-layout files; flat files carry every
-        column in-file) and the groups union BY NAME — the logical schema
-        is layout-invariant, only the physical encoding of the partition
-        column moves between path and file.  Single-layout tables take the
-        single-group fast path, byte-identical to the pre-evolution reader.
-        DV tagging happens per scan (``_metadata`` is scan-scoped) and the
-        anti-join runs once over the union."""
+        """Scan ``entries`` (default: all of ``m["files"]``) of manifest
+        ``m`` as LOGICAL rows, its deletion vectors subtracted.  Entries are
+        grouped by their partition-key tuple (one group per layout
+        generation under partition evolution); each group scans with its
+        own discovery mode (basePath recovers path-encoded columns for
+        Hive-layout files; flat files carry every column in-file) and the
+        groups union BY NAME — the logical schema is layout-invariant, only
+        the physical encoding of the partition column moves between path
+        and file.  Single-layout tables take the single-group fast path.
+        Row positions are tagged per scan (``_metadata`` is scan-scoped)
+        and the DV anti-join runs once over the union.
+
+        ``with_pos=True`` keeps the ``__file``/``__pos`` columns — the
+        input every merge-on-read verb derives its new DV from (already-
+        dead positions are subtracted first so they are never re-recorded;
+        a DV anti-join over an entry subset is safe) — and unions missing
+        columns as nulls: a schema-evolved generation may carry columns an
+        older one lacks, and a merge condition on the new column is then
+        null=false on old rows, which is the correct DV semantics."""
         from collections import defaultdict
 
-        from pyspark.sql import functions as F
-
+        dvs = m.get("delete_files")
         groups: dict[tuple, list[dict]] = defaultdict(list)
-        for e in entries:
+        for e in m["files"] if entries is None else entries:
             groups[self._group_key(e)].append(e)
         dfs = []
         for keys, root in sorted(groups):
             df = self._scan_group(
                 spark, groups[(keys, root)], keys, root, merge_schema,
-                partition_types,
+                m.get("partition_types"),
             )
-            if delete_files:
-                df = df.withColumns(
-                    {
-                        "__dv_file": F.col("_metadata.file_path"),
-                        "__dv_pos": F.col("_metadata.row_index"),
-                    }
-                )
-            dfs.append(df)
+            dfs.append(self._with_pos(df) if dvs or with_pos else df)
         out = dfs[0]
         for df in dfs[1:]:
-            out = out.unionByName(df, allowMissingColumns=merge_schema)
-        if delete_files:
-            dv = spark.read.parquet(*delete_files).select(
-                F.col("__file").alias("__dv_file"), F.col("__pos").alias("__dv_pos")
-            )
-            out = out.join(
-                F.broadcast(dv), ["__dv_file", "__dv_pos"], "left_anti"
-            ).drop("__dv_file", "__dv_pos")
-        return out
+            out = out.unionByName(df, allowMissingColumns=merge_schema or with_pos)
+        if dvs:
+            out = self._drop_dead(out, spark.read.parquet(*dvs))
+            if not with_pos:
+                out = out.drop("__file", "__pos")
+        return self._to_logical(
+            out, m.get("column_map", {}), keep=("__file", "__pos")
+        )
 
-    def _scan_with_pos(
-        self,
-        spark: SparkSession,
-        manifest: dict,
-        entries: list[dict] | None = None,
-    ) -> DataFrame:
-        """The head's LIVE rows with ``__file``/``__pos`` columns attached —
-        the input every merge-on-read verb derives its new DV from.
-        Already-dead positions are subtracted first so they are never
-        re-recorded.  ``entries`` restricts the scan (zone-map routing);
-        the manifest's DVs still apply (anti-join over a subset is safe)."""
-        from collections import defaultdict
-
+    @staticmethod
+    def _with_pos(df: DataFrame) -> DataFrame:
+        """Tag a parquet scan's rows with their file and row position —
+        the coordinates a deletion vector records."""
         from pyspark.sql import functions as F
 
-        if entries is None:
-            entries = manifest["files"]
-        # same layout grouping as _read_entries: a mixed-layout scan under
-        # one basePath silently drops the flat group's rows, so each
-        # partition-key generation scans with its own discovery mode
-        groups: dict[tuple, list[dict]] = defaultdict(list)
-        for e in entries:
-            groups[self._group_key(e)].append(e)
-        dfs = []
-        for keys, root in sorted(groups):
-            dfs.append(
-                self._scan_group(
-                    spark, groups[(keys, root)], keys, root, False,
-                    manifest.get("partition_types"),
-                ).withColumns(
-                    {
-                        "__file": F.col("_metadata.file_path"),
-                        "__pos": F.col("_metadata.row_index"),
-                    }
-                )
-            )
-        df = dfs[0]
-        for d in dfs[1:]:
-            # allowMissingColumns: a schema-evolved generation may carry
-            # columns an older one lacks — null-fill (parquet's additive
-            # contract); a merge condition on the new column is then
-            # null=false on old rows, which is the correct DV semantics
-            df = df.unionByName(d, allowMissingColumns=True)
-        old = manifest.get("delete_files")
-        if old:
-            dv = spark.read.parquet(*old).select(
-                F.col("__file"), F.col("__pos")
-            )
-            df = df.join(F.broadcast(dv), ["__file", "__pos"], "left_anti")
-        # surface LOGICAL names so every MoR verb's conditions/keys speak
-        # the user schema; the scan helpers ride along untouched
-        return self._to_logical(
-            df, manifest.get("column_map", {}), keep=("__file", "__pos")
+        return df.withColumns(
+            {
+                "__file": F.col("_metadata.file_path"),
+                "__pos": F.col("_metadata.row_index"),
+            }
         )
+
+    @staticmethod
+    def _drop_dead(df: DataFrame, dv_df: DataFrame) -> DataFrame:
+        """Subtract deletion-vector positions from a ``_with_pos`` frame:
+        a broadcast anti-join, as DVs are O(dead rows)."""
+        from pyspark.sql import functions as F
+
+        dead = F.broadcast(dv_df.select("__file", "__pos"))
+        return df.join(dead, ["__file", "__pos"], "left_anti")
 
     def _write_delete_files(self, doomed: DataFrame) -> list[str]:
         """Materialize a (``__file``, ``__pos``) DataFrame as immutable DV
         parquet under ``_deletes/``.  coalesce(1) is deliberate: a DV is
         O(rows deleted this commit), kilobytes-to-megabytes, and one file
         per commit keeps the manifest small."""
-        stage = os.path.join(self.path, f"_stage_{uuid.uuid4().hex}")
-        doomed.select("__file", "__pos").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        os.makedirs(self.delete_dir, exist_ok=True)
-        out = []
-        for name in sorted(os.listdir(stage)):
-            if name.endswith(".parquet"):
-                final = os.path.join(self.delete_dir, f"{uuid.uuid4().hex}.parquet")
-                os.replace(os.path.join(stage, name), final)
-                out.append(final)
-        for name in os.listdir(stage):
-            os.remove(os.path.join(stage, name))
-        os.rmdir(stage)
-        return out
+        return [
+            e["path"]
+            for e in self._land(
+                doomed.select("__file", "__pos").coalesce(1).write, self.delete_dir
+            )
+        ]
 
     def _write_delete_files_nonempty(self, doomed: DataFrame) -> list[str]:
         """DV write and emptiness probe fused into ONE action: write the
@@ -1376,7 +1388,7 @@ class SnapshotTable:
         # ONE action: the DV write doubles as the emptiness probe (footer
         # row count) — the old probe-then-write shape ran the scan twice
         doomed = (
-            self._scan_with_pos(spark, m)
+            self._read_entries(spark, m, with_pos=True)
             .where(condition)
             .select("__file", "__pos")
         )
@@ -1411,7 +1423,7 @@ class SnapshotTable:
         # the emptiness probe via its footer row count — the constraint
         # check, and the re-insert write): persist the scan-with-filter
         # once instead of re-running the table scan per action
-        live = self._scan_with_pos(spark, m).where(condition).persist()
+        live = self._read_entries(spark, m, with_pos=True).where(condition).persist()
         try:
             new_dvs = self._write_delete_files_nonempty(
                 live.select("__file", "__pos")
@@ -1440,11 +1452,11 @@ class SnapshotTable:
             # assignments may introduce a NEW column: extend the mapping like
             # every other ingest verb, or reads would silently drop it
             ext = self._extended_map(updated.columns, mapping)
-            if stats_cols and mapping:
-                stats_cols = [mapping.get(c, c) for c in stats_cols]
             dvs = list(m.get("delete_files", [])) + new_dvs
             new = self._write_data_files(
-                self._to_physical(updated, mapping), n_new_files, stats_cols
+                self._to_physical(updated, mapping),
+                n_new_files,
+                self._physical_names(mapping, stats_cols),
             )
             return self._publish(
                 list(m["files"]) + new,
@@ -1497,54 +1509,18 @@ class SnapshotTable:
         # memory, guide §5's "reused AND expensive to recompute" case.
         updates = updates.persist()
         try:
-            mapping = m.get("column_map", {})
-            ext = self._extended_map(updates.columns, mapping)
-            phys_key = mapping.get(key, key)
-            phys_stats = [mapping.get(c, c) for c in (stats_cols or [])]
-            if phys_key not in phys_stats:
-                # the key's zone map rides along in the new files' footers:
-                # it feeds this commit's incumbent pruning (below) AND lets
-                # every LATER merge prune these files too
-                phys_stats.append(phys_key)
+            ext = self._extended_map(updates.columns, m.get("column_map", {}))
             # the updates land as FLAT new files even on a Hive-partitioned
             # parent — safe since reads group the layout generations
-            # (_read_entries / _scan_with_pos); the strict guard applies only
-            # to commit_append without evolve=True.
-            # Data files are written FIRST: the footers the write just
-            # produced carry the batch's key [min,max], so the old separate
-            # key-range agg job folds into the write action for free.
-            new = self._write_data_files(
-                self._to_physical(updates, mapping), n_new_files, phys_stats
+            # (_read_entries); the strict guard applies only to
+            # commit_append without evolve=True
+            new, scan = self._write_merge_batch(
+                updates, key, head, n_new_files, stats_cols
             )
-            lo = hi = None
-            vouched = True
-            for e in new:
-                if e.get("n_rows", 0) == 0:
-                    continue
-                st = e.get("stats", {}).get(phys_key)
-                if st is None:
-                    vouched = False  # footer can't vouch -> no pruning (safe)
-                    break
-                lo = st["min"] if lo is None else min(lo, st["min"])
-                hi = st["max"] if hi is None else max(hi, st["max"])
-            if not vouched:
-                scan = list(m["files"])
-            elif lo is None:
-                # empty batch (or all-vouched files carry no rows): no key
-                # can match; all-NULL-key batches land under `not vouched`
-                # and take the full (still correct: NULL never equi-joins)
-                # scan instead
-                scan = []
-            else:
-                # zone-map routing, same as commit_merge: only files whose
-                # key stats overlap the batch's [min,max] can hold a match.
-                # Footer stats are safe even when inexact: parquet
-                # truncation only ever WIDENS [min,max]
-                scan = self.pruned_entries(col=key, lo=lo, hi=hi, version=head)
             dvs = list(m.get("delete_files", []))
             if scan:
                 doomed = (
-                    self._scan_with_pos(spark, m, entries=scan)
+                    self._read_entries(spark, m, scan, with_pos=True)
                     .join(F.broadcast(updates.select(key).distinct()), key, "left_semi")
                     .select("__file", "__pos")
                 )
@@ -1560,6 +1536,57 @@ class SnapshotTable:
             )
         finally:
             updates.unpersist()
+
+    def _write_merge_batch(
+        self,
+        updates: DataFrame,
+        key: str,
+        version: int,
+        n_new_files: int,
+        stats_cols: list[str] | None,
+        partition_by: list[str] | None = None,
+    ) -> tuple[list[dict], list[dict]]:
+        """The half both merge verbs share.  ``updates`` lands as new data
+        files FIRST (they join the manifest only at the atomic publish, so
+        the order against hit detection is free), with the key added to
+        ``stats_cols``: the key's zone map in the footers the write just
+        produced gives this commit the batch's key range without a
+        separate job, and lets every later merge prune these files.
+        Returns ``(new entries, entries of version that may hold a batch
+        key)``: zone-map routing keeps only incumbents whose key range
+        overlaps the batch's (parquet truncation only ever widens a
+        footer's [min, max], and files without a zone map are kept)."""
+        m = self._manifest(version)
+        mapping = m.get("column_map", {})
+        new = self._write_data_files(
+            self._to_physical(updates, mapping),
+            n_new_files,
+            self._physical_names(mapping, [*(stats_cols or []), key]),
+            partition_by=partition_by,
+        )
+        rng = self._key_range_from_footers(new, mapping.get(key, key))
+        if rng is None:
+            return new, list(m["files"])
+        return new, self.pruned_entries(key, *rng, version=version) if rng else []
+
+    @staticmethod
+    def _key_range_from_footers(entries: list[dict], phys_key: str):
+        """The key range of a merge batch, folded from the ``phys_key``
+        zone maps of its freshly written ``entries`` under ``_stat_key``.
+        None when a non-empty file's footer can't vouch for the key
+        (all-NULL keys, INT96 timestamps, a key that lives in the path):
+        every incumbent must be scanned.  ``()`` when no file holds a row:
+        nothing can match.  Otherwise ``(lo, hi)``."""
+        lo = hi = None
+        for e in entries:
+            if e.get("n_rows", 0) == 0:
+                continue
+            st = e.get("stats", {}).get(phys_key)
+            if st is None:
+                return None
+            lo = st["min"] if lo is None else min(lo, st["min"], key=_stat_key)
+            hi = st["max"] if hi is None else max(hi, st["max"], key=_stat_key)
+        return () if lo is None else (lo, hi)
 
     def history(self, spark: SparkSession) -> DataFrame:
         """The table's commit lineage as a DataFrame (Delta DESCRIBE
@@ -1771,11 +1798,12 @@ class SnapshotTable:
         # bytes under the current mapping, extended for fresh columns
         mapping = {} if mode == "rewrite" else self.column_map()
         ext = self._extended_map(df.columns, mapping) if mode == "append" else None
-        if stats_cols and mapping:
-            stats_cols = [mapping.get(c, c) for c in stats_cols]
         entries = self._write_data_files(
-            self._to_physical(df, mapping), n_files, stats_cols,
-            partition_by, cluster_by
+            self._to_physical(df, mapping),
+            n_files,
+            self._physical_names(mapping, stats_cols),
+            partition_by,
+            cluster_by,
         )
         staging_id = f"s{uuid.uuid4().hex}"
         os.makedirs(self.staged_dir, exist_ok=True)
@@ -1806,19 +1834,26 @@ class SnapshotTable:
         audit job queries.  Append mode: base head's live rows (DVs
         applied) plus the staged files; rewrite mode: staged files only."""
         s = self._staged_manifest(staging_id)
+        staged_df = self._staged_rows(spark, s)
+        if s["mode"] == "rewrite" or s["base_version"] == 0:
+            return staged_df
+        return self.read(spark, s["base_version"]).unionByName(staged_df)
+
+    def _staged_rows(self, spark: SparkSession, s: dict) -> DataFrame:
+        """The staged files' rows under the mapping the publish would
+        install (rewrite mode staged logical names)."""
         mapping = s.get(
             "column_map_ext",
             {} if s["mode"] == "rewrite" else self.column_map(),
         )
-        staged_df = self._to_logical(
-            self._read_entries(
-                spark, s["entries"], partition_types=s.get("partition_types")
-            ),
-            mapping,
+        return self._read_entries(
+            spark,
+            {
+                "files": s["entries"],
+                "partition_types": s.get("partition_types"),
+                "column_map": mapping,
+            },
         )
-        if s["mode"] == "rewrite" or s["base_version"] == 0:
-            return staged_df
-        return self.read(spark, s["base_version"]).unionByName(staged_df)
 
     def publish_staged(
         self, staging_id: str, spark: SparkSession | None = None
@@ -1883,19 +1918,7 @@ class SnapshotTable:
                     "publish_staged needs a SparkSession to re-validate "
                     "table CHECK constraints added since staging"
                 )
-            mapping = s.get(
-                "column_map_ext", {} if s["mode"] == "rewrite" else self.column_map()
-            )
-            self._enforce_constraints(
-                self._to_logical(
-                    self._read_entries(
-                        spark, s["entries"],
-                        partition_types=s.get("partition_types"),
-                    ),
-                    mapping,
-                ),
-                new_cons,
-            )
+            self._enforce_constraints(self._staged_rows(spark, s), new_cons)
         if s["mode"] == "append" and base:
             parent = self._manifest(base)
             staged_keys = {
@@ -2020,23 +2043,10 @@ class SnapshotTable:
         partition directory.  ``dv_df`` is the PRE-READ deletion-vector
         frame (``__file``/``__pos``) — callers that loop over groups or
         hit files read it ONCE, not once per iteration."""
-        from pyspark.sql import functions as F
-
         df = spark.read.option("mergeSchema", "true").parquet(*paths)
         if dv_df is None:
             return df
-        df = df.withColumns(
-            {
-                "__dv_file": F.col("_metadata.file_path"),
-                "__dv_pos": F.col("_metadata.row_index"),
-            }
-        )
-        dv = dv_df.select(
-            F.col("__file").alias("__dv_file"), F.col("__pos").alias("__dv_pos")
-        )
-        return df.join(
-            F.broadcast(dv), ["__dv_file", "__dv_pos"], "left_anti"
-        ).drop("__dv_file", "__dv_pos")
+        return self._drop_dead(self._with_pos(df), dv_df).drop("__file", "__pos")
 
     def _relocate_into_partition(
         self, entries: list[dict], template: dict
@@ -2148,9 +2158,7 @@ class SnapshotTable:
         dvs = m.get("delete_files", [])
         # the repack scans PHYSICAL columns: translate logical stats_cols
         # through the mapping or the packed files would lose their zone maps
-        mapping = m.get("column_map", {})
-        if stats_cols and mapping:
-            stats_cols = [mapping.get(c, c) for c in stats_cols]
+        stats_cols = self._physical_names(m.get("column_map", {}), stats_cols)
         if len(small) == 1:
             # repacking a lone small file is churn UNLESS it has dead rows
             # to fold in — check the DVs for positions in it (DVs are small)
@@ -2257,18 +2265,13 @@ class SnapshotTable:
         and the vectors are trimmed to positions in carried files, same
         as ``commit_compact_small``.
         """
-        from urllib.parse import unquote, urlparse
-
-        from pyspark.sql import functions as F
-
-        spark = updates.sparkSession
         versions = self.versions()
         if not versions:
             return self.commit_append(updates, n_new_files, stats_cols)
         updates = self._apply_generated(updates)
         self._enforce_constraints(updates, self._incoming_constraints())
-        # `updates` feeds the key-range agg, the hit-detection semi-joins
-        # and the final data-file write: persist once (batch-sized), don't
+        # `updates` feeds the data-file write and the hit-detection
+        # semi-joins: persist once (batch-sized), don't
         # recompute the caller's upstream plan per action (guide §5)
         updates = updates.persist()
         try:
@@ -2308,59 +2311,14 @@ class SnapshotTable:
         ext = self._extended_map(updates.columns, mapping)
         phys_key = mapping.get(key, key)
         upd_keys = updates.select(key).distinct()
-        # the update rows' data files are written FIRST (they join the
-        # manifest only at the atomic publish below, so ordering vs hit
-        # detection is free): their footers carry the batch's key [min,max]
-        # for free, folding the old separate key-range agg job into the
-        # write action.  The key's zone map also lands in the new entries,
-        # so later merges prune these files too.
-        phys_stats = [mapping.get(c, c) for c in (stats_cols or [])]
-        if phys_key not in phys_stats:
-            phys_stats.append(phys_key)
-        new = self._write_data_files(
-            self._to_physical(updates, mapping),
-            n_new_files,
-            phys_stats,
+        # at 100 TB with clustered layout, zone-map routing leaves the
+        # handful of files the keys live in; a key that IS a partition
+        # column has no zone map (it lives in the path), so every entry
+        # is kept and the partition-keyed ones are matched from the
+        # manifest below
+        new, scan_entries = self._write_merge_batch(
+            updates, key, versions[-1], n_new_files, stats_cols,
             partition_by=list(lay) or None,
-        )
-        lo = hi = None
-        vouched = True
-        for e in new:
-            if e.get("n_rows", 0) == 0:
-                continue
-            st = e.get("stats", {}).get(phys_key)
-            if st is None:
-                vouched = False
-                break
-            # NaN poisons Python's min/max fold (max(7.0, nan) == 7.0, so a
-            # NaN-keyed row in a later-walked file would silently shrink the
-            # range, while Spark joins match NaN = NaN) — only the agg
-            # fallback, whose F.max orders NaN greatest, is safe there
-            if any(
-                isinstance(v, float) and math.isnan(v)
-                for v in (st["min"], st["max"])
-            ):
-                vouched = False
-                break
-            lo = st["min"] if lo is None else min(lo, st["min"])
-            hi = st["max"] if hi is None else max(hi, st["max"])
-        if not vouched:
-            # footer can't vouch (e.g. the key IS a partition column of the
-            # declared layout, so it lives in the path, not the file):
-            # fall back to the key-range agg over the persisted batch —
-            # same job the pre-fold code always paid
-            lo_hi = updates.agg(F.min(key), F.max(key)).first()
-            lo, hi = lo_hi[0], lo_hi[1]
-        # zone-map routing: files whose [min,max] stats for the key can't
-        # overlap the update batch's key range can't contain a match — the
-        # hit-detection scan reads only the overlap-surviving files (at
-        # 100 TB with clustered layout, that's the handful the keys live
-        # in).  pruned_entries is a safe superset: stat-less files are
-        # always scanned.
-        scan_entries = (
-            self.pruned_entries(col=key, lo=lo, hi=hi, version=versions[-1])
-            if lo is not None
-            else []  # empty/all-null-key batch: nothing can match
         )
         # entries whose KEY is path-encoded never open a data file for hit
         # detection: the manifest's partition value is the key value for
@@ -2553,16 +2511,18 @@ class SnapshotTable:
            value doesn't match are dropped without touching any file.
            Entries with no recorded value for the column can't be skipped.
         2. **zone maps** — the surviving files whose [min, max] stats for
-           ``col`` overlap [lo, hi].  Numeric stats compare numerically,
-           everything else lexicographically (timestamps/strings render in
-           native order).  A file with no stats for ``col`` cannot be
-           skipped and is always returned (correctness over pruning).
+           ``col`` overlap [lo, hi] under ``_stat_key``: numbers (decimal
+           stats included) compare numerically with NaN greatest, dates,
+           timestamps and strings by their native-order string form.  A
+           file with no stats for ``col`` cannot be skipped and is always
+           returned (correctness over pruning).
         """
         v = version if version is not None else self._head()
         if col is not None:
             # zone maps are keyed by PHYSICAL names (footers of immutable
             # files); translate a logical probe column through the mapping
             col = self._raw_manifest(v).get("column_map", {}).get(col, col)
+            klo, khi = _stat_key(lo), _stat_key(hi)
         out = []
         for e in self._manifest(v)["files"]:
             if partitions:
@@ -2578,15 +2538,11 @@ class SnapshotTable:
                         break
                 if skip:
                     continue
-            if col is not None:
-                st = e.get("stats", {}).get(col)
-                if st is not None:
-                    mn, mx = st["min"], st["max"]
-                    if isinstance(mn, (int, float)) and not isinstance(mn, bool):
-                        if mx < lo or mn > hi:
-                            continue
-                    elif str(mx) < str(lo) or str(mn) > str(hi):
-                        continue
+            st = e.get("stats", {}).get(col) if col is not None else None
+            if st is not None and (
+                _stat_key(st["max"]) < klo or _stat_key(st["min"]) > khi
+            ):
+                continue
             out.append(e)
         return out
 
@@ -2618,15 +2574,7 @@ class SnapshotTable:
         if not entries:
             return self.read(spark, version, merge_schema=merge_schema).limit(0)
         v = version if version is not None else self._head()
-        m = self._manifest(v)
-        return self._to_logical(
-            self._read_entries(
-                spark, entries, merge_schema,
-                delete_files=m.get("delete_files"),
-                partition_types=m.get("partition_types"),
-            ),
-            m.get("column_map", {}),
-        )
+        return self._read_entries(spark, self._manifest(v), entries, merge_schema)
 
     # -- retention -----------------------------------------------------------
     def vacuum(self, keep_last: int = 2) -> dict:

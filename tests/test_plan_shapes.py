@@ -609,7 +609,9 @@ def test_r10_sketch_and_mixing_family_plans(spark, sf_dir):
 
 
 def test_merge_commit_job_count_ceiling(spark, tmp_path):
-    """Pin the r10 driver-job floor of a CoW merge commit (16 -> 10 jobs).
+    """Pin the r10 driver-job floor of a CoW merge commit (16 -> 10 jobs),
+    of a merge-on-read commit (6 jobs) and of a CoW merge keyed on the
+    partition column (7 -> 5 jobs once its key-range agg was deleted).
 
     Per-job fixed cost dominates commit wall time on the local harness
     (and schedules a full round-trip at any scale), so the r10 fusions
@@ -630,6 +632,29 @@ def test_merge_commit_job_count_ceiling(spark, tmp_path):
         stats_cols=["k"],
     )
     assert len(tr.getJobIdsForGroup(None)) - before <= 10
+
+    # merge-on-read: the data-file write, then the DV semi-join write
+    t = SnapshotTable(str(tmp_path / "jc_mor"))
+    t.commit_append(
+        spark.range(0, 1000).selectExpr("id as k", "id*2 as v"), stats_cols=["k"]
+    )
+    before = len(tr.getJobIdsForGroup(None))
+    t.commit_merge_on_read(
+        spark.range(100, 200).selectExpr("id as k", "id*7 as v"),
+        key="k",
+        stats_cols=["k"],
+    )
+    assert len(tr.getJobIdsForGroup(None)) - before <= 6
+
+    # keyed on the partition column, hits are decided from the manifest:
+    # the key has no zone map, and no key-range job runs in its place
+    t = SnapshotTable(str(tmp_path / "jc_part"))
+    t.commit_append(
+        spark.range(0, 1000).selectExpr("id % 4 as p", "id as v"), partition_by=["p"]
+    )
+    before = len(tr.getJobIdsForGroup(None))
+    t.commit_merge(spark.createDataFrame([(1, -1)], "p long, v long"), key="p")
+    assert len(tr.getJobIdsForGroup(None)) - before <= 5
 
 
 def test_channel_report_full_job_count_ceiling(spark, sf_dir):

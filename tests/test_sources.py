@@ -3468,22 +3468,32 @@ def test_merge_write_as_probe_leaves_no_orphans(spark, tmp_path):
     assert all(pq.ParquetFile(f).metadata.num_rows > 0 for f in dvs_on_disk)
 
 
-def test_snapshot_merge_nan_keyed_rows_replaced_not_duplicated(spark, tmp_path):
+@pytest.mark.parametrize(
+    "incumbent, kept",
+    [
+        ("(cast(1.0 as double), 10), (cast(2.0 as double), 20),"
+         " (cast('NaN' as double), 30)", {10, 20}),
+        ("(cast(10.0 as double), 10), (cast('NaN' as double), 30)", {10}),
+    ],
+    ids=["1_2_nan", "10_nan"],
+)
+@pytest.mark.parametrize("verb", ["commit_merge", "commit_merge_on_read"])
+def test_snapshot_merge_nan_keyed_rows_replaced_not_duplicated(
+    spark, tmp_path, verb, incumbent, kept
+):
     """A NaN-keyed float update must REPLACE the NaN-keyed incumbent row.
 
     Python's min/max silently drop NaN (max(7.0, nan) == 7.0), so a
     footer-stat fold over multiple new files could compute a finite
     [lo, hi] that zone-map-prunes the incumbent NaN file — while Spark's
-    join semantics treat NaN = NaN as a match.  The fold must detect NaN
-    (or stat-less footers, the common parquet rendering of NaN columns)
-    and fall back to the F.max agg, whose NaN orders greatest."""
+    join semantics treat NaN = NaN as a match.  Parquet footers order NaN
+    greatest (an incumbent {10.0, NaN} records [10.0, NaN]), and so must
+    the fold and the pruning comparison: the batch range is then
+    [7.0, NaN], which overlaps every file holding a NaN."""
     from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
     t = SnapshotTable(str(tmp_path / "snap_nan"))
-    base = spark.sql(
-        "SELECT * FROM VALUES (cast(1.0 as double), 10), (cast(2.0 as double), 20),"
-        " (cast('NaN' as double), 30) AS t(k, v)"
-    )
+    base = spark.sql(f"SELECT * FROM VALUES {incumbent} AS t(k, v)")
     t.commit_append(base, n_files=1, stats_cols=["k"])
     # two update files so the fold actually walks more than one footer,
     # with the NaN row landing apart from the finite keys
@@ -3491,13 +3501,13 @@ def test_snapshot_merge_nan_keyed_rows_replaced_not_duplicated(spark, tmp_path):
         "SELECT * FROM VALUES (cast('NaN' as double), 999),"
         " (cast(7.0 as double), 70) AS t(k, v)"
     ).repartition(2, "v")
-    v = t.commit_merge(upd, key="k", n_new_files=2, stats_cols=["k"])
+    v = getattr(t, verb)(upd, key="k", n_new_files=2, stats_cols=["k"])
     rows = t.read(spark, v).collect()
     nan_rows = [r for r in rows if r.k != r.k]  # NaN != NaN in Python
     assert len(nan_rows) == 1, f"NaN row duplicated or lost: {rows}"
     assert nan_rows[0].v == 999
     vals = {r.v for r in rows}
-    assert vals == {10, 20, 999, 70}
+    assert vals == kept | {999, 70}
 
 
 @pytest.mark.parametrize("dtype", ["decimal(10,2)", "decimal(27,6)"])
@@ -3509,9 +3519,10 @@ def test_snapshot_decimal_key_merge_and_pruned_read(spark, tmp_path, dtype, verb
     lexicographically ("10.50" < "9.40"), so a file spanning [9.50, 10.50]
     was skipped by a [9.40, 9.60] probe and a merge appended a second 9.50
     row; precision <= 18 decimals (stored as INT64) failed the footer read
-    outright.  A decimal column records no zone map, so every file is
-    kept: the merge must equal a dict-model upsert and the pruned read
-    the unpruned filter."""
+    outright.  Decimal zone maps are exact numbers rounded outward:
+    the merge must equal a dict-model upsert, the pruned read the
+    unpruned filter, and the probe must skip the carried [20.00, 30.00]
+    file."""
     from decimal import Decimal
 
     from pyspark.sql import functions as F
@@ -3529,6 +3540,7 @@ def test_snapshot_decimal_key_merge_and_pruned_read(spark, tmp_path, dtype, verb
                  [("20.00", 5), ("30.00", 6)]):
         t.commit_append(frame(rows), n_files=1, stats_cols=["k"])
         model.update({Decimal(k): v for k, v in rows})
+    (far_file,) = set(t.files()) - set(t.files(t.versions()[-2]))
     upd = [("9.50", 30), ("2.00", 20), ("40.00", 7)]
     v = getattr(t, verb)(frame(upd), key="k", n_new_files=1, stats_cols=["k"])
     model.update({Decimal(k): v for k, v in upd})
@@ -3542,3 +3554,167 @@ def test_snapshot_decimal_key_merge_and_pruned_read(spark, tmp_path, dtype, verb
     pruned = t.read_pruned(spark, col="k", lo=lo, hi=hi, version=v).where(probe)
     full = t.read(spark, v).where(probe)
     assert sorted(pruned.collect()) == sorted(full.collect()) == [(Decimal("9.50"), 30)]
+    assert far_file in t.files(v)
+    assert far_file not in t.pruned_files(col="k", lo=9.40, hi=9.60, version=v)
+
+
+@pytest.mark.parametrize(
+    "dtype",
+    ["int", "bigint", "double", "decimal(10,2)", "decimal(27,6)", "string",
+     "date", "timestamp", "timestamp_ntz"],
+)
+def test_snapshot_zone_maps_and_merges_match_unpruned_model(spark, tmp_path, dtype):
+    """Differential test of zone maps and both merge verbs, per key type.
+
+    Each example appends random keys as three files (nulls and the type's
+    edge values mixed in: NaN, +-0.0, +-inf for double), upserts a batch
+    with ``commit_merge_on_read`` and another with ``commit_merge`` (keys
+    drawn partly from the table, two new files each, so the key range
+    folds over several footers), and checks:
+
+    - each merge equals a model upsert: an incumbent row survives unless
+      a batch row has its key under Spark's join equality (NULL matches
+      nothing, NaN matches NaN, -0.0 matches 0.0);
+    - ``read_pruned`` plus the filter equals the unpruned filter, for a
+      point probe on every key in the table (every zone-map boundary is
+      one) and for ranges between them.  Probes that prune to the same
+      file set share one ``read_pruned`` scan.
+
+    ``timestamp`` is written as INT96, which has no footer stats, so its
+    files must never be pruned."""
+    import datetime
+    import functools
+    import itertools
+    import os
+    from collections import defaultdict
+    from decimal import Decimal
+
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+    from pyspark.sql import functions as F
+
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
+
+    inf = float("inf")
+    day = (datetime.date(1900, 1, 1), datetime.date(2100, 12, 31))
+    instant = (datetime.datetime(1900, 1, 1), datetime.datetime(2100, 12, 31))
+    base, edges = {
+        "int": (st.integers(-(2**31), 2**31 - 1), [-(2**31), 0, 2**31 - 1]),
+        "bigint": (st.integers(-(2**63), 2**63 - 1), [-(2**63), 2**63 - 1]),
+        "double": (st.floats(), [float("nan"), 0.0, -0.0, inf, -inf]),
+        "decimal(10,2)": (
+            st.decimals("-99999999.99", "99999999.99", places=2),
+            [Decimal("-0.01"), Decimal("9.50")],
+        ),
+        "decimal(27,6)": (
+            st.decimals("-999999999999999999999.999999",
+                        "999999999999999999999.999999", places=6),
+            [Decimal("123456789012345678.000001"), Decimal("10.500000")],
+        ),
+        "string": (
+            st.text(st.characters(blacklist_categories=("Cs",)), max_size=4),
+            ["", "a", "é", "\U0001f600"],
+        ),
+        "date": (st.dates(*day), [day[0]]),
+        "timestamp": (st.datetimes(*instant), [instant[0]]),
+        "timestamp_ntz": (
+            st.datetimes(*instant), [datetime.datetime(2024, 1, 1, 0, 0, 0, 1)]
+        ),
+    }[dtype]
+    # edges first: the simplest example Hypothesis always runs is then
+    # an all-NULL table, not a lone 0
+    keys = st.one_of(st.sampled_from([None, *edges]), base)
+
+    def text(k):
+        # dates, timestamps and decimals travel as text and are cast by
+        # Spark: exact, and free of the Python process's time zone
+        if isinstance(k, Decimal):
+            return format(k, "f")
+        return k if k is None or isinstance(k, (str, float)) else str(k)
+
+    def frame(rows, names=("k",)):
+        """rows of (*keys, id): the ``names`` columns typed dtype, then v."""
+        if dtype in ("double", "string"):
+            return spark.createDataFrame(
+                rows, ", ".join(f"{n} {dtype}" for n in names) + ", v bigint"
+            )
+        return spark.createDataFrame(
+            [(*map(text, r[:-1]), r[-1]) for r in rows],
+            ", ".join(f"{n} string" for n in names) + ", v bigint",
+        ).select(*[F.col(n).cast(dtype).alias(n) for n in names], "v")
+
+    def norm(k):
+        # Spark's join equality as a dict key
+        if isinstance(k, float) and k != k:
+            return "NaN"
+        return 0.0 if isinstance(k, float) and k == 0 else k
+
+    def live(t, v):
+        rows = t.read(spark, v).collect()
+        assert len(rows) == len({r.v for r in rows}), "a row is live twice"
+        return rows
+
+    case_n = itertools.count()
+
+    @settings(
+        max_examples=2,
+        deadline=None,
+        suppress_health_check=[
+            HealthCheck.function_scoped_fixture, HealthCheck.too_slow
+        ],
+    )
+    @given(data=st.data())
+    def run(data):
+        t = SnapshotTable(os.path.join(str(tmp_path), f"zm_{next(case_n)}"))
+        ids = itertools.count()
+        drawn = data.draw(st.lists(keys, min_size=1, max_size=9))
+        rows = [(k, next(ids)) for k in drawn]
+        t.commit_append(frame(rows), n_files=3, stats_cols=["k"])
+        model = {v: norm(k) for k, v in rows}  # row id -> join-normalized key
+        seen = [k for k, _ in rows if k is not None]
+        for verb in ("commit_merge_on_read", "commit_merge"):
+            batch = {}
+            for k in data.draw(st.lists(
+                st.one_of(keys, st.sampled_from(seen)) if seen else keys,
+                min_size=1, max_size=4,
+            )):
+                batch.setdefault(norm(k), k)  # updates are unique on the key
+            upd = [(k, next(ids)) for k in batch.values()]
+            v = getattr(t, verb)(frame(upd), key="k", n_new_files=2, stats_cols=["k"])
+            hit = {nk for nk in batch if nk is not None}
+            model = {i: nk for i, nk in model.items() if nk is None or nk not in hit}
+            model.update({i: norm(k) for k, i in upd})
+            table_rows = live(t, v)
+            assert {r.v for r in table_rows} == set(model), verb
+
+        points = list(dict.fromkeys(r.k for r in table_rows if r.k is not None))
+        if not points:
+            return
+        point = st.sampled_from(points)
+        probes = [(k, k) for k in points] + data.draw(
+            st.lists(st.tuples(point, point), max_size=3)
+        )
+        table = frame(
+            [(lo, hi, i) for i, (lo, hi) in enumerate(probes)], names=("lo", "hi")
+        ).withColumnRenamed("v", "probe")
+
+        def matches(df, group):
+            p = table.where(F.col("probe").isin(group))
+            return df.join(p, F.col("k").between(p.lo, p.hi)).select("probe", "v")
+
+        by_files = defaultdict(list)
+        for i, (lo, hi) in enumerate(probes):
+            by_files[tuple(t.pruned_files(col="k", lo=lo, hi=hi))].append(i)
+        if dtype == "timestamp":
+            assert list(by_files) == [tuple(t.files())]
+        pruned = functools.reduce(
+            lambda a, b: a.unionByName(b),
+            [
+                matches(t.read_pruned(spark, "k", *probes[g[0]]), g)
+                for g in by_files.values()
+            ],
+        )
+        full = matches(t.read(spark), list(range(len(probes))))
+        assert sorted(pruned.collect()) == sorted(full.collect())
+
+    run()
