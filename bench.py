@@ -163,8 +163,9 @@ BENCH_QUERIES = [
     "distribution_drift_psi",
     # round-6 widening 5: count-min sketch build (token pass → sketch-sized
     # (r,col) groupBy → broadcast probe join) and the CDC tombstone fold
-    # (3 replayed micro-batches through merge_latest; streaming fixed costs
-    # dominate, like the other foreachBatch entries — expect ~flat across SFs).
+    # (3 replayed micro-batches through a keep-greatest merge-on-read commit;
+    # streaming fixed costs dominate, like the other foreachBatch entries —
+    # expect ~flat across SFs).
     "cms_heavy_hitters",
     "stream_cdc_apply",
     # prefix-filtered set-similarity join (All-Pairs/PPJoin): df shuffle →

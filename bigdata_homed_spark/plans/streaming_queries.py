@@ -400,6 +400,18 @@ def stream_stream_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(joined, output_mode="append")
 
 
+def _zone_max(t, col: str):
+    """Max of ``col`` over every row the head files of snapshot table ``t``
+    hold, live or DV-dead, read from the manifest's zone maps — no Spark
+    job.  Merge-on-read commits and deletes never drop a file, so this is
+    the running max over every row ever merged: a monotonic event-time
+    horizon."""
+    return max(
+        (e["stats"][col]["max"] for e in t.pruned_entries() if e.get("n_rows")),
+        default=None,
+    )
+
+
 def _run_keyed_upsert_stream(
     spark: SparkSession, sf_dir: str, retention_sec: int | None = None
 ) -> DataFrame:
@@ -408,30 +420,26 @@ def _run_keyed_upsert_stream(
     queries so the keep-latest tiebreaker and stream wiring cannot drift.
 
     Multi-batch correctness (batches are per-file and NOT event-time
-    ordered): each batch is merged against the EXISTING state for its keys
-    in ONE bucket-pruned pass (``merge_latest``), keeping the newer
-    (sec, event_id) — so an out-of-order or replayed batch can never
-    overwrite newer state with older events.  The retention cutoff uses a
-    driver-held running max of event time, so it is genuinely monotonic
-    rather than batch-local.  Per-batch I/O stays O(batch ∪ touched
-    buckets) throughout."""
+    ordered): each batch is one ``commit_merge_on_read`` with the
+    ``keep_greatest`` rule, keeping the newer (sec, event_id) per user —
+    so an out-of-order or replayed batch can never overwrite newer state
+    with older events.  The retention cutoff is the running max of event
+    time, read from the table's ``sec`` zone maps, so it is monotonic
+    rather than batch-local; it is applied per batch as a
+    ``commit_delete``."""
     from pyspark.sql import functions as F
 
-    from ..sources.sinks import PartitionedStateStore
+    from ..sources.snapshots import SnapshotTable
 
-    store = PartitionedStateStore(
-        session_dir(spark, "upsert_state_"), ["user_id"], n_buckets=16
-    )
-    hi = {"max_sec": None}
+    t = SnapshotTable(session_dir(spark, "upsert_state_"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sparkb = batch_df.sparkSession
-        store.merge_latest(batch_df, ["sec", "event_id"])
-        row = batch_df.agg(F.max("sec").alias("mx")).collect()[0]
-        if row.mx is not None:
-            hi["max_sec"] = max(hi["max_sec"] or int(row.mx), int(row.mx))
-            if retention_sec is not None:
-                store.expire(sparkb, f"sec < {hi['max_sec'] - retention_sec}")
+        t.commit_merge_on_read(
+            batch_df, key="user_id", stats_cols=["sec"], batch_id=batch_id,
+            keep_greatest=["sec", "event_id"],
+        )
+        if retention_sec is not None and (hmax := _zone_max(t, "sec")) is not None:
+            t.commit_delete(batch_df.sparkSession, f"sec < {hmax - retention_sec}")
 
     events = read_events_stream(spark, sf_dir).select(
         "user_id", "event_id", "event_type", "value", F.col("ts_sec").alias("sec")
@@ -443,7 +451,7 @@ def _run_keyed_upsert_stream(
         .start()
     )
     q.awaitTermination()
-    return store.read(spark)
+    return t.read(spark)
 
 
 @query(
@@ -462,12 +470,13 @@ def _run_keyed_upsert_stream(
 )
 def stream_foreachbatch_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S10/T8 as a driven pipeline: every micro-batch upserts its per-user
-    latest event into a keyed parquet state table via ``foreachBatch`` +
-    ``PartitionedStateStore`` — the reference's Phoenix overwrite-by-PK
-    contract (UserStatusByRunLog.scala:296-300) with at-least-once batch
-    semantics (idempotent because the upsert merges keep-latest against
-    existing state, see _run_keyed_upsert_stream).  The oracle is global
-    keep-latest per user."""
+    latest event into a keyed snapshot table via ``foreachBatch`` + a
+    keep-greatest ``commit_merge_on_read`` — the reference's Phoenix
+    overwrite-by-PK contract (UserStatusByRunLog.scala:296-300) with
+    at-least-once batch semantics (idempotent: the batch id guard skips a
+    replay, and a replayed row ties with its incumbent, which stays; see
+    _run_keyed_upsert_stream).  The oracle is global keep-latest per
+    user."""
     return _run_keyed_upsert_stream(spark, sf_dir)
 
 
@@ -546,12 +555,12 @@ def stream_foreachbatch_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S13/T8 retention driven end-to-end: the `stream_foreachbatch_latest`
     keyed-upsert pipeline PLUS the reference's per-batch retention DELETE
     (`homed/realtime/ChannelLive.scala:579-625` deletes rows older than the
-    retention horizon every cycle) — here `PartitionedStateStore.expire`,
-    which rewrites only the buckets containing expired rows.  The cutoff
+    retention horizon every cycle) — here a ``commit_delete``, which kills
+    the expired rows by deletion vector and rewrites no file.  The cutoff
     is a RUNNING max of seen event time minus 1 day (the reference's
-    realtime tables kept exactly 1 day, BASELINE.md) — held by the driver
-    so it is monotonic even when batches arrive out of event-time order —
-    and the final state equals
+    realtime tables kept exactly 1 day, BASELINE.md) — read from the
+    table's zone maps, so it is monotonic even when batches arrive out of
+    event-time order — and the final state equals
     keep-latest-per-key restricted to the retention window — exactly what
     the SQL oracle states (the 1-day horizon measurably drops idle users
     at every SF, so the delete path is exercised, not vacuous).  Pipeline
@@ -672,33 +681,23 @@ def stream_user_status_by_user_log(spark: SparkSession, sf_dir: str) -> DataFram
 # Streaming incremental dedup: document ingest as micro-batches, each batch
 # deduplicated against the PERSISTED fingerprint index before admission —
 # the streaming spelling of the dedup family (T1/S10 × dedup_exact), i.e.
-# what a continuous training-data ingest actually runs.  The md5 index
-# lives in a PartitionedStateStore keyed on text_hash, so a batch reads
-# only the buckets its hashes touch.  Two delivery guarantees, covered by
-# two distinct mechanisms (the r5 advice: associativity alone is NOT a
-# replay guarantee):
+# what a continuous training-data ingest actually runs.  The md5 index is
+# a snapshot table keyed on text_hash; a batch folds its partials into the
+# incumbent rows for its hashes and merges the result back (the same
+# caller-side fold as stream_ivm_aggregates).  Two delivery guarantees,
+# covered by two distinct mechanisms (the r5 advice: associativity alone
+# is NOT a replay guarantee):
 # - OUT-OF-ORDER batches: the merge rule (keeper = min doc_id, copies =
 #   sum) is associative and commutative, so the final state is independent
 #   of arrival order;
 # - REPLAYED batches (foreachBatch is at-least-once — a micro-batch can
-#   re-run after a failure, and the store upsert is not transactional with
-#   the checkpoint): every state row is stamped with the last batch_id
-#   merged into it; a replay skips rows already carrying its batch_id, so
-#   re-applying a batch is a per-row no-op instead of a double-count.
-#   A crash mid-upsert (some buckets written, some not) heals the same
-#   way: the replay re-merges exactly the rows the stamp proves unmerged.
-def dedup_merge_batch(store, batch_df: DataFrame, batch_id: int) -> None:
-    """Merge one ingest micro-batch into the fingerprint index,
-    idempotently: rows already stamped with this ``batch_id`` are left
-    untouched (upsert_by_key keeps un-upserted keys), so an at-least-once
-    replay of the batch cannot double-count ``n_copies``.
-
-    Tracking only the LAST batch id per row suffices because Structured
-    Streaming commits batch N to the checkpoint before starting N+1 —
-    the only batch that can ever replay is the latest uncommitted one, so
-    "stamp == replayed id" is exactly "this row already merged it" (the
-    Spark-docs foreachBatch idempotency recipe, made per-row so a crash
-    mid-upsert that wrote only some buckets heals correctly too).
+#   re-run after a failure): the merge is stamped with its batch_id, and a
+#   replayed id is skipped whole.  The merge publishes atomically, so a
+#   crash mid-merge leaves nothing half-applied for the replay to heal.
+def dedup_merge_batch(t, batch_df: DataFrame, batch_id: int) -> None:
+    """Merge one ingest micro-batch into the fingerprint index ``t`` (a
+    ``SnapshotTable``), idempotently: a replay of an already-committed
+    ``batch_id`` commits nothing, so it cannot double-count ``n_copies``.
     Module-level so the replay contract is directly testable."""
     from pyspark.sql import functions as F
 
@@ -711,19 +710,12 @@ def dedup_merge_batch(store, batch_df: DataFrame, batch_id: int) -> None:
             F.count(F.lit(1)).cast("bigint").alias("n_copies"),
         )
     )
-    existing = store.read_for_keys(batch_df.sparkSession, bagg.select("text_hash"))
-    if existing is not None:
-        # replay guard: a state row whose stamp equals this batch_id already
-        # holds this batch's contribution — drop it from the merge so the
-        # bucket rewrite carries it through unchanged
-        already = existing.where(F.col("last_batch_id") == batch_id)
+    if t.versions():
+        existing = t.read(batch_df.sparkSession).join(
+            F.broadcast(bagg.select("text_hash")), "text_hash", "left_semi"
+        )
         bagg = (
-            bagg.join(already.select("text_hash"), "text_hash", "left_anti")
-            .unionByName(
-                existing.where(F.col("last_batch_id") != batch_id).drop(
-                    "last_batch_id"
-                )
-            )
+            bagg.unionByName(existing)
             .groupBy("text_hash")
             .agg(
                 F.min("keeper_id").alias("keeper_id"),
@@ -731,8 +723,7 @@ def dedup_merge_batch(store, batch_df: DataFrame, batch_id: int) -> None:
                 F.sum("n_copies").cast("bigint").alias("n_copies"),
             )
         )
-    store.upsert(bagg.withColumn("last_batch_id", F.lit(batch_id).cast("bigint")))
-
+    t.commit_merge_on_read(bagg, key="text_hash", batch_id=batch_id)
 
 
 @query(
@@ -755,7 +746,7 @@ def dedup_merge_batch(store, batch_df: DataFrame, batch_id: int) -> None:
 def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from ..sources.sinks import PartitionedStateStore
+    from ..sources.snapshots import SnapshotTable
     from ..sources.tables import load_table
 
     # stage the corpus as 4 files = 4 micro-batches (the single-file fixture
@@ -767,12 +758,10 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("overwrite").parquet(p),
     )
 
-    store = PartitionedStateStore(
-        session_dir(spark, "dedup_index_"), ["text_hash"], n_buckets=16
-    )
+    t = SnapshotTable(session_dir(spark, "dedup_index_"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_merge_batch(store, batch_df, batch_id)
+        dedup_merge_batch(t, batch_df, batch_id)
 
     docs_schema = (
         "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -790,7 +779,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    index = store.read(spark)
+    index = t.read(spark)
     return index.groupBy("keeper_source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_unique_docs"),
         F.sum("n_copies").cast("bigint").alias("n_total_docs"),
@@ -810,12 +799,13 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   terminal dim join     (J9, `:174-176` left join + `nvl(type,-1)`
 #                          fallback; here a broadcast stream-static join
 #                          with COALESCE(terminal, 0))
-#   keyed snapshot upsert (S10, the Phoenix overwrite-by-PK — here the
-#                          bucket-pruned PartitionedStateStore, merged
-#                          newest-wins so batch order/replay cannot
-#                          regress state)
-#   retention delete      (T8/S13, `deleteHistChannelRate` — expire() on
-#                          a driver-held monotonic event-time horizon)
+#   keyed snapshot upsert (S10, the Phoenix overwrite-by-PK — here a
+#                          keep-greatest merge-on-read commit into a
+#                          snapshot table, newest-wins so batch
+#                          order/replay cannot regress state)
+#   retention delete      (T8/S13, `deleteHistChannelRate` — one
+#                          commit_delete after the drain, on the
+#                          event-time horizon read from the zone maps)
 #   dual-grain report     (`:197-215` per-channel counts + `:252-266`
 #                          all-channel region rollup, the reference's
 #                          f_date/f_hour/f_timerange grain — here the
@@ -889,17 +879,17 @@ def stream_channel_live_counts(
 ) -> DataFrame:
     """ChannelLiveByRunLogRealTime end-to-end (see block comment above).
 
-    Scale shape: each micro-batch touches O(batch ∪ touched buckets) state
-    I/O (bucket-pruned store), the terminal dim is broadcast per batch
-    (J9), the fused merge_latest leaves one snapshot row per active user
-    in a single state pass, and the final dual-grain report is ONE scan of
+    Scale shape: each micro-batch is one merge-on-read commit that reads
+    only the key-range-pruned incumbents, the terminal dim is broadcast
+    per batch (J9), the keep-greatest rule leaves one live snapshot row
+    per active user, and the final dual-grain report is ONE scan of
     the snapshot — the region grain re-aggregates the channel grain (exact
     because keep-latest leaves one row per user), the A7 re-agg trick,
     so no second pass and no grouping-sets expansion of the fact.
     """
     from pyspark.sql import functions as F
 
-    from ..sources.sinks import PartitionedStateStore
+    from ..sources.snapshots import SnapshotTable
     from ..sources.tables import load_table
 
     # stage the events as n_batches files = n_batches replayed micro-batches
@@ -931,10 +921,7 @@ def stream_channel_live_counts(
         .localCheckpoint()
     )
 
-    store = PartitionedStateStore(
-        session_dir(spark, "chl_state_"), ["user_id"], n_buckets=16
-    )
-    hi = {"max_sec": None}
+    t = SnapshotTable(session_dir(spark, "chl_state_"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # heartbeat filter (P3 analog) + parse into the realtime columns
@@ -953,7 +940,7 @@ def stream_channel_live_counts(
             .alias("pt_micro"),
         )
         # J9: broadcast dim join with the reference's missing-device
-        # fallback.  The T3 newest-wins dedup happens INSIDE merge_latest
+        # fallback.  The T3 newest-wins dedup happens INSIDE the merge
         # (one window over batch ∪ touched state instead of two passes) —
         # enrichment is row-wise, so dedup-after-join ≡ dedup-before-join.
         enriched = (
@@ -973,29 +960,11 @@ def stream_channel_live_counts(
                 ),
             )
         )
-        # S10+T3+T8 in ONE state pass: the newest-wins merge rewrites the
-        # touched buckets WITH the retention filter fused, and the T8/S13
-        # horizon max rides the merge's own bounded touched-bucket collect
-        # (merge_latest(horizon_col=...)) instead of a separate
-        # agg+collect job over the batch — 2 driver jobs per batch, down
-        # from 7 in r9 and 4 after the first fusion.  The left broadcast
-        # enrichment is row-preserving, so max(sec) over `enriched` is
-        # max(sec) over `parsed`.  Buckets untouched by any later batch
-        # are swept once after the drain (below); with the monotone
-        # horizon the converged snapshot is identical (an intermediate-
-        # expired row is final-expired too).
-        def horizon_pred(mx):
-            if mx is not None:
-                hi["max_sec"] = max(hi["max_sec"] or int(mx), int(mx))
-            if hi["max_sec"] is None:
-                return None
-            return f"sec < {hi['max_sec'] - 86400}"
-
-        store.merge_latest(
-            enriched,
-            ["sec", "event_id"],
-            horizon_col="sec",
-            horizon_to_predicate=horizon_pred,
+        # S10+T3: one keep-greatest merge; the `sec` zone maps it records
+        # give the retention horizon after the drain without a job
+        t.commit_merge_on_read(
+            enriched, key="user_id", stats_cols=["sec"], batch_id=batch_id,
+            keep_greatest=["sec", "event_id"],
         )
 
     schema = (
@@ -1014,15 +983,15 @@ def stream_channel_live_counts(
     )
     q.awaitTermination()
 
-    # final retention sweep (S13): buckets no later batch touched may
-    # still hold rows the fused per-batch filter never saw — one expire()
-    # against the final monotone horizon converges them (see merge_latest)
-    if hi["max_sec"] is not None:
-        store.expire(spark, f"sec < {hi['max_sec'] - 86400}")
+    # retention (S13): one DELETE against the final event-time horizon;
+    # keep-latest then retention equals the oracle's latest ∩ window
+    hmax = _zone_max(t, "sec")
+    if hmax is not None:
+        t.commit_delete(spark, f"sec < {hmax - 86400}")
 
     # dual-grain report off the final snapshot: channel grain, then the
     # region (all-channel) grain re-aggregated from it, channel_id = -1
-    snap = store.read(spark)
+    snap = t.read(spark)
     base = snap.select(
         F.expr("sec div 86400").alias("f_day"),
         F.expr("(sec % 86400) div 3600").alias("f_hour"),
@@ -1061,19 +1030,20 @@ def stream_channel_live_counts(
 
 
 # ---------------------------------------------------------------------------
-# CDC oplog apply — MERGE-with-tombstones onto the keyed state store.
+# CDC oplog apply — MERGE-with-tombstones onto a keyed snapshot table.
 # Absent in the reference (its realtime jobs only ever overwrote rows by
 # PK; none processed deletes), but the standard shape of a lakehouse
 # ingestion pipeline: a change feed of upserts and deletes folded into a
 # queryable snapshot (Delta/Hudi `MERGE WHEN MATCHED DELETE`).  The key
 # design point is that tombstones are STATE, not filters: a delete row is
-# merged and kept in the store so that an older update replayed later
+# merged and kept in the table so that an older update replayed later
 # (at-least-once delivery, out-of-order batches) loses to it under the
 # same (sec, event_id) newest-wins rule as everything else — filtering
 # deletes at ingest would resurrect the row.  Deletes are dropped only at
-# READ time.  Per-batch I/O is the store's O(batch ∪ touched buckets);
-# at 100 TB the tombstone population is bounded by the S13 retention pass
-# (expire on the tombstone flag + horizon), same machinery as TTL.
+# READ time.  Per-batch I/O is the merge's O(batch ∪ key-range-pruned
+# incumbents); at 100 TB the tombstone population is bounded by the S13
+# retention pass (commit_delete on the tombstone flag + horizon), same
+# machinery as TTL.
 @query(
     "stream_cdc_apply",
     oracle="""
@@ -1100,17 +1070,18 @@ def stream_cdc_apply(
     """Fold a replayed CDC feed (upserts + deletes) into the live snapshot.
 
     The events table plays the change feed: ``error`` rows are delete
-    tombstones, everything else is an upsert.  Each micro-batch goes
-    through ``PartitionedStateStore.merge_latest`` — one bucket-pruned
-    state pass per batch, newest (sec, event_id) wins, tombstones merge
-    like any row — and the final read drops keys whose WINNING op is a
-    delete.  The oracle is the equivalent batch fold: global keep-latest
-    per user, minus users whose last op was a delete.  Split-independent
-    and replay-idempotent for the same reason merge_latest is.
+    tombstones, everything else is an upsert.  Each micro-batch is one
+    keep-greatest ``commit_merge_on_read`` — newest (sec, event_id) wins,
+    tombstones merge like any row — and the final read drops keys whose
+    WINNING op is a delete.  The oracle is the equivalent batch fold:
+    global keep-latest per user, minus users whose last op was a delete.
+    Split-independent (max is associative and commutative) and
+    replay-idempotent (batch id guard; a replayed row ties, and the
+    incumbent stays).
     """
     from pyspark.sql import functions as F
 
-    from ..sources.sinks import PartitionedStateStore
+    from ..sources.snapshots import SnapshotTable
     from ..sources.tables import load_table
 
     staged = _stage_source_once(
@@ -1120,9 +1091,7 @@ def stream_cdc_apply(
         ).repartitionByRange(n_batches, "event_id").write.mode("overwrite").parquet(p),
     )
 
-    store = PartitionedStateStore(
-        session_dir(spark, "cdc_state_"), ["user_id"], n_buckets=16
-    )
+    t = SnapshotTable(session_dir(spark, "cdc_state_"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         ops = batch_df.select(
@@ -1134,7 +1103,9 @@ def stream_cdc_apply(
             .otherwise(F.lit("U"))
             .alias("op"),
         )
-        store.merge_latest(ops, ["sec", "event_id"])
+        t.commit_merge_on_read(
+            ops, key="user_id", batch_id=batch_id, keep_greatest=["sec", "event_id"]
+        )
 
     schema = (
         "event_id bigint, user_id bigint, event_type string, "
@@ -1154,7 +1125,7 @@ def stream_cdc_apply(
 
     # tombstones drop at READ time, never at ingest
     return (
-        store.read(spark)
+        t.read(spark)
         .where(F.col("op") != "D")
         .select(
             "user_id",
@@ -1347,16 +1318,16 @@ def stream_dual_snapshot_commits(
 # at once: (1) EXACTLY-ONCE: each merge is stamped with its batch_id and a
 # replayed id is skipped whole (no DV, no files — the poisoned replay after
 # the drain proves it via the n_versions=4 literal); (2) NO REWRITE
-# AMPLIFICATION: matched keys die by deletion vector, so every batch writes
-# O(changed rows) and each version carries ALL prior data files
+# AMPLIFICATION: losing rows die by deletion vector, so every batch writes
+# O(batch rows) and each version carries ALL prior data files
 # (n_files_total=4 — one per batch — is the zero-rewrite pin); (3)
-# SPLIT-INDEPENDENT state: the upsert is conditional — the batch's
-# keep-latest challengers are merged against the CURRENT table rows for
-# those keys and only the (ts, event_id)-max row survives — so the final
-# table equals the GLOBAL keep-latest per user no matter how the stream was
-# batched, which is what makes a batching-blind SQL oracle possible.  Per
-# batch: one manifest-scheduled read semi-joined to the batch's keys
-# (broadcast), one window over batch-sized rows, one merge commit.
+# SPLIT-INDEPENDENT state: the upsert is conditional — the merge's
+# keep-greatest rule ranks the batch's rows against the CURRENT table rows
+# for those keys and only the (ts, event_id)-max row survives — so the
+# final table equals the GLOBAL keep-latest per user no matter how the
+# stream was batched, which is what makes a batching-blind SQL oracle
+# possible.  Per batch: one merge commit, whose single window over the
+# batch and its key-range-pruned incumbents writes the deletion vector.
 @query(
     "stream_mor_upsert",
     oracle="""
@@ -1379,7 +1350,6 @@ def stream_dual_snapshot_commits(
 def stream_mor_upsert(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from ..sources.snapshots import SnapshotTable
@@ -1393,31 +1363,12 @@ def stream_mor_upsert(
     )
 
     t = SnapshotTable(session_dir(spark, "morups_tbl_"))
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts_sec").desc(), F.col("event_id").desc()
-    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        challengers = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
+        t.commit_merge_on_read(
+            batch_df, key="user_id", batch_id=batch_id,
+            keep_greatest=["ts_sec", "event_id"],
         )
-        if t.versions():
-            # conditional upsert: current rows for the touched keys defend
-            # their seat; only the (ts_sec, event_id)-max row per user wins
-            incumbents = t.read(spark).join(
-                F.broadcast(challengers.select("user_id").distinct()),
-                "user_id",
-                "left_semi",
-            )
-            challengers = (
-                incumbents.unionByName(challengers)
-                .withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        t.commit_merge_on_read(challengers, key="user_id", batch_id=batch_id)
 
     q = (
         spark.readStream.schema(

@@ -1146,9 +1146,9 @@ def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             # LAZY checkpoint: the convergence count below is the round's
             # first action anyway, so the checkpoint materializes inside it
-            # — one driver job per round instead of two (the merge_latest
-            # persist-fold, guide §5: job count, not bytes, bounds the
-            # per-round cost of a fixed-point loop locally)
+            # — one driver job per round instead of two (guide §5: job
+            # count, not bytes, bounds the per-round cost of a fixed-point
+            # loop locally)
             .localCheckpoint(eager=False)
         )
         changed = new_labels.agg(F.sum("chg")).first()[0]

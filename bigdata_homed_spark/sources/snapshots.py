@@ -1220,6 +1220,7 @@ class SnapshotTable:
         root: str,
         merge_schema: bool,
         partition_types: dict[str, str] | None,
+        schema=None,
     ) -> DataFrame:
         """Scan ONE layout group.  Flat groups read leaf files directly.
         Hive-layout groups read with ``basePath`` (recovering the
@@ -1233,25 +1234,32 @@ class SnapshotTable:
         from it — mixed INT32/INT64 physical types, unreadable table) and
         destroy numeric-looking strings ('0123' -> 123).  Manifests from
         before the record existed (or with untyped keys) fall back to
-        inference, byte-identical to the legacy reader."""
+        inference, byte-identical to the legacy reader.
+
+        ``schema`` (a StructType of in-file columns, when the caller knows
+        it) replaces footer inference, which costs one Spark job per read,
+        and the Hive branch's footer probe; the scan then yields only those
+        columns (plus the path-encoded ones)."""
         paths = [e["path"] for e in group]
         reader = spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
         if not keys:
-            return reader.parquet(*paths)
+            return (reader.schema(schema) if schema else reader).parquet(*paths)
         pt = partition_types or {}
         reader = reader.option("basePath", root)
         if all(c in pt for c in keys):
-            # footer-only probe: leaf-file read, no partition discovery —
-            # yields exactly the in-file columns (partition values live
-            # only in the path for files written via partitionBy)
-            probe = spark.read
-            if merge_schema:
-                probe = probe.option("mergeSchema", "true")
+            if schema is None:
+                # footer-only probe: leaf-file read, no partition discovery
+                # — yields exactly the in-file columns (partition values
+                # live only in the path for files written via partitionBy)
+                probe = spark.read
+                if merge_schema:
+                    probe = probe.option("mergeSchema", "true")
+                schema = probe.parquet(*paths).schema
             file_fields = [
                 f"`{f.name}` {f.dataType.simpleString()}"
-                for f in probe.parquet(*paths).schema.fields
+                for f in schema.fields
                 if f.name not in keys
             ]
             # partition fields append in NESTING order (path segment
@@ -1277,6 +1285,7 @@ class SnapshotTable:
         entries: list[dict] | None = None,
         merge_schema: bool = False,
         with_pos: bool = False,
+        schema=None,
     ) -> DataFrame:
         """Scan ``entries`` (default: all of ``m["files"]``) of manifest
         ``m`` as LOGICAL rows, its deletion vectors subtracted.  Entries are
@@ -1296,7 +1305,10 @@ class SnapshotTable:
         a DV anti-join over an entry subset is safe) — and unions missing
         columns as nulls: a schema-evolved generation may carry columns an
         older one lacks, and a merge condition on the new column is then
-        null=false on old rows, which is the correct DV semantics."""
+        null=false on old rows, which is the correct DV semantics.
+
+        ``schema`` is the in-file (physical) schema when the caller knows
+        it — see ``_scan_group``."""
         from collections import defaultdict
 
         dvs = m.get("delete_files")
@@ -1307,14 +1319,14 @@ class SnapshotTable:
         for keys, root in sorted(groups):
             df = self._scan_group(
                 spark, groups[(keys, root)], keys, root, merge_schema,
-                m.get("partition_types"),
+                m.get("partition_types"), schema,
             )
             dfs.append(self._with_pos(df) if dvs or with_pos else df)
         out = dfs[0]
         for df in dfs[1:]:
             out = out.unionByName(df, allowMissingColumns=merge_schema or with_pos)
         if dvs:
-            out = self._drop_dead(out, spark.read.parquet(*dvs))
+            out = self._drop_dead(out, self._read_dvs(spark, dvs))
             if not with_pos:
                 out = out.drop("__file", "__pos")
         return self._to_logical(
@@ -1333,6 +1345,12 @@ class SnapshotTable:
                 "__pos": F.col("_metadata.row_index"),
             }
         )
+
+    @staticmethod
+    def _read_dvs(spark: SparkSession, dvs: list[str]) -> DataFrame:
+        """The (``__file``, ``__pos``) rows of deletion-vector files, read
+        with their fixed schema: no footer-inference job."""
+        return spark.read.schema("__file string, __pos bigint").parquet(*dvs)
 
     @staticmethod
     def _drop_dead(df: DataFrame, dv_df: DataFrame) -> DataFrame:
@@ -1474,68 +1492,113 @@ class SnapshotTable:
         n_new_files: int = 1,
         stats_cols: list[str] | None = None,
         batch_id: int | None = None,
+        keep_greatest: list[str] | None = None,
     ) -> int:
-        """MERGE with merge-on-read semantics: matched keys' old rows are
-        killed by a deletion vector (no file rewrite), and ``updates``
-        (new values for matched keys + brand-new keys) lands as fresh
-        files.  Write cost is O(updates) + O(matched rows) regardless of
-        how many bytes the hit files hold — the write-amplification win
-        over ``commit_merge`` (copy-on-write), paid back later as a
-        per-read DV anti-join until OPTIMIZE compacts.  ``updates`` must
-        be unique on ``key``.
+        """MERGE with merge-on-read semantics: ``updates`` lands unchanged
+        as fresh files, and every row that loses its key — a matched old
+        row, or a losing batch row — is killed by this commit's deletion
+        vector (no file rewrite).  Write cost is O(updates) + O(matched
+        rows) regardless of how many bytes the hit files hold — the
+        write-amplification win over ``commit_merge`` (copy-on-write), paid
+        back later as a per-read DV anti-join until OPTIMIZE compacts.
+
+        Without a rule the batch row replaces the matched row, and
+        ``updates`` must be unique on ``key``.  ``keep_greatest=[cols]``
+        is the matched-row rule ``WHEN MATCHED AND s.cols > t.cols THEN
+        UPDATE``: ``updates`` may hold several rows per key, and per key
+        the row with the greatest ``cols`` tuple survives (NULL least),
+        whether it comes from the batch or the table; on a full tie the
+        table's row stays, so a replayed row is a no-op.  The first
+        commit on an empty table follows the same rule.  NULL keys never
+        match, as in SQL MERGE.
 
         ``batch_id`` gives the merge the same foreachBatch idempotency
         contract as ``commit_append``: a replayed id is skipped whole —
         no DV, no data files, head returned unchanged — which is what
         makes a streaming CDC-upsert sink exactly-once."""
-        from pyspark.sql import functions as F
-
-        spark = updates.sparkSession
         if batch_id is not None and batch_id in self.committed_batch_ids():
             return self.versions()[-1]
         versions = self.versions()
-        if not versions:
+        if not versions and not keep_greatest:
             return self.commit_append(
                 updates, n_new_files, stats_cols, batch_id=batch_id
             )
         updates = self._apply_generated(updates)
         self._enforce_constraints(updates, self._incoming_constraints())
-        head = versions[-1]
-        m = self._manifest(head)
-        # the verb runs TWO actions over `updates` (the data-file write,
-        # then the DV semi-join + write): persist the batch once instead
-        # of recomputing its upstream plan — which in a streaming merge
-        # includes the incumbent-read join — per action.  Batch-sized
-        # memory, guide §5's "reused AND expensive to recompute" case.
-        updates = updates.persist()
-        try:
-            ext = self._extended_map(updates.columns, m.get("column_map", {}))
-            # the updates land as FLAT new files even on a Hive-partitioned
-            # parent — safe since reads group the layout generations
-            # (_read_entries); the strict guard applies only to
-            # commit_append without evolve=True
-            new, scan = self._write_merge_batch(
-                updates, key, head, n_new_files, stats_cols
-            )
-            dvs = list(m.get("delete_files", []))
-            if scan:
-                doomed = (
-                    self._read_entries(spark, m, scan, with_pos=True)
-                    .join(F.broadcast(updates.select(key).distinct()), key, "left_semi")
-                    .select("__file", "__pos")
+        head = versions[-1] if versions else 0
+        m = self._manifest(head) if versions else {"files": []}
+        mapping = m.get("column_map", {})
+        ext = self._extended_map(updates.columns, mapping)
+        # the updates land as FLAT new files even on a Hive-partitioned
+        # parent — safe since reads group the layout generations
+        # (_read_entries); the strict guard applies only to
+        # commit_append without evolve=True
+        new, scan = self._write_merge_batch(
+            updates, key, head, n_new_files, stats_cols
+        )
+        dvs = list(m.get("delete_files", []))
+        if scan or keep_greatest:
+            # write IS the emptiness probe (footer row count): one action
+            # instead of probe + write, and no doomed persist
+            dvs += self._write_delete_files_nonempty(
+                self._merge_losers(
+                    updates.sparkSession,
+                    {**m, "column_map": ext or mapping},
+                    self._to_physical(updates, mapping).schema,
+                    key, keep_greatest or [], scan, new,
                 )
-                # write IS the emptiness probe (footer row count): one
-                # action instead of probe + write, and no doomed persist
-                dvs += self._write_delete_files_nonempty(doomed)
-            return self._publish(
-                list(m["files"]) + new,
-                batch_id=batch_id,
-                expected_parent=head,
-                delete_files=dvs or None,
-                column_map=ext,
             )
-        finally:
-            updates.unpersist()
+        return self._publish(
+            list(m["files"]) + new,
+            batch_id=batch_id,
+            expected_parent=head,
+            delete_files=dvs or None,
+            column_map=ext,
+        )
+
+    def _merge_losers(
+        self,
+        spark: SparkSession,
+        m: dict,
+        batch_schema,
+        key: str,
+        cols: list[str],
+        scan: list[dict],
+        new: list[dict],
+    ) -> DataFrame:
+        """The (``__file``, ``__pos``) of every row that loses its key in a
+        merge-on-read commit: ONE window over the live rows of ``scan``
+        (the key-range-pruned incumbents) and ``new`` (the batch's freshly
+        written files), partitioned by key, ordered by ``cols`` descending
+        and then incumbent first under a rule, batch first without one;
+        in every key the batch holds, each row ranked below first is dead
+        (keys the batch lacks are untouched, duplicates included).  The
+        scan reads only the key, ``cols`` and the row coordinates, typed
+        from the physical ``batch_schema`` of the files just written (no
+        inference job)."""
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+        from pyspark.sql import types as T
+
+        phys = self._physical_names(m.get("column_map", {}), [key, *cols])
+        schema = T.StructType([batch_schema[c] for c in phys])
+        new_names = [os.path.basename(e["path"]) for e in new]
+        is_new = F.element_at(F.split(F.col("__file"), "/"), -1).isin(new_names)
+        by_key = Window.partitionBy(key)
+        w = by_key.orderBy(
+            *[F.col(c).desc_nulls_last() for c in cols],
+            F.col("__new").asc() if cols else F.col("__new").desc(),
+        )
+        return (
+            self._read_entries(spark, m, scan + new, with_pos=True, schema=schema)
+            .where(F.col(key).isNotNull())
+            .withColumn("__new", is_new)
+            .withColumns(
+                {"__rn": F.row_number().over(w), "__hit": F.max("__new").over(by_key)}
+            )
+            .where((F.col("__rn") > 1) & F.col("__hit"))
+            .select("__file", "__pos")
+        )
 
     def _write_merge_batch(
         self,
@@ -1555,8 +1618,9 @@ class SnapshotTable:
         Returns ``(new entries, entries of version that may hold a batch
         key)``: zone-map routing keeps only incumbents whose key range
         overlaps the batch's (parquet truncation only ever widens a
-        footer's [min, max], and files without a zone map are kept)."""
-        m = self._manifest(version)
+        footer's [min, max], and files without a zone map are kept).
+        A falsy ``version`` is the empty table: nothing to route."""
+        m = self._manifest(version) if version else {"files": []}
         mapping = m.get("column_map", {})
         new = self._write_data_files(
             self._to_physical(updates, mapping),
@@ -1567,7 +1631,9 @@ class SnapshotTable:
         rng = self._key_range_from_footers(new, mapping.get(key, key))
         if rng is None:
             return new, list(m["files"])
-        return new, self.pruned_entries(key, *rng, version=version) if rng else []
+        return new, (
+            self.pruned_entries(key, *rng, version=version) if rng and version else []
+        )
 
     @staticmethod
     def _key_range_from_footers(entries: list[dict], phys_key: str):
@@ -2026,7 +2092,7 @@ class SnapshotTable:
             return []
         kept_names = [os.path.basename(e["path"]) for e in kept]
         surviving = (
-            spark.read.parquet(*dvs)
+            self._read_dvs(spark, dvs)
             .where(F.element_at(F.split(F.col("__file"), "/"), -1).isin(kept_names))
             .select("__file", "__pos")
         )
@@ -2164,7 +2230,7 @@ class SnapshotTable:
             # to fold in — check the DVs for positions in it (DVs are small)
             name = os.path.basename(small[0]["path"])
             folds_deads = bool(dvs) and bool(
-                spark.read.parquet(*dvs)
+                self._read_dvs(spark, dvs)
                 .where(F.element_at(F.split(F.col("__file"), "/"), -1) == name)
                 .limit(1)
                 .count()
@@ -2178,7 +2244,7 @@ class SnapshotTable:
         groups: dict[str, list[dict]] = defaultdict(list)
         for e in small:
             groups[os.path.dirname(e["path"])].append(e)
-        dv_df = spark.read.parquet(*dvs) if dvs else None  # read ONCE
+        dv_df = self._read_dvs(spark, dvs) if dvs else None  # read ONCE
         # one repack job per partition group, fanned out over the
         # maintenance pool (see MAINTENANCE_PARALLELISM); deterministic
         # manifest order = sorted group order
@@ -2292,6 +2358,7 @@ class SnapshotTable:
         from urllib.parse import unquote, urlparse
 
         from pyspark.sql import functions as F
+        from pyspark.sql import types as T
 
         spark = updates.sparkSession
         cur = self._manifest(versions[-1])
@@ -2341,22 +2408,24 @@ class SnapshotTable:
                 .collect()  # bounded: one row per partition-routed file
             )
         if data_entries:
+            # LIVE rows only: a key whose old row a DV already killed must
+            # not mark its file as hit (the rewrite would change nothing);
+            # the key's type comes from the batch, so no inference job
+            key_schema = T.StructType(
+                [T.StructField(phys_key, updates.schema[key].dataType)]
+            )
             hits = (
-                self._to_logical(
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(*[e["path"] for e in data_entries])
-                    .withColumn("__f", F.input_file_name()),
-                    mapping,
-                    keep=("__f",),
+                self._read_entries(
+                    spark, cur, data_entries, with_pos=True, schema=key_schema
                 )
                 .join(F.broadcast(upd_keys), key, "left_semi")
-                .select("__f")
+                .select("__file")
                 .distinct()
                 .collect()
             )  # bounded: at most one row per data file
-            hit_paths.update(unquote(urlparse(r["__f"]).path) for r in hits)
+            hit_paths.update(unquote(urlparse(r["__file"]).path) for r in hits)
         kept = [e for e in cur_entries if e["path"] not in hit_paths]
-        dv_df = spark.read.parquet(*dvs) if dvs else None  # read ONCE
+        dv_df = self._read_dvs(spark, dvs) if dvs else None  # read ONCE
         hit_entries = [
             e
             for e in cur_entries

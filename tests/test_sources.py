@@ -166,170 +166,46 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path_factory):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
-def test_partitioned_state_store_bounded_io(spark, tmp_path):
-    """The keyed state table must rewrite ONLY the hash buckets a batch
-    touches — per-batch I/O proportional to the batch, not the total state
-    (the scale contract for foreachBatch upserts)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from bigdata_homed_spark.sources.sinks import PartitionedStateStore
-
-    path = os.path.join(str(tmp_path), "state")
-    store = PartitionedStateStore(path, ["user_id"], n_buckets=8)
-
-    full = spark.range(0, 200).select(
-        F.col("id").alias("user_id"), F.lit(1).alias("v")
-    )
-    store.upsert(full)
-
-    def bucket_files():
-        out = {}
-        for d in os.listdir(path):
-            if d.startswith(PartitionedStateStore.BUCKET_COL):
-                p = os.path.join(path, d)
-                out[d] = {
-                    (f, os.stat(os.path.join(p, f)).st_mtime_ns)
-                    for f in os.listdir(p)
-                    if f.endswith(".parquet")
-                }
-        return out
-
-    before = bucket_files()
-    assert len(before) == 8  # 200 keys over 8 buckets: all present
-
-    updates = spark.createDataFrame([(7, 99), (8, 99)], "user_id long, v int")
-    touched = store.upsert(updates)
-    assert 0 < len(touched) <= 2
-
-    after = bucket_files()
-    touched_dirs = {f"{PartitionedStateStore.BUCKET_COL}={b}" for b in touched}
-    for d, files in after.items():
-        if d in touched_dirs:
-            assert files != before[d], f"touched bucket {d} not rewritten"
-        else:
-            assert files == before[d], f"untouched bucket {d} was rewritten"
-
-    # merge semantics: updated keys carry the new value, the rest survive
-    state = {r.user_id: r.v for r in store.read(spark).collect()}
-    assert len(state) == 200
-    assert state[7] == 99 and state[8] == 99 and state[9] == 1
-
-
-def test_partitioned_state_store_restart_merges(spark, tmp_path):
-    """Restart contract: a FRESH store instance pointed at existing state
-    must detect it from the filesystem and merge — not treat its first
-    upsert as the initial load and wholesale-replace touched buckets
-    (which would silently drop other keys' state after a driver restart)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from bigdata_homed_spark.sources.sinks import PartitionedStateStore
-
-    path = os.path.join(str(tmp_path), "state")
-    PartitionedStateStore(path, ["user_id"], n_buckets=4).upsert(
-        spark.range(0, 100).select(F.col("id").alias("user_id"), F.lit(1).alias("v"))
-    )
-
-    # simulate a restart: brand-new instance, same path
-    store2 = PartitionedStateStore(path, ["user_id"], n_buckets=4)
-    store2.upsert(spark.createDataFrame([(3, 99)], "user_id long, v int"))
-
-    state = {r.user_id: r.v for r in store2.read(spark).collect()}
-    assert len(state) == 100, "restart upsert dropped other keys' state"
-    assert state[3] == 99 and state[4] == 1
-
-
 def test_partitioned_state_store_merge_latest(spark, tmp_path):
-    """merge_latest fuses read_for_keys + keep-latest + upsert into ONE
-    state pass: the greatest (order_cols) row wins per key, intra-batch
-    duplicates collapse, untouched keys survive, an out-of-order batch
-    cannot regress newer state, and a replayed batch is a no-op."""
+    """The keep-greatest merge-on-read commit is the keyed state path: the
+    greatest (keep_greatest) row wins per key, intra-batch duplicates
+    collapse, untouched keys survive, an out-of-order batch cannot regress
+    newer state, and a replayed batch is a no-op — also through a fresh
+    ``SnapshotTable`` instance on the same path (restart: the state is
+    found from the manifests, never re-loaded over)."""
     import os
 
-    from bigdata_homed_spark.sources.sinks import PartitionedStateStore
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
     path = os.path.join(str(tmp_path), "state")
-    store = PartitionedStateStore(path, ["user_id"], n_buckets=4)
+    t = SnapshotTable(path)
 
     def snap():
-        return {r.user_id: (r.sec, r.v) for r in store.read(spark).collect()}
+        return {r.user_id: (r.sec, r.v) for r in t.read(spark).collect()}
 
     schema = "user_id long, sec long, v string"
     # intra-batch duplicate keys: only the newest survives
-    store.merge_latest(
+    t.commit_merge_on_read(
         spark.createDataFrame([(1, 10, "a"), (1, 20, "b"), (2, 5, "c")], schema),
-        ["sec"],
+        "user_id",
+        keep_greatest=["sec"],
     )
     assert snap() == {1: (20, "b"), 2: (5, "c")}
 
     # out-of-order batch: older row for user 1 must not regress the state
     late = spark.createDataFrame([(1, 15, "z"), (3, 7, "d")], schema)
-    store.merge_latest(late, ["sec"])
+    t.commit_merge_on_read(late, "user_id", keep_greatest=["sec"])
     assert snap() == {1: (20, "b"), 2: (5, "c"), 3: (7, "d")}
 
-    # at-least-once replay of the same batch: a no-op
-    store.merge_latest(late, ["sec"])
+    # a full tie on sec keeps the incumbent row
+    tie = spark.createDataFrame([(2, 5, "tie")], schema)
+    t.commit_merge_on_read(tie, "user_id", keep_greatest=["sec"])
     assert snap() == {1: (20, "b"), 2: (5, "c"), 3: (7, "d")}
 
-
-def test_partitioned_state_store_expire_bounded_io(spark, tmp_path):
-    """Retention (S13 raw-DML analog): expire(predicate) removes matching
-    rows rewriting ONLY buckets that contain them; buckets with no expired
-    rows keep byte-identical files, and a bucket whose every row expires is
-    dropped entirely."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from bigdata_homed_spark.sources.sinks import PartitionedStateStore
-
-    path = os.path.join(str(tmp_path), "state")
-    store = PartitionedStateStore(path, ["user_id"], n_buckets=8)
-    store.upsert(
-        spark.range(0, 200).select(
-            F.col("id").alias("user_id"), (F.col("id") % 50).alias("f_date")
-        )
-    )
-
-    def bucket_files():
-        out = {}
-        for d in os.listdir(path):
-            if d.startswith(PartitionedStateStore.BUCKET_COL):
-                p = os.path.join(path, d)
-                out[d] = {
-                    (f, os.stat(os.path.join(p, f)).st_mtime_ns)
-                    for f in os.listdir(p)
-                    if f.endswith(".parquet")
-                }
-        return out
-
-    before = bucket_files()
-    touched = store.expire(spark, "f_date < 2")  # user_id % 50 in {0,1}
-    after = bucket_files()
-    touched_dirs = {f"{PartitionedStateStore.BUCKET_COL}={b}" for b in touched}
-    for d, files in before.items():
-        if d not in touched_dirs:
-            assert after[d] == files, f"untouched bucket {d} was rewritten"
-    state = store.read(spark)
-    assert state.where("f_date < 2").count() == 0
-    assert state.count() == 200 - 8  # 4 ids per residue class 0 and 1
-
-    # full-bucket expiry: every remaining row matches → all bucket dirs
-    # removed (an un-rewritten dir here would mean expired rows live on)
-    store.expire(spark, "f_date >= 0")
-    assert not any(
-        d.startswith(PartitionedStateStore.BUCKET_COL) for d in os.listdir(path)
-    )
-
-    # the store must stay USABLE after expiring everything: the next
-    # upsert is an initial load, not a merge against an empty directory
-    store.upsert(
-        spark.createDataFrame([(1, 0), (2, 1)], "user_id long, f_date long")
-    )
-    assert {r.user_id for r in store.read(spark).collect()} == {1, 2}
+    # at-least-once replay of the same batch, after a restart: a no-op
+    t = SnapshotTable(path)
+    t.commit_merge_on_read(late, "user_id", keep_greatest=["sec"])
+    assert snap() == {1: (20, "b"), 2: (5, "c"), 3: (7, "d")}
 
 
 def test_table_inventory(spark, sf_dir):
@@ -349,28 +225,32 @@ def test_table_inventory(spark, sf_dir):
 
 
 def test_partitioned_state_store_model_based(spark, tmp_path):
-    """Model check: arbitrary interleavings of upsert/expire must leave the
-    store equal to a plain-dict model (hypothesis drives the sequences;
-    failures shrink to a minimal op list).  Catches ordering/lifecycle bugs
-    the single-path tests can't — e.g. the upsert-after-full-expiry crash
-    fixed in round 3."""
+    """Model check of the keyed state path (keep-greatest
+    ``commit_merge_on_read`` + ``commit_delete`` retention): arbitrary
+    interleavings of batches with intra-batch duplicate and out-of-order
+    keys, retention cutoffs, and replays of the last batch under its own
+    batch id (skipped) or a new one (every row ties, the incumbent stays)
+    must leave the table equal to a plain-dict model (hypothesis drives
+    the sequences; failures shrink to a minimal op list)."""
     import os
 
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from bigdata_homed_spark.sources.sinks import PartitionedStateStore
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
     op = st.one_of(
         st.tuples(
-            st.just("upsert"),
+            st.just("merge"),
             st.lists(
-                st.tuples(st.integers(0, 15), st.integers(0, 9)),
+                st.tuples(st.integers(0, 7), st.integers(0, 9)),
                 min_size=1,
                 max_size=6,
+                unique=True,
             ),
         ),
-        st.tuples(st.just("expire"), st.integers(0, 9)),
+        st.tuples(st.just("delete"), st.integers(0, 9)),
+        st.tuples(st.just("replay"), st.booleans()),
     )
 
     case_n = [0]
@@ -383,30 +263,48 @@ def test_partitioned_state_store_model_based(spark, tmp_path):
     @given(ops=st.lists(op, min_size=1, max_size=5))
     def run(ops):
         case_n[0] += 1
-        path = os.path.join(str(tmp_path), f"model_state_{case_n[0]}")
-        store = PartitionedStateStore(path, ["k"], n_buckets=4)
-        model: dict[int, int] = {}
+        t = SnapshotTable(os.path.join(str(tmp_path), f"model_state_{case_n[0]}"))
+        model: dict[int, tuple[int, str]] = {}
+        last = None  # (batch id, rows) of the latest merge
+        next_id = 0
+
+        def merge(batch_id, rows):
+            t.commit_merge_on_read(
+                spark.createDataFrame(rows, "k long, sec long, v string"),
+                "k",
+                batch_id=batch_id,
+                keep_greatest=["sec"],
+            )
+            for k, sec, v in sorted(rows, key=lambda r: -r[1]):
+                # the batch's greatest row per key wins a strictly greater
+                # sec only; a full tie keeps the incumbent
+                if k not in model or sec > model[k][0]:
+                    model[k] = (sec, v)
+
         for kind, arg in ops:
-            if kind == "upsert":
-                # last value per key within a batch wins in the MODEL; give
-                # the store the same per-key-deduped batch (its contract is
-                # keyed upsert, not intra-batch ordering)
-                dedup: dict[int, int] = {}
-                for k, v in arg:
-                    dedup[k] = v
-                store.upsert(
-                    spark.createDataFrame(
-                        [(k, v) for k, v in dedup.items()], "k long, v long"
+            if kind == "merge":
+                # v names the batch, so which side won a full tie shows
+                last = (next_id, [(k, sec, f"b{next_id}") for k, sec in arg])
+                merge(*last)
+                next_id += 1
+            elif kind == "replay" and last is not None:
+                if arg:  # same id: skipped whole, the model is unchanged
+                    n_versions = len(t.versions())
+                    t.commit_merge_on_read(
+                        spark.createDataFrame(last[1], "k long, sec long, v string"),
+                        "k",
+                        batch_id=last[0],
+                        keep_greatest=["sec"],
                     )
-                )
-                model.update(dedup)
-            else:
-                cutoff = arg
-                if model:
-                    store.expire(spark, f"v < {cutoff}")
-                    model = {k: v for k, v in model.items() if v >= cutoff}
-        if model:
-            got = {r.k: r.v for r in store.read(spark).collect()}
+                    assert len(t.versions()) == n_versions
+                else:  # a new id: relabelled, so a tie shows its winner
+                    merge(next_id, [(k, sec, f"b{next_id}") for k, sec, _ in last[1]])
+                    next_id += 1
+            elif kind == "delete" and t.versions():
+                t.commit_delete(spark, f"sec < {arg}")
+                model = {k: r for k, r in model.items() if r[0] >= arg}
+        if t.versions():
+            got = {r.k: (r.sec, r.v) for r in t.read(spark).collect()}
             assert got == model, (ops, got, model)
 
     run()
@@ -449,16 +347,15 @@ def test_state_store_snapshot_retention_policy(spark, tmp_path):
     the CURRENT snapshot, the PREVIOUS one, and 24h of on-the-hour
     snapshots, deleting everything else.  The reference issued per-type
     raw DELETEs with stacked `f_date_time != …` predicates; here the same
-    policy is ONE expire() predicate over the snapshot column — bounded
-    I/O, no driver loop."""
+    policy is ONE ``commit_delete`` predicate over the snapshot column —
+    a deletion vector, no file rewrite, no driver loop."""
     import os
 
     from pyspark.sql import functions as F
 
-    from bigdata_homed_spark.sources.sinks import PartitionedStateStore
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
-    path = os.path.join(str(tmp_path), "nodes")
-    store = PartitionedStateStore(path, ["snap_sec"], n_buckets=4)
+    t = SnapshotTable(os.path.join(str(tmp_path), "nodes"))
     now = 200 * 3600 + 1800  # current snapshot: a half-hour mark
     prev = now - 1800
     # snapshots every 30 min for 3 days
@@ -466,14 +363,14 @@ def test_state_store_snapshot_retention_policy(spark, tmp_path):
         (F.lit(now) - F.col("id") * 1800).alias("snap_sec"),
         F.lit(1).alias("n_users"),
     )
-    store.upsert(snaps)
+    t.commit_append(snaps)
     keep = (
         (F.col("snap_sec") == now)
         | (F.col("snap_sec") == prev)
         | ((F.col("snap_sec") % 3600 == 0) & (F.col("snap_sec") > now - 86400))
     )
-    store.expire(spark, ~keep)
-    left = {r.snap_sec for r in store.read(spark).collect()}
+    t.commit_delete(spark, ~keep)
+    left = {r.snap_sec for r in t.read(spark).collect()}
     assert now in left and prev in left
     hourly = {s for s in left if s not in (now, prev)}
     assert all(s % 3600 == 0 and s > now - 86400 for s in hourly)
@@ -562,26 +459,28 @@ def test_merge_latest_tombstone_not_resurrected(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from bigdata_homed_spark.sources.sinks import PartitionedStateStore
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
     path = os.path.join(str(tmp_path), "state")
-    store = PartitionedStateStore(path, ["user_id"], n_buckets=4)
+    t = SnapshotTable(path)
     schema = "user_id long, sec long, op string"
 
     upsert = spark.createDataFrame([(1, 10, "U"), (2, 11, "U")], schema)
     delete = spark.createDataFrame([(1, 20, "D")], schema)
 
-    store.merge_latest(upsert, ["sec"])
-    store.merge_latest(delete, ["sec"])
-    # at-least-once: the ORIGINAL upsert batch arrives again, after the delete
-    store.merge_latest(upsert, ["sec"])
+    t.commit_merge_on_read(upsert, "user_id", keep_greatest=["sec"])
+    t.commit_merge_on_read(delete, "user_id", keep_greatest=["sec"])
+    # at-least-once: the ORIGINAL upsert batch arrives again, after the
+    # delete, through a fresh instance (restart)
+    t = SnapshotTable(path)
+    t.commit_merge_on_read(upsert, "user_id", keep_greatest=["sec"])
 
     live = {
-        r.user_id for r in store.read(spark).where(F.col("op") != "D").collect()
+        r.user_id for r in t.read(spark).where(F.col("op") != "D").collect()
     }
     assert live == {2}, "replayed older upsert resurrected a deleted key"
     # the tombstone itself is still present in state (not filtered at ingest)
-    assert {r.user_id: r.op for r in store.read(spark).collect()} == {1: "D", 2: "U"}
+    assert {r.user_id: r.op for r in t.read(spark).collect()} == {1: "D", 2: "U"}
 
 
 def test_snapshot_table_time_travel_and_atomicity(spark, tmp_path):
@@ -1284,6 +1183,58 @@ def test_snapshot_merge_on_read_vs_copy_on_write(spark, tmp_path):
     m = json.load(open(os.path.join(t.manifest_dir, f"v{v3}.json")))
     assert "delete_files" not in m  # OPTIMIZE purged the DVs
     assert t.read(spark).count() == 102
+
+
+def test_snapshot_merge_on_read_leaves_keys_outside_the_batch(spark, tmp_path):
+    """The merge-on-read DV decides only the keys the batch holds: rows of
+    other keys survive even when they duplicate each other, with or
+    without the keep_greatest rule (a NULL batch key matches nothing)."""
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
+
+    schema = "k long, sec long, v string"
+    t = SnapshotTable(str(tmp_path / "untouched"))
+    t.commit_append(
+        spark.createDataFrame([(5, 1, "a"), (5, 2, "b"), (6, 1, "c")], schema),
+        stats_cols=["k"],
+    )
+    t.commit_merge_on_read(
+        spark.createDataFrame([(None, 9, "n"), (6, 3, "d")], schema), "k"
+    )
+    t.commit_merge_on_read(
+        spark.createDataFrame([(None, 9, "m"), (7, 1, "e")], schema),
+        "k",
+        keep_greatest=["sec"],
+    )
+    assert sorted(r.v for r in t.read(spark).collect()) == [
+        "a", "b", "d", "e", "m", "n"
+    ]
+
+
+def test_snapshot_cow_merge_skips_file_whose_match_is_dv_dead(spark, tmp_path):
+    """Copy-on-write hit detection reads LIVE rows: a key whose only old
+    row a deletion vector already killed does not mark its file as hit, so
+    a merge re-inserting that key carries both files untouched (no
+    needless rewrite) and the rows still equal a dict model."""
+    from pyspark.sql import functions as F
+
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path / "cow_dv"))
+    for lo, hi in ((1, 6), (6, 11)):
+        t.commit_append(
+            spark.range(lo, hi).select(
+                F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+            ),
+            stats_cols=["k"],
+        )
+    originals = t.files()
+    assert len(originals) == 2
+    t.commit_delete(spark, "k = 3")
+    t.commit_merge(spark.createDataFrame([(3, -3)], "k long, v long"), "k")
+    assert set(originals) <= set(t.files())
+    model = {k: k * 10 for k in range(1, 11)}
+    model[3] = -3
+    assert {r.k: r.v for r in t.read(spark).collect()} == model
 
 
 def test_snapshot_dv_restore_append_and_vacuum(spark, tmp_path):

@@ -248,11 +248,9 @@ def test_incremental_dedup_batch_replay_is_idempotent(spark, tmp_path):
     batch_id) must leave the fingerprint index byte-identical (no
     n_copies double-count), while a NEW batch id still merges."""
     from bigdata_homed_spark.plans.streaming_queries import dedup_merge_batch
-    from bigdata_homed_spark.sources.sinks import PartitionedStateStore
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
-    store = PartitionedStateStore(
-        str(tmp_path / "idx"), ["text_hash"], n_buckets=4
-    )
+    store = SnapshotTable(str(tmp_path / "idx"))
     b0 = spark.createDataFrame(
         [(1, "alpha", "s1"), (2, "alpha", "s1"), (3, "beta", "s2")],
         "doc_id bigint, text string, source string",

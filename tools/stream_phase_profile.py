@@ -1,7 +1,7 @@
 """Phase profiler for the streaming/foreachBatch registry queries: wraps
-the shared machinery (SnapshotTable verbs, PartitionedStateStore verbs,
-DataFrameWriter.parquet staging writes, streaming query await) with
-timers and prints a per-call cost breakdown for one query run.
+the shared machinery (SnapshotTable verbs, DataFrameWriter.parquet
+staging writes, streaming query await) with timers and prints a per-call
+cost breakdown for one query run.
 
 Usage: python tools/stream_phase_profile.py SF_DIR query [query ...]
 """
@@ -44,14 +44,11 @@ def main() -> None:
     from pyspark.sql.readwriter import DataFrameWriter
     from pyspark.sql.streaming.query import StreamingQuery
 
-    from bigdata_homed_spark.sources import sinks as sk
     from bigdata_homed_spark.sources import snapshots as sn
 
     for m in ("commit_append", "commit_merge_on_read", "commit_delete",
               "read", "_write_data_files", "versions", "committed_batch_ids"):
         _wrap(sn.SnapshotTable, m, f"SnapshotTable.{m}")
-    for m in ("merge_latest", "upsert", "expire", "read", "read_for_keys"):
-        _wrap(sk.PartitionedStateStore, m, f"Store.{m}")
     _wrap(DataFrameWriter, "parquet", "writer.parquet")
     _wrap(StreamingQuery, "awaitTermination", "stream.await")
     _wrap(DataFrame, "collect", "df.collect")
