@@ -1,4 +1,5 @@
-"""Iterative graph operators: deterministic weighted PageRank.
+"""Iterative graph operators: deterministic weighted PageRank (uniform or
+seeded teleport), label propagation and min-label connected components.
 
 The reference has no graph jobs, but a training-data curation stack does:
 CommonCrawl-style corpora rank domains/hosts by link authority to weight
@@ -19,20 +20,20 @@ ranking order, not stochastic-matrix purity, is the product.
 
 Scale shape (the Pregel-on-DataFrame loop):
 - edges carry their source's total strength, attached ONCE before the loop
-  and localCheckpointed — the loop never recomputes it;
+  by a window over ``src`` and localCheckpointed — the loop never
+  recomputes it;
 - each iteration is one equi-join (ranks ⋈ edges on src) + one shuffle on
   dst for the contribution sum — O(E) work per round, no broadcast of
-  anything sized O(V);
+  anything sized O(V) unless the caller asks for it;
 - iteration count is FIXED (caller-chosen), not convergence-tested: a
   deterministic output needs a deterministic round count, and fixed-k
   power iteration is how production systems bound the cost anyway.  A
-  fixed count also means the loop needs NO per-round action: unlike the
-  convergence-checked connected-components loop (plans/text_pipeline.py,
-  one eager localCheckpoint per round to evaluate the changed-count), the
-  whole k-round recurrence is ONE lazy plan executed by the final action
-  — shuffles chain stage-to-stage, nothing is re-materialized per round.
-  Ranks are localCheckpointed only every ``checkpoint_every`` rounds to
-  bound plan depth for large k.
+  fixed count also means the loop needs no per-round action of its own
+  (the convergence-checked ``min_label_components`` below needs one per
+  round): the k rounds are one lazy plan run by the caller's action.
+  Under AQE each round's shuffle and broadcast still runs as its own
+  job, so every round costs jobs either way; ranks are localCheckpointed
+  every ``checkpoint_every`` rounds only to bound plan depth for large k.
 At 100 TB the same loop runs unchanged: both joins shuffle on the node id,
 so co-partitioning carries between rounds under AQE; per-round cost is
 linear in edges.
@@ -40,7 +41,7 @@ linear in edges.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 # fixed-point: 1.0 of rank mass == 10^12.  Headroom check: pr <= ~PR_SCALE,
@@ -52,11 +53,33 @@ PR_DAMPING_PCT = 85  # 0.85 damping, as an integer percentage
 PR_TELEPORT = (100 - PR_DAMPING_PCT) * PR_SCALE // 100
 
 
+def symmetrize(e0: DataFrame, w_col: str | None = None) -> DataFrame:
+    """(p1, p2[, w_col]) -> (src, dst[, w]): both edge directions in ONE
+    pass over e0.
+
+    The ``e0.select(...).union(e0.select(...))`` spelling embeds the whole
+    pair-build subtree twice in the plan, and physical exchange reuse does
+    not always recover that (it never recovers the duplicated map-side
+    work before the agg).  An in-row explode of the two directions reads
+    e0 once.
+    """
+    w = [F.col(w_col).alias("w")] if w_col else []
+    return e0.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("p1").alias("src"), F.col("p2").alias("dst"), *w),
+                F.struct(F.col("p2").alias("src"), F.col("p1").alias("dst"), *w),
+            )
+        ).alias("e")
+    ).select("e.*")
+
+
 def pagerank_ranks(
     edges: DataFrame,
     iterations: int = 8,
     checkpoint_every: int = 4,
     broadcast_ranks: bool = False,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Weighted PageRank over a DIRECTED edge list ``(src, dst, w)``.
 
@@ -67,11 +90,24 @@ def pagerank_ranks(
     join + one aggregation: no per-round left-join repair of nodes that
     received nothing.
 
-    Returns ``(node, pr_rank)`` with ``pr_rank`` the fixed-point bigint
-    rank after ``iterations`` rounds from a uniform ``PR_SCALE`` start:
+    Returns ``(node, pr_rank)``, the fixed-point bigint rank after
+    ``iterations`` rounds of
 
         out_share(u→v)  = (pr_u * w_uv) div strength_u      (exact bigint)
-        pr'_v           = PR_TELEPORT + (85 * Σ in_shares) div 100
+        pr'_v           = tp_v + (85 * Σ in_shares) div 100
+
+    ``seeds=None`` is uniform PageRank: every node starts at ``PR_SCALE``
+    and ``tp_v = PR_TELEPORT`` everywhere.  A ``(node,)`` seed frame makes
+    it TrustRank / personalized PageRank (Gyongyi et al., VLDB'04;
+    Haveliwala, WWW'02): seeds start at ``PR_SCALE`` and everyone else at
+    0, the teleport lands on the seeds only (``tp_v = PR_TELEPORT`` for a
+    seed, 0 otherwise), and nodes whose rank is 0 are dropped.  Trust
+    flows outward from the seeds and decays with distance, which is how a
+    curation stack weights sources by proximity to a hand-vetted
+    whitelist.  The teleport is a FULL OUTER join of the seed frame with
+    the contribution aggregate: a seed with no ranked in-neighbors must
+    still be re-injected.  Seeded mass is bounded by |S| * PR_SCALE /
+    0.15, so pr * w stays far inside bigint for any dim-sized seed set.
 
     ``broadcast_ranks=True`` is the dimension-sized-V mode: when the
     vertex set is a dim (parts, hosts, channels — millions of rows, tens
@@ -82,48 +118,42 @@ def pagerank_ranks(
     shuffle join, O(E) per round, for graphs whose vertex set itself is
     data-sized (e.g. per-document graphs).  Same math, same result.
     """
-    # the edge list feeds BOTH the strength aggregate and the join below;
-    # without the persist the caller's whole edge-build subtree (pair
-    # expansion + aggregation) executes once per consumer — persist it for
-    # the duration of the checkpoint build, then drop the cache
-    edges = edges.persist()
-    strength = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("s"))
-    # attach strength once; the loop re-reads this checkpoint every round.
-    # In dim-sized-V mode the strength frame is V-sized by the same
-    # argument as the rank broadcast — force the broadcast so the E-sized
-    # edge list is never shuffled for this join (post-aggregation size
-    # estimates are unreliable, guide §3.1; measured 3.0 → 2.3 s warm on
-    # the sf0.1 co-purchase build)
-    s_side = F.broadcast(strength) if broadcast_ranks else strength
-    edges_s = (
-        edges.join(s_side, "src").select("src", "dst", "w", "s").localCheckpoint()
-    )
-    edges.unpersist()
-    # initial ranks come from the CHECKPOINTED frame (distinct src ==
-    # strength's key set), not from `strength`, whose plan would re-run
-    # the edge build a third time after the unpersist
-    ranks = edges_s.select(F.col("src").alias("node")).distinct().select(
-        "node", F.lit(PR_SCALE).cast("bigint").alias("pr")
-    )
+    # strength rides on each edge row: one shuffle of the edge list on src
+    # and the caller's edge subtree runs once, here.  The loop re-reads
+    # this checkpoint every round.
+    edges_s = edges.select(
+        "src",
+        "dst",
+        "w",
+        F.sum("w").over(Window.partitionBy("src")).cast("bigint").alias("s"),
+    ).localCheckpoint()
+    if seeds is None:
+        tp = F.lit(PR_TELEPORT)
+        ranks = edges_s.select(F.col("src").alias("node")).distinct()
+    else:
+        seed_tp = seeds.select(
+            "node", F.lit(PR_TELEPORT).cast("bigint").alias("tp")
+        ).localCheckpoint()
+        tp = F.coalesce(F.col("tp"), F.lit(0))
+        ranks = seeds.select("node")
+    ranks = ranks.select("node", F.lit(PR_SCALE).cast("bigint").alias("pr"))
     for i in range(iterations):
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-        ranks = (
-            edges_s.join(rank_side, edges_s["src"] == rank_side["node"])
-            .select(F.col("dst"), F.expr("(pr * w) div s").alias("share"))
-            .groupBy("dst")
-            .agg(F.sum("share").cast("bigint").alias("incoming"))
-            .select(
-                F.col("dst").alias("node"),
-                (
-                    F.lit(PR_TELEPORT)
-                    + F.expr(f"({PR_DAMPING_PCT} * incoming) div 100")
-                )
-                .cast("bigint")
-                .alias("pr"),
-            )
+        if i == 0 and seeds is None:
+            # every rank is still PR_SCALE: round 1 reads the edges alone
+            ranked = edges_s.withColumn("pr", F.lit(PR_SCALE).cast("bigint"))
+        else:
+            rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
+            ranked = edges_s.join(rank_side, edges_s["src"] == rank_side["node"])
+        incoming = ranked.groupBy(F.col("dst").alias("node")).agg(
+            F.sum(F.expr("(pr * w) div s")).cast("bigint").alias("incoming")
         )
-        # bound plan depth for large iteration counts; intermediate rounds
-        # stay lazy so the recurrence executes as one chained-shuffle job
+        if seeds is not None:
+            incoming = seed_tp.join(incoming, "node", "full_outer")
+        pr = tp + F.expr(f"({PR_DAMPING_PCT} * coalesce(incoming, 0)) div 100")
+        ranks = incoming.select("node", pr.cast("bigint").alias("pr"))
+        if seeds is not None:
+            ranks = ranks.where(F.col("pr") > 0)
+        # bound plan depth for large iteration counts
         if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
             ranks = ranks.localCheckpoint()
     return ranks.select("node", F.col("pr").alias("pr_rank"))
@@ -198,8 +228,6 @@ def label_propagation(
     anti-join is V-sized on BOTH sides and rides the same broadcast.
     Default False is the huge-V mode: keyed shuffle joins, for graphs
     whose vertex set itself is data-sized.  Same math, same result."""
-    from pyspark.sql import Window
-
     edges = edges.localCheckpoint(eager=False)
     seeds = seeds.localCheckpoint(eager=False)
     seed_nodes = seeds.select("node")
@@ -274,79 +302,67 @@ def label_propagation_oracle_ctes(
 
 
 # ---------------------------------------------------------------------------
-# Personalized PageRank / TrustRank (Gyongyi et al., VLDB'04; Haveliwala
-# WWW'02): identical fixed-point recurrence, but the teleport mass lands
-# ONLY on a trusted seed set — trust flows outward from seeds through
-# edges and decays with distance, which is how curation stacks weight
-# sources by proximity to a hand-vetted whitelist (and how "spam mass" is
-# measured: rank under uniform teleport minus rank under trusted
-# teleport).  Seeds start at PR_SCALE, everyone else at 0; each round:
+# Connected components by min-label propagation: every node starts labeled
+# with its own id, and each round every node takes the least label among
+# itself and its neighbors.  Labels only decrease, so the loop ends, and on
+# convergence every node carries the least id of its component.  The number
+# of rounds follows the largest component's diameter (a path of n nodes
+# takes n rounds), not log n, so the loop runs until a round changes no
+# label: a round cap would return wrong components, not approximate ones.
 #
-#     pr'_v = [v in S] * PR_TELEPORT + (85 * sum in_shares) div 100
-#
-# The teleport injection is a FULL OUTER join of the seed frame with the
-# contribution aggregate (a seed with no ranked in-neighbors must still
-# be re-injected; an aggregation-only recurrence would drop it).  All
-# bigint, same determinism argument as pagerank_ranks.  Mass is bounded
-# by |S| * PR_SCALE / 0.15, so pr * w stays far inside bigint for any
-# dim-sized seed set.
+# Scale shape: per round one join (edges ⋈ labels on src) and one
+# aggregate on node, cut by an eager localCheckpoint.  The checkpoint's own
+# job also counts the round's changed labels through an Observation, so the
+# convergence test adds no job.
 
 
-def trustrank_ranks(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iterations: int = 4,
-    checkpoint_every: int = 4,
-    dim_sized_v: bool = False,
-) -> DataFrame:
-    """``edges``: (src, dst, w) directed (symmetrize for undirected);
-    ``seeds``: (node,).  Returns (node, trust) for nodes with trust > 0
-    after ``iterations`` rounds.
+def min_label_components(edges: DataFrame) -> DataFrame:
+    """``edges``: (src, dst) SYMMETRIC — every edge in both directions, as
+    ``symmetrize`` makes it.  Returns (node, label) for every node with an
+    edge, ``label`` the least node id in its connected component."""
 
-    ``dim_sized_v=True`` is the pagerank_ranks ``broadcast_ranks`` analog
-    for the strength attachment: when the vertex set is dimension-sized,
-    broadcasting the V-row strength frame keeps the E-sized edge list
-    un-shuffled through this join (guide §3.1 — post-agg size estimates
-    are unreliable, so the hint is explicit)."""
-    # same dedup as pagerank_ranks: the edge subtree feeds strength AND
-    # the join — persist across the checkpoint build
-    edges = edges.persist()
-    strength = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("s"))
-    s_side = F.broadcast(strength) if dim_sized_v else strength
-    edges_s = (
-        edges.join(s_side, "src").select("src", "dst", "w", "s").localCheckpoint()
+    def checkpoint(frame: DataFrame) -> tuple[DataFrame, int]:
+        # frame: (node, label, chg); returns (node, label) and the chg count
+        obs = Observation()
+        frame = (
+            frame.observe(obs, F.sum(F.col("chg").cast("bigint")).alias("n"))
+            .drop("chg")
+            .localCheckpoint()
+        )
+        return frame, obs.get["n"] or 0
+
+    # eager: the caller's edge subtree runs once, here; every round
+    # re-reads the checkpoint
+    sym = edges.select("src", "dst").localCheckpoint()
+    # every label starts as the node's own id, so round 1 reads the edges
+    # alone: each node takes the least of itself and its neighbors
+    labels, changed = checkpoint(
+        sym.groupBy(F.col("dst").alias("node"))
+        .agg(F.min("src").alias("nbr_min"))
+        .select(
+            "node",
+            F.least("node", "nbr_min").alias("label"),
+            (F.col("nbr_min") < F.col("node")).alias("chg"),
+        )
     )
-    edges.unpersist()
-    seed_tp = seeds.select(
-        "node", F.lit(PR_TELEPORT).cast("bigint").alias("tp")
-    ).localCheckpoint()
-    ranks = seeds.select("node", F.lit(PR_SCALE).cast("bigint").alias("pr"))
-    for i in range(iterations):
-        contrib = (
-            edges_s.join(ranks, edges_s["src"] == ranks["node"])
-            .select(F.col("dst"), F.expr("(pr * w) div s").alias("share"))
-            .groupBy("dst")
-            .agg(F.sum("share").cast("bigint").alias("incoming"))
-            .select(F.col("dst").alias("node"), "incoming")
+    while changed:
+        msgs = (
+            sym.join(labels, sym["src"] == labels["node"])
+            .groupBy(F.col("dst").alias("id2"))
+            .agg(F.min("label").alias("nbr_min"))
         )
-        ranks = (
-            seed_tp.join(contrib, "node", "full_outer")
-            .select(
+        labels, changed = checkpoint(
+            labels.join(msgs, labels["node"] == msgs["id2"]).select(
                 "node",
-                (
-                    F.coalesce(F.col("tp"), F.lit(0))
-                    + F.expr(
-                        f"({PR_DAMPING_PCT} * coalesce(incoming, 0)) div 100"
-                    )
-                )
-                .cast("bigint")
-                .alias("pr"),
+                F.least("label", "nbr_min").alias("label"),
+                (F.col("nbr_min") < F.col("label")).alias("chg"),
             )
-            .where(F.col("pr") > 0)
         )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < iterations:
-            ranks = ranks.localCheckpoint()
-    return ranks.select("node", F.col("pr").alias("trust"))
+    return labels
+
+
+# ---------------------------------------------------------------------------
+# TrustRank oracle: the seeded recurrence of pagerank_ranks(seeds=...).
 
 
 def trustrank_oracle_ctes(

@@ -32,6 +32,7 @@ from ..operators.graph import (
     label_propagation_oracle_ctes,
     pagerank_oracle_ctes,
     pagerank_ranks,
+    symmetrize,
     trustrank_oracle_ctes,
 )
 from .registry import query
@@ -98,7 +99,7 @@ def pagerank_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("pp.p1", "pp.p2")
     )
     e0 = pairs.groupBy("p1", "p2").agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-    edges = _symmetrize(e0, "w")
+    edges = symmetrize(e0, "w")
     # V here is the PART dimension (dim-sized at every SF: ~2 MB per
     # million parts at 16 B/row), so the broadcast-ranks mode applies —
     # each round is a map-side join over the checkpointed edge list.
@@ -116,33 +117,6 @@ def pagerank_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # order's distinct part set (arrays bounded by order size), then the i<j
 # expansion is whole-stage-codegen array algebra — the fact is NEVER
 # self-joined, so there is exactly one shuffle regardless of basket skew.
-def _symmetrize(e0: DataFrame, w_col: str) -> DataFrame:
-    """(p1, p2, w) -> both edge directions in ONE pass over e0.
-
-    The previous ``e0.select(...).union(e0.select(...))`` spelling embeds
-    the whole pair-build subtree twice in the plan; physical exchange
-    reuse does not always recover that (and never recovers the duplicated
-    map-side work before the agg).  An in-row explode of the two
-    directions reads e0 once — same rows, same schema (src, dst, w).
-    """
-    return e0.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("p1").alias("src"),
-                    F.col("p2").alias("dst"),
-                    F.col(w_col).alias("w"),
-                ),
-                F.struct(
-                    F.col("p2").alias("src"),
-                    F.col("p1").alias("dst"),
-                    F.col(w_col).alias("w"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst", "e.w")
-
-
 def order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(l_orderkey, ps): each order's sorted distinct part set — ONE keyed
     shuffle over the fact.  Pair expansion, per-item frequencies and the
@@ -483,7 +457,7 @@ def item_item_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one fact pass shared by the pair counts and the item frequencies
     # (the before-plan scanned lineitem 8 times); the symmetrization is an
     # in-row explode instead of p0.union(p0), which embedded the whole
-    # pair-build subtree twice (same fix as _symmetrize for the rank
+    # pair-build subtree twice (same fix as symmetrize for the rank
     # kernels — guide §2.4)
     baskets = order_baskets(spark, sf_dir).localCheckpoint(eager=False)
     item_n = (
@@ -584,14 +558,14 @@ def label_spread_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     e0 = copurchase_pair_counts(spark, sf_dir).where(
         F.col("n_pair") >= _LP_MIN_W
     )
-    edges = _symmetrize(e0, "n_pair")
+    edges = symmetrize(e0, "n_pair")
     seeds = (
         load_table(spark, sf_dir, "part")
         .where(F.col("p_partkey") % 5 == 0)
         .select(F.col("p_partkey").alias("node"), F.col("p_brand").alias("label"))
     )
     # V is the part dimension — broadcast the per-round label frame like
-    # trustrank's dim_sized_v / pagerank's broadcast_ranks modes
+    # pagerank's broadcast_ranks mode
     out = label_propagation(edges, seeds, rounds=_LP_ROUNDS, dim_sized_v=True)
     return out.select(
         F.col("node").alias("part_key"), "label", "is_seed", "vote"
@@ -639,27 +613,25 @@ _TR_TOP_K = 50
     """,
 )
 def trustrank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graph import trustrank_ranks
     from ..sources.tables import load_table
 
     e0 = copurchase_pair_counts(spark, sf_dir).where(
         F.col("n_pair") >= _TR_MIN_W
     )
-    edges = _symmetrize(e0, "n_pair")
+    edges = symmetrize(e0, "n_pair")
     seeds = (
         load_table(spark, sf_dir, "part")
         .where(F.col("p_partkey") % 7 == 0)
         .select(F.col("p_partkey").alias("node"))
     )
-    # V is the part dimension — broadcast the strength attachment like
-    # pagerank's broadcast_ranks mode
-    ranks = trustrank_ranks(edges, seeds, iterations=_TR_ROUNDS, dim_sized_v=True)
+    # V is the part dimension: broadcast the per-round rank frame
+    ranks = pagerank_ranks(edges, _TR_ROUNDS, broadcast_ranks=True, seeds=seeds)
     seed_flag = seeds.withColumn("is_seed", F.lit(1).cast("bigint"))
     return (
         ranks.join(seed_flag, "node", "left")
         .select(
             F.col("node").alias("part_key"),
-            "trust",
+            F.col("pr_rank").alias("trust"),
             F.coalesce(F.col("is_seed"), F.lit(0)).cast("bigint").alias("is_seed"),
         )
         .orderBy(F.desc("trust"), "part_key")

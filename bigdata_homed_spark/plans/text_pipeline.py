@@ -38,6 +38,7 @@ from ..functions.text import (
     tokens,
     word_shingles,
 )
+from ..operators.graph import min_label_components, symmetrize
 from ..session import session_dir
 from .core_relational import dsum
 from .registry import query
@@ -1066,13 +1067,12 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Near-dup CONNECTED COMPONENTS: greedy pair-dropping (dedup_decisions)
 # under-merges transitive duplicates (a~b, b~c but a!~c); component-level
 # dedup keeps exactly one doc per connected cluster of the near-dup graph.
-# Spark side: iterative min-label propagation (each round every vertex
-# takes the min label among itself and its neighbors) — the O(log n)-round
-# distributed connected-components shape (large-star/small-star family):
-# each round is one shuffle on vertex id, lineage cut via localCheckpoint,
-# and convergence is a per-round changed-count check, NOT a collect of the
-# graph.  At 100 TB the same loop runs unchanged; rounds scale with
-# component diameter (~log n), not data size.
+# Spark side: min-label propagation (operators/graph.py
+# min_label_components) over the symmetrized LSH pairs — one shuffle round
+# per step of component diameter, lineage cut via localCheckpoint, and
+# convergence is a per-round changed-count, NOT a collect of the graph.
+# At 100 TB the same loop runs unchanged; rounds follow the largest
+# component's diameter, not data size.
 # Oracle: DuckDB recursive-CTE transitive closure + min reachable id —
 # a genuinely independent algorithm for the same answer.
 @query(
@@ -1116,49 +1116,17 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = minhash_lsh_pairs(spark, sf_dir).select("d1", "d2")
-    sym = edges.union(
-        edges.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
-    ).localCheckpoint(eager=False)  # materialized once, by the labels job below
-    labels = (
-        sym.select(F.col("d1").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("label"))
-        # eager: this one action materializes BOTH checkpoints (labels, and
-        # sym behind it) — one driver job where the old eager/eager pair
-        # paid two, with the expensive LSH-pair subtree still run once
-        .localCheckpoint()
+    pairs = minhash_lsh_pairs(spark, sf_dir).select(
+        F.col("d1").alias("p1"), F.col("d2").alias("p2")
     )
-    for _ in range(32):  # diameter bound; tiny graphs converge in 2-3 rounds
-        msgs = (
-            sym.join(labels, sym["d1"] == labels["id"])
-            .groupBy(F.col("d2").alias("id2"))
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(msgs, labels["id"] == msgs["id2"], "left")
-            .select(
-                "id",
-                F.least("label", F.coalesce("nbr_min", "label")).alias("label"),
-                (F.col("label") != F.least("label", F.coalesce("nbr_min", "label")))
-                .cast("int")
-                .alias("chg"),
-            )
-            # LAZY checkpoint: the convergence count below is the round's
-            # first action anyway, so the checkpoint materializes inside it
-            # — one driver job per round instead of two (guide §5: job
-            # count, not bytes, bounds the per-round cost of a fixed-point
-            # loop locally)
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.agg(F.sum("chg")).first()[0]
-        labels = new_labels.drop("chg")
-        if not changed:
-            break
-    comp = labels.select(F.col("id").alias("doc_id"), F.col("label").alias("component_id"))
-    sizes = comp.groupBy("component_id").agg(F.count(F.lit(1)).cast("bigint").alias("comp_size"))
-    return comp.join(F.broadcast(sizes), "component_id").select(
-        "doc_id", "component_id", "comp_size"
+    labels = min_label_components(symmetrize(pairs))
+    return labels.select(
+        F.col("node").alias("doc_id"),
+        F.col("label").alias("component_id"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("label"))
+        .cast("bigint")
+        .alias("comp_size"),
     )
 
 
@@ -2243,7 +2211,7 @@ def prefix_filter_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cross-engine exact), doc_id ascending as the deterministic tiebreak —
 # the "keep the best, not the first" rule real curation stacks use
 # (quality-ranked dedup, e.g. FineWeb's cluster-representative step).
-# Plan: the components labels (O(log n) min-label rounds, shared machinery)
+# Plan: the components labels (min-label rounds, shared machinery)
 # join the per-doc richness scan on doc_id, then ONE row_number window per
 # component — no new shuffle class; at 100 TB the window partitions by
 # component_id, which the label join already clustered.

@@ -2,13 +2,18 @@
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_homed_spark.operators.graph import (
     PR_DAMPING_PCT,
     PR_SCALE,
     PR_TELEPORT,
+    min_label_components,
     pagerank_ranks,
+    symmetrize,
 )
 from bigdata_homed_spark.operators.rank import global_row_number
 
@@ -30,16 +35,19 @@ def _reference_pagerank(edges: list[tuple[int, int, int]], iterations: int):
     return pr
 
 
-def test_pagerank_matches_python_recurrence(spark):
+# 0: uniform PR_SCALE start, no round run; 1: only the round read from
+# the edges alone; 3 and 8 (past checkpoint_every=4) chain rank joins on it
+@pytest.mark.parametrize("iterations", [0, 1, 3, 8])
+def test_pagerank_matches_python_recurrence(spark, iterations):
     # triangle with a pendant: 1-2 heavy, 2-3, 3-1, 3-4 — symmetrized
     und = [(1, 2, 5), (2, 3, 1), (3, 1, 2), (3, 4, 1)]
     sym = und + [(b, a, w) for a, b, w in und]
     edges = spark.createDataFrame(sym, "src long, dst long, w long")
     got = {
         r["node"]: r["pr_rank"]
-        for r in pagerank_ranks(edges, iterations=8).collect()
+        for r in pagerank_ranks(edges, iterations=iterations).collect()
     }
-    assert got == _reference_pagerank(sym, 8)
+    assert got == _reference_pagerank(sym, iterations)
     # mass sanity: every rank positive and below the theoretical max
     assert all(0 < v <= 2 * PR_SCALE for v in got.values())
 
@@ -312,27 +320,24 @@ def test_label_propagation_tiebreak_and_round_count(spark):
     assert two[4] == "aaa"  # reached via node 2's round-1 label
 
 
-def test_trustrank_matches_python_recurrence(spark):
+@pytest.mark.parametrize("iterations", [1, 3])
+def test_trustrank_matches_python_recurrence(spark, iterations):
     """The distributed seeded recurrence equals a sequential reference on
     a toy graph, including the seed re-injection on a seed with no ranked
     in-neighbors (the full-outer-join case) and trust decay with
     distance."""
-    from bigdata_homed_spark.operators.graph import (
-        PR_DAMPING_PCT,
-        PR_SCALE,
-        PR_TELEPORT,
-        trustrank_ranks,
-    )
-
     # chain 1->2->3 plus isolated-in-degree seed 9 (9->2 only outgoing)
     rows = [(1, 2, 2), (2, 3, 1), (9, 2, 2)]
     edges = spark.createDataFrame(rows, "src bigint, dst bigint, w bigint")
     seeds = spark.createDataFrame([(1,), (9,)], "node bigint")
-    got = {r["node"]: r["trust"] for r in trustrank_ranks(edges, seeds, 3).collect()}
+    got = {
+        r["node"]: r["pr_rank"]
+        for r in pagerank_ranks(edges, iterations, seeds=seeds).collect()
+    }
 
     strength = {1: 2, 2: 1, 9: 2}
     pr = {1: PR_SCALE, 9: PR_SCALE}
-    for _ in range(3):
+    for _ in range(iterations):
         inc: dict[int, int] = {}
         for s, d, w in rows:
             if s in pr:
@@ -350,5 +355,58 @@ def test_trustrank_matches_python_recurrence(spark):
     # and every seed keeps at least its teleport floor.  Note 2 > 1 is
     # CORRECT TrustRank behavior: node 2 receives from both seeds, while
     # seed 1 has no in-links and holds only its teleport mass.
-    assert got[2] > got[3] > 0
+    if iterations > 1:
+        assert got[2] > got[3] > 0
+    else:
+        assert 3 not in got  # two hops from every seed: no trust after 1 round
     assert got[1] >= PR_TELEPORT and got[9] >= PR_TELEPORT
+
+
+def _union_find_components(pairs: list[tuple[int, int]]) -> dict[int, int]:
+    """node -> least node id of its connected component, sequentially."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def _graph_cases() -> dict[str, list[tuple[int, int]]]:
+    rng = random.Random(7)
+    cases = {
+        # diameter 39: needs 39 label rounds, past any 32-round cap
+        "path40": [(i, i + 1) for i in range(39)],
+        # hub with the largest id: every leaf's label arrives in one round
+        "star": [(100, i) for i in range(1, 30)],
+        "two_chains": [(i, i + 1) for i in range(10, 19)]
+        + [(i + 1, i) for i in range(50, 63)],
+    }
+    for seed in range(3):
+        nodes = rng.sample(range(1, 1000), 60)
+        cases[f"random{seed}"] = [
+            tuple(rng.sample(nodes, 2)) for _ in range(45)
+        ]
+    return cases
+
+
+def test_min_label_components_matches_union_find(spark):
+    """Min-label propagation runs until no label changes, so every case
+    equals a sequential union-find, the 40-node path included (a round
+    cap below its diameter returns split, mislabeled components)."""
+    for name, pairs in _graph_cases().items():
+        e0 = spark.createDataFrame(pairs, "p1 bigint, p2 bigint")
+        got = {
+            r["node"]: r["label"]
+            for r in min_label_components(symmetrize(e0)).collect()
+        }
+        assert got == _union_find_components(pairs), name

@@ -680,6 +680,47 @@ def test_channel_report_full_job_count_ceiling(spark, sf_dir):
     assert set(persistent().keys()) <= cached
 
 
+def test_graph_loop_job_count_ceiling(spark, sf_dir):
+    """Pin the job cost of the two graph loops in operators/graph.py.
+
+    Warm counts at sf0.001 (build + collect), before -> after the single
+    label loop and rank recurrence:
+    - ``dedup_canonical_keep`` 27 -> 16: the pair subtree runs once, at
+      the eager edge checkpoint; round 1 is read from the edges alone;
+      each round's changed count rides its checkpoint job.
+    - ``pagerank_copurchase_parts`` 26 -> 21: strength is a window over
+      the edges before their checkpoint, and round 1 needs no rank join.
+    - ``trustrank_copurchase`` 17 -> 16 and ``label_spread_copurchase``
+      15 -> 15: the seeded recurrence and the label spread may not rise.
+    No call may leave a cached DataFrame behind: the only persistent RDDs
+    it adds are local checkpoints, which the context cleaner owns."""
+    from bigdata_homed_spark.plans import QUERIES
+
+    tr = spark.sparkContext._jsc.sc().statusTracker()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+
+    def cached() -> set:
+        return {
+            k for k, r in persistent().items() if not r.rdd().isLocallyCheckpointed()
+        }
+
+    ceilings = {
+        "dedup_canonical_keep": 20,
+        "pagerank_copurchase_parts": 21,
+        "trustrank_copurchase": 17,
+        "label_spread_copurchase": 15,
+    }
+    counts = {}
+    for name in ceilings:
+        QUERIES[name](spark, sf_dir).collect()  # warm-up
+        before_cached = cached()
+        before = len(tr.getJobIdsForGroup(None))
+        QUERIES[name](spark, sf_dir).collect()
+        counts[name] = len(tr.getJobIdsForGroup(None)) - before
+        assert cached() <= before_cached, name
+    assert all(counts[n] <= c for n, c in ceilings.items()), counts
+
+
 def test_merge_latest_job_count_ceiling(spark, tmp_path):
     """Pin the keyed state path's per-batch floor: a keep-greatest
     ``commit_merge_on_read`` is TWO actions (the batch's data-file write,
