@@ -365,7 +365,7 @@ def main() -> None:
         # noise guard: this box carries co-tenant load, so any single warm
         # observation can be inflated by GC/contention.  Take the min of
         # TWO warm runs unconditionally — a symmetric estimator (fast and
-        # slow outliers treated alike), matching tools/time_queries.py.
+        # slow outliers treated alike); tools/query_profile.py takes the min of 3.
         warms = []
         for _ in range(2):
             t0 = time.time()

@@ -22,9 +22,9 @@ Scale shape (the Pregel-on-DataFrame loop):
 - edges carry their source's total strength, attached ONCE before the loop
   by a window over ``src`` and localCheckpointed — the loop never
   recomputes it;
-- each iteration is one equi-join (ranks ⋈ edges on src) + one shuffle on
-  dst for the contribution sum — O(E) work per round, no broadcast of
-  anything sized O(V) unless the caller asks for it;
+- each iteration is one equi-join (the broadcast V-sized ranks ⋈ edges on
+  src) + one shuffle on dst for the contribution sum — O(E) work per
+  round, and the edge list is never re-shuffled;
 - iteration count is FIXED (caller-chosen), not convergence-tested: a
   deterministic output needs a deterministic round count, and fixed-k
   power iteration is how production systems bound the cost anyway.  A
@@ -34,9 +34,8 @@ Scale shape (the Pregel-on-DataFrame loop):
   Under AQE each round's shuffle and broadcast still runs as its own
   job, so every round costs jobs either way; ranks are localCheckpointed
   every ``checkpoint_every`` rounds only to bound plan depth for large k.
-At 100 TB the same loop runs unchanged: both joins shuffle on the node id,
-so co-partitioning carries between rounds under AQE; per-round cost is
-linear in edges.
+At 100 TB the same loop runs unchanged while V stays dimension-sized;
+per-round cost is linear in edges.
 """
 
 from __future__ import annotations
@@ -78,7 +77,6 @@ def pagerank_ranks(
     edges: DataFrame,
     iterations: int = 8,
     checkpoint_every: int = 4,
-    broadcast_ranks: bool = False,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """Weighted PageRank over a DIRECTED edge list ``(src, dst, w)``.
@@ -109,14 +107,11 @@ def pagerank_ranks(
     still be re-injected.  Seeded mass is bounded by |S| * PR_SCALE /
     0.15, so pr * w stays far inside bigint for any dim-sized seed set.
 
-    ``broadcast_ranks=True`` is the dimension-sized-V mode: when the
-    vertex set is a dim (parts, hosts, channels — millions of rows, tens
-    of MB), broadcasting the rank vector turns every round into a
-    map-side hash join over the (big, checkpointed, never re-shuffled)
-    edge list plus one V-sized aggregation — no per-round sort or
-    edge-shuffle at all.  The default (False) is the huge-V mode: a keyed
-    shuffle join, O(E) per round, for graphs whose vertex set itself is
-    data-sized (e.g. per-document graphs).  Same math, same result.
+    The vertex set must be dimension-sized (parts, hosts, channels —
+    millions of rows, tens of MB): every round broadcasts the rank vector,
+    which turns the round into a map-side hash join over the (big,
+    checkpointed, never re-shuffled) edge list plus one V-sized
+    aggregation — no per-round sort or edge-shuffle at all.
     """
     # strength rides on each edge row: one shuffle of the edge list on src
     # and the caller's edge subtree runs once, here.  The loop re-reads
@@ -142,7 +137,7 @@ def pagerank_ranks(
             # every rank is still PR_SCALE: round 1 reads the edges alone
             ranked = edges_s.withColumn("pr", F.lit(PR_SCALE).cast("bigint"))
         else:
-            rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
+            rank_side = F.broadcast(ranks)
             ranked = edges_s.join(rank_side, edges_s["src"] == rank_side["node"])
         incoming = ranked.groupBy(F.col("dst").alias("node")).agg(
             F.sum(F.expr("(pr * w) div s")).cast("bigint").alias("incoming")
@@ -204,39 +199,33 @@ def pagerank_oracle_ctes(
 # spread a small set of trusted labels (curated domains, human-rated docs)
 # over a similarity/co-occurrence graph to label the long tail.
 #
-# Scale shape: per round one equi-join (labels ⋈ edges on src, both keyed
-# by node id) + one (node, label) aggregate + one node-keyed window over
-# the vote frame — O(E·deg(labels)) work, no O(V) broadcast, same Pregel-
-# on-DataFrame shape as pagerank_ranks.  Fixed round count for the same
-# reason as PageRank: deterministic output needs a deterministic loop.
+# Scale shape: per round one equi-join (the broadcast labels ⋈ edges on
+# src) + one (node, label) aggregate + one node-keyed window over the vote
+# frame — O(E·deg(labels)) work, same Pregel-on-DataFrame shape as
+# pagerank_ranks.  Fixed round count for the same reason as PageRank:
+# deterministic output needs a deterministic loop.
 
 
-def label_propagation(
-    edges: DataFrame, seeds: DataFrame, rounds: int = 3,
-    dim_sized_v: bool = False,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, seeds: DataFrame, rounds: int = 3) -> DataFrame:
     """``edges``: (src, dst, w) DIRECTED (pass both directions for an
     undirected graph); ``seeds``: (node, label).  Returns (node, label,
     is_seed, vote) for every node labeled after ``rounds`` rounds — vote
     is the winning integer weight sum (NULL for seeds).
 
-    ``dim_sized_v=True`` is the pagerank ``broadcast_ranks`` analog: when
-    the vertex set is a dim (parts, hosts, channels), the per-round label
-    frame is V-sized, so broadcasting it turns every round's edges ⋈
-    labels into a map-side hash join over the (big, never re-shuffled)
-    edge list — no per-round O(E) exchange (guide §3.1).  The seed
-    anti-join is V-sized on BOTH sides and rides the same broadcast.
-    Default False is the huge-V mode: keyed shuffle joins, for graphs
-    whose vertex set itself is data-sized.  Same math, same result."""
+    As in ``pagerank_ranks`` the vertex set must be dimension-sized
+    (parts, hosts, channels): the per-round label frame is V-sized, and
+    broadcasting it turns every round's edges ⋈ labels into a map-side
+    hash join over the (big, never re-shuffled) edge list — no per-round
+    O(E) exchange (guide §3.1).  The seed anti-join is V-sized on BOTH
+    sides and rides the same broadcast."""
     edges = edges.localCheckpoint(eager=False)
     seeds = seeds.localCheckpoint(eager=False)
-    seed_nodes = seeds.select("node")
-    anti_side = F.broadcast(seed_nodes) if dim_sized_v else seed_nodes
+    seed_nodes = F.broadcast(seeds.select("node"))
     w = Window.partitionBy("node").orderBy(F.desc("vote"), F.asc("label"))
     labels = seeds
     winners = None
     for _ in range(rounds):
-        label_side = F.broadcast(labels) if dim_sized_v else labels
+        label_side = F.broadcast(labels)
         votes = (
             edges.join(label_side, edges["src"] == label_side["node"])
             .groupBy(F.col("dst").alias("node"), "label")
@@ -246,7 +235,7 @@ def label_propagation(
             votes.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
             .drop("__rn")
-            .join(anti_side, "node", "left_anti")
+            .join(seed_nodes, "node", "left_anti")
             .localCheckpoint(eager=False)
         )
         labels = seeds.unionByName(winners.select("node", "label"))

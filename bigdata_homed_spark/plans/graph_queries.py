@@ -101,10 +101,8 @@ def pagerank_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     e0 = pairs.groupBy("p1", "p2").agg(F.count(F.lit(1)).cast("bigint").alias("w"))
     edges = symmetrize(e0, "w")
     # V here is the PART dimension (dim-sized at every SF: ~2 MB per
-    # million parts at 16 B/row), so the broadcast-ranks mode applies —
-    # each round is a map-side join over the checkpointed edge list.
-    # A data-sized vertex set (per-doc graphs) would pass False.
-    ranks = pagerank_ranks(edges, _PR_ITERS, broadcast_ranks=True)
+    # million parts at 16 B/row), so pagerank_ranks may broadcast its ranks
+    ranks = pagerank_ranks(edges, _PR_ITERS)
     return (
         ranks.orderBy(F.desc("pr_rank"), F.asc("node"))
         .limit(_PR_TOP_K)
@@ -564,9 +562,7 @@ def label_spread_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("p_partkey") % 5 == 0)
         .select(F.col("p_partkey").alias("node"), F.col("p_brand").alias("label"))
     )
-    # V is the part dimension — broadcast the per-round label frame like
-    # pagerank's broadcast_ranks mode
-    out = label_propagation(edges, seeds, rounds=_LP_ROUNDS, dim_sized_v=True)
+    out = label_propagation(edges, seeds, rounds=_LP_ROUNDS)
     return out.select(
         F.col("node").alias("part_key"), "label", "is_seed", "vote"
     )
@@ -624,8 +620,7 @@ def trustrank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("p_partkey") % 7 == 0)
         .select(F.col("p_partkey").alias("node"))
     )
-    # V is the part dimension: broadcast the per-round rank frame
-    ranks = pagerank_ranks(edges, _TR_ROUNDS, broadcast_ranks=True, seeds=seeds)
+    ranks = pagerank_ranks(edges, _TR_ROUNDS, seeds=seeds)
     seed_flag = seeds.withColumn("is_seed", F.lit(1).cast("bigint"))
     return (
         ranks.join(seed_flag, "node", "left")

@@ -39,6 +39,14 @@ _roots: dict[str, str] = {}
 _fixtures: dict[tuple[str, str, str], object] = {}
 
 
+def _default_driver_memory() -> str:
+    """48g, or half of physical memory on a smaller machine: the driver JVM
+    is the whole local cluster, and a heap sized past the machine gets the
+    process killed by the kernel before the garbage collector runs."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(48 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "bigdata_homed_spark",
     master: str | None = None,
@@ -87,7 +95,10 @@ def get_spark(
         # merged with the launching environment's PYTHONPATH by the worker
         # factory, so a worker can unpickle functions defined in the package
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
     )
     if master:
         builder = builder.master(master)

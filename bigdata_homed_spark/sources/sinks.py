@@ -10,8 +10,9 @@ Here the lake sink is partitioned parquet with *dynamic* partition
 overwrite (only the partitions present in the batch are replaced — the
 exact semantics of the reference's per-day overwrite, without clobbering
 other days), and the JDBC sink is a thin gated wrapper (no database in the
-test container).  Upsert-by-PK is emulated with an anti-join + union
-(MERGE without Delta), usable from ``foreachBatch`` for streaming parity.
+test container).  Upsert-by-PK is ``SnapshotTable.commit_merge_on_read``
+(``sources/snapshots.py``), usable from ``foreachBatch`` for streaming
+parity.
 """
 
 from __future__ import annotations
@@ -43,22 +44,6 @@ def write_partitioned_fact(
     if output_files_per_partition:
         out = df.repartition(output_files_per_partition, *partition_cols)
     out.write.mode(mode).partitionBy(*partition_cols).format(fmt).save(path)
-
-
-def read_partitioned_fact(spark: SparkSession, path: str) -> DataFrame:
-    """Partition-discovering scan; filters on the partition column prune
-    directories before any I/O (verified in tests via the physical plan)."""
-    return spark.read.parquet(path)
-
-
-def upsert_by_key(
-    existing: DataFrame, updates: DataFrame, key_cols: Sequence[str]
-) -> DataFrame:
-    """S10 Phoenix-upsert semantics without a MERGE-capable format:
-    new rows win per key, untouched keys survive.  Usable in
-    ``foreachBatch`` for streaming state tables."""
-    survivors = existing.join(updates.select(*key_cols).distinct(), list(key_cols), "left_anti")
-    return survivors.unionByName(updates)
 
 
 def write_jdbc(

@@ -52,15 +52,6 @@ def test_pagerank_matches_python_recurrence(spark, iterations):
     assert all(0 < v <= 2 * PR_SCALE for v in got.values())
 
 
-def test_pagerank_broadcast_mode_identical(spark):
-    und = [(1, 2, 5), (2, 3, 1), (3, 1, 2), (3, 4, 1)]
-    sym = und + [(b, a, w) for a, b, w in und]
-    edges = spark.createDataFrame(sym, "src long, dst long, w long")
-    a = sorted(map(tuple, pagerank_ranks(edges, 8).collect()))
-    b = sorted(map(tuple, pagerank_ranks(edges, 8, broadcast_ranks=True).collect()))
-    assert a == b
-
-
 def test_pagerank_deterministic_across_partitionings(spark):
     und = [(i, i + 1, (i % 3) + 1) for i in range(1, 40)] + [(40, 1, 2)]
     sym = und + [(b, a, w) for a, b, w in und]

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from bigdata_homed_spark.operators.enrich import dim_join
 from bigdata_homed_spark.sources.sinks import write_partitioned_fact
 from bigdata_homed_spark.sources.tables import load_table
+from bigdata_homed_spark.trace import span
 
 
 def plan_of(df) -> str:
@@ -620,31 +621,30 @@ def test_merge_commit_job_count_ceiling(spark, tmp_path):
     re-adds whole jobs, which this ceiling catches deterministically."""
     from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
-    tr = spark.sparkContext._jsc.sc().statusTracker()
     t = SnapshotTable(str(tmp_path / "jc_merge"))
     t.commit_append(
         spark.range(0, 1000).selectExpr("id as k", "id*2 as v"), stats_cols=["k"]
     )
-    before = len(tr.getJobIdsForGroup(None))
-    t.commit_merge(
-        spark.range(100, 200).selectExpr("id as k", "id*7 as v"),
-        key="k",
-        stats_cols=["k"],
-    )
-    assert len(tr.getJobIdsForGroup(None)) - before <= 10
+    with span(spark) as s:
+        t.commit_merge(
+            spark.range(100, 200).selectExpr("id as k", "id*7 as v"),
+            key="k",
+            stats_cols=["k"],
+        )
+    assert s.jobs <= 10, s
 
     # merge-on-read: the data-file write, then the DV semi-join write
     t = SnapshotTable(str(tmp_path / "jc_mor"))
     t.commit_append(
         spark.range(0, 1000).selectExpr("id as k", "id*2 as v"), stats_cols=["k"]
     )
-    before = len(tr.getJobIdsForGroup(None))
-    t.commit_merge_on_read(
-        spark.range(100, 200).selectExpr("id as k", "id*7 as v"),
-        key="k",
-        stats_cols=["k"],
-    )
-    assert len(tr.getJobIdsForGroup(None)) - before <= 6
+    with span(spark) as s:
+        t.commit_merge_on_read(
+            spark.range(100, 200).selectExpr("id as k", "id*7 as v"),
+            key="k",
+            stats_cols=["k"],
+        )
+    assert s.jobs <= 6, s
 
     # keyed on the partition column, hits are decided from the manifest:
     # the key has no zone map, and no key-range job runs in its place
@@ -652,9 +652,9 @@ def test_merge_commit_job_count_ceiling(spark, tmp_path):
     t.commit_append(
         spark.range(0, 1000).selectExpr("id % 4 as p", "id as v"), partition_by=["p"]
     )
-    before = len(tr.getJobIdsForGroup(None))
-    t.commit_merge(spark.createDataFrame([(1, -1)], "p long, v long"), key="p")
-    assert len(tr.getJobIdsForGroup(None)) - before <= 5
+    with span(spark) as s:
+        t.commit_merge(spark.createDataFrame([(1, -1)], "p long, v long"), key="p")
+    assert s.jobs <= 5, s
 
 
 def test_channel_report_full_job_count_ceiling(spark, sf_dir):
@@ -666,17 +666,15 @@ def test_channel_report_full_job_count_ceiling(spark, sf_dir):
     pipelines with eager persists and a localCheckpoint took 51 jobs."""
     from bigdata_homed_spark.reports.channel_report import channel_report_full
 
-    jsc = spark.sparkContext._jsc.sc()
-    tr = jsc.statusTracker()
     channel_report_full(spark, sf_dir).collect()  # warm-up
     # the session is shared: other tests' caches may already be resident,
     # and the context cleaner drops them at whatever JVM GC finds them
     # unreferenced — so compare RDD ids, not counts
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     cached = set(persistent().keys())
-    before = len(tr.getJobIdsForGroup(None))
-    channel_report_full(spark, sf_dir).collect()
-    assert len(tr.getJobIdsForGroup(None)) - before <= 20
+    with span(spark) as s:
+        channel_report_full(spark, sf_dir).collect()
+    assert s.jobs <= 20, s
     assert set(persistent().keys()) <= cached
 
 
@@ -696,7 +694,6 @@ def test_graph_loop_job_count_ceiling(spark, sf_dir):
     it adds are local checkpoints, which the context cleaner owns."""
     from bigdata_homed_spark.plans import QUERIES
 
-    tr = spark.sparkContext._jsc.sc().statusTracker()
     persistent = spark.sparkContext._jsc.getPersistentRDDs
 
     def cached() -> set:
@@ -714,9 +711,9 @@ def test_graph_loop_job_count_ceiling(spark, sf_dir):
     for name in ceilings:
         QUERIES[name](spark, sf_dir).collect()  # warm-up
         before_cached = cached()
-        before = len(tr.getJobIdsForGroup(None))
-        QUERIES[name](spark, sf_dir).collect()
-        counts[name] = len(tr.getJobIdsForGroup(None)) - before
+        with span(spark) as s:
+            QUERIES[name](spark, sf_dir).collect()
+        counts[name] = s.jobs
         assert cached() <= before_cached, name
     assert all(counts[n] <= c for n, c in ceilings.items()), counts
 
@@ -732,14 +729,13 @@ def test_merge_latest_job_count_ceiling(spark, tmp_path):
     them."""
     from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
-    tr = spark.sparkContext._jsc.sc().statusTracker()
     t = SnapshotTable(str(tmp_path / "jc_state"))
     counts = []
     for b in range(3):
         upd = spark.range(b * 100, b * 100 + 300).selectExpr(
             "id % 400 as k", "id as sec", "id*2 as v"
         )
-        before = len(tr.getJobIdsForGroup(None))
-        t.commit_merge_on_read(upd, key="k", keep_greatest=["sec"])
-        counts.append(len(tr.getJobIdsForGroup(None)) - before)
+        with span(spark) as s:
+            t.commit_merge_on_read(upd, key="k", keep_greatest=["sec"])
+        counts.append(s.jobs)
     assert max(counts) <= 6, counts

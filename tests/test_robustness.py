@@ -204,3 +204,56 @@ def test_package_temp_dirs_removed_at_exit(tmp_path, sf_dir):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert os.listdir(tmpdir) == []
+
+
+def test_span_counts_jobs_past_status_store_retention(tmp_path):
+    """``trace.span`` counts jobs by scheduler id, so the count holds once
+    the status store has dropped old jobs.  With ``retainedJobs=10`` and
+    20 jobs already run, five one-job actions count five; the status
+    tracker's job list, which the count used to be read from, stays at its
+    cap and does not grow by five."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "span_retention.py"
+    script.write_text(
+        textwrap.dedent(
+            f"""
+            import sys
+            sys.path.insert(0, {root!r})
+            from bigdata_homed_spark.session import get_spark
+            from bigdata_homed_spark.trace import span
+
+            spark = get_spark(
+                "span_retention",
+                master="local[1]",
+                extra_conf={{"spark.ui.retainedJobs": "10"}},
+            )
+            sc = spark.sparkContext._jsc.sc()
+
+            def tracked():
+                sc.listenerBus().waitUntilEmpty()
+                return len(sc.statusTracker().getJobIdsForGroup(None))
+
+            for _ in range(20):
+                spark.range(1).collect()
+            before = tracked()
+            with span(spark) as s:
+                for _ in range(5):
+                    spark.range(1).collect()
+            print(s.jobs, tracked() - before)
+            spark.stop()
+            """
+        )
+    )
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    jobs, tracker_delta = map(int, out.stdout.split()[-2:])
+    assert jobs == 5
+    assert tracker_delta != 5

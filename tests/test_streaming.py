@@ -138,13 +138,11 @@ def test_stream_watermarked_dedup(spark, sf_dir):
 
 
 def test_foreachbatch_upsert_state(spark, sf_dir, tmp_path):
-    """T8/S10: foreachBatch + upsert_by_key maintains a keyed state table
-    (the Phoenix-overwrite-by-PK analog) across micro-batches."""
-    import os
+    """T8/S10: a foreachBatch merge-on-read commit maintains a keyed state
+    table (the Phoenix-overwrite-by-PK analog) across micro-batches."""
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
-    from bigdata_homed_spark.sources.sinks import upsert_by_key
-
-    state_dir = os.path.join(str(tmp_path), "state")
+    table = SnapshotTable(str(tmp_path / "state"))
     ev = read_events_stream(spark, sf_dir)
     per_user = ev.groupBy("user_id").agg(
         F.max(F.col("ts_sec")).alias("last_seen"),
@@ -152,14 +150,7 @@ def test_foreachbatch_upsert_state(spark, sf_dir, tmp_path):
     )
 
     def sink(batch_df, epoch_id):
-        if os.path.exists(state_dir):
-            existing = batch_df.sparkSession.read.parquet(state_dir)
-            merged = upsert_by_key(existing, batch_df, ["user_id"])
-        else:
-            merged = batch_df
-        merged.write.mode("overwrite").parquet(state_dir + "_tmp")
-        roundtrip = batch_df.sparkSession.read.parquet(state_dir + "_tmp")
-        roundtrip.write.mode("overwrite").parquet(state_dir)
+        table.commit_merge_on_read(batch_df, key="user_id", batch_id=epoch_id)
 
     q = (
         per_user.writeStream.outputMode("complete")
@@ -168,7 +159,7 @@ def test_foreachbatch_upsert_state(spark, sf_dir, tmp_path):
         .start()
     )
     q.awaitTermination()
-    state = spark.read.parquet(state_dir)
+    state = table.read(spark)
     batch = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")

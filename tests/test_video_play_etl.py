@@ -15,7 +15,7 @@ from bigdata_homed_spark.reports.video_play_etl import (
     split_play_behavior,
     terminal_of_device,
 )
-from bigdata_homed_spark.sources.sinks import upsert_by_key, write_partitioned_fact
+from bigdata_homed_spark.sources.sinks import write_partitioned_fact
 from bigdata_homed_spark.sources.tables import load_table
 
 
@@ -75,13 +75,6 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
     write_partitioned_fact(df2, base, ["day"])  # dynamic: only d2 replaced
     got = {(r.day, r.v) for r in spark.read.parquet(base).collect()}
     assert got == {("d1", 1), ("d2", 99)}
-
-
-def test_upsert_by_key(spark):
-    existing = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    updates = spark.createDataFrame([(2, "B"), (3, "C")], ["k", "v"])
-    got = {(r.k, r.v) for r in upsert_by_key(existing, updates, ["k"]).collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "C")}
 
 
 def test_text_file_multipath_read_matches_inline(spark, sf_dir, tmp_path):
