@@ -1293,7 +1293,7 @@ def snapshot_update_inplace(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # WRITE-AUDIT-PUBLISH (the Iceberg WAP pattern): an ingest lands as a
 # STAGED commit no reader resolves; an audit job queries the would-be
-# state; publish is one atomic manifest rename, abort deletes the files
+# state; publish is one atomic manifest link, abort deletes the files
 # with nothing ever visible.  The fixture ingests 1998 twice: first a
 # POISONED batch (every 7th price negated) that the audit rule
 # (min(o_totalprice) >= 0) rejects -> abort; then the clean batch ->

@@ -8,6 +8,25 @@ caching are defaults; we add AQE (runtime coalesce + skew-join handling),
 Arrow for the Python boundary, and a UTC session timezone so results are
 comparable with UTC-naive oracles (DuckDB).
 
+Generated-code cache: every distinct operator pipeline Spark compiles
+(whole-stage codegen, projections, predicates) becomes a Janino class, kept
+in a static, JVM-wide LRU cache of ``spark.sql.codegen.cache.maxEntries``
+classes (Spark's default is 100).  One pass of either benchmark workload
+(``perfbench/``: the nightly report chain; the graph and similarity loops)
+compiles about 240 classes at sf0.01 (4 cores, local[2]), so a 100-class
+cache is thrashed: homed_daily's passes compiled 248 classes cold, then 239
+and 236 warm.  At 1,000 entries a session compiles each class once and
+reuses it for every later run of the same plan: warm report calls, graph
+rounds, streaming triggers.  A session that ran 120 registry queries held
+no more JVM memory after GC (1.52 GB at 1,000 entries, 1.60 GB at 100).
+
+Class names leave out the whole-stage codegen stage id.  AQE numbers the
+stages in the order sibling query stages finish, so the same pipeline can
+get another id on the next run; with the id in the name it came back as a
+new class (4-8 classes on some warm runs of ``channel_report_full`` and
+``live_channel_halfhour_full``).  With both settings homed_daily's warm
+passes compile no class.
+
 Scale note: `shuffle_partitions` defaults to an env-derived value sized for
 the local[32] test harness.  On a real 1000-executor cluster you'd leave AQE
 to coalesce from a high initial number (e.g. 2000+) instead; the value is a
@@ -92,6 +111,12 @@ def get_spark(
             "true",
         )
         .config("spark.ui.enabled", "false")
+        # static: holds about 4x the ~250 classes one pass of a benchmark
+        # workload compiles (see the module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # class names without the codegen stage id, which AQE hands out in
+        # the order query stages finish (see the module docstring)
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # merged with the launching environment's PYTHONPATH by the worker
         # factory, so a worker can unpickle functions defined in the package
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)

@@ -8,8 +8,11 @@ lakehouse answer (Delta/Iceberg/Hudi) pins every read to a MANIFEST — a
 small JSON file naming the version's exact data-file set — so:
 
 - **atomic commit**: data files land first (immutable, uniquely named);
-  the commit point is one ``os.replace`` of the manifest — readers see the
-  old version or the new one, never a torn mix.  A crash before the rename
+  the commit point is one ``os.link`` of the staged manifest to its version
+  name — readers see the old version or the new one, never a torn mix.
+  The link fails if that version exists, so of two writers that prepared
+  the same version one publishes and the other gets ``CommitConflictError``
+  (put-if-absent), never a silent overwrite.  A crash before the link
   leaves orphan data files but a fully consistent table.
 - **time travel**: old manifests are never touched; ``read(version=N)``
   reconstructs any committed state exactly.
@@ -149,7 +152,9 @@ class SnapshotTable:
 
         <path>/data/<uuid>.parquet        immutable data files
         <path>/_manifests/v<N>.json       {"version": N, "files": [...]}
-        <path>/_manifests/v<N>.json.tmp   staged then os.replace'd (atomic)
+        <path>/_manifests/v<N>.json.<uuid>.tmp
+                                          staged, hard-linked to v<N>.json
+                                          if no v<N>.json exists, unlinked
     """
 
     # every Nth version stores the FULL file list (a checkpoint); versions
@@ -566,10 +571,18 @@ class SnapshotTable:
         else:
             manifest["files"] = entries
         final = os.path.join(self.manifest_dir, f"v{v}.json")
-        tmp = final + ".tmp"
+        tmp = f"{final}.{uuid.uuid4().hex}.tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f)
-        os.replace(tmp, final)  # THE commit point
+        try:
+            os.link(tmp, final)  # THE commit point: put-if-absent
+        except FileExistsError:
+            raise CommitConflictError(
+                f"v{v} was published by another writer since this commit "
+                "listed the head"
+            ) from None
+        finally:
+            os.unlink(tmp)
         resolved = {k: val for k, val in manifest.items() if k not in ("adds", "removes")}
         resolved["files"] = entries
         self._manifest_cache[v] = resolved
@@ -1847,7 +1860,7 @@ class SnapshotTable:
         data files and a STAGED manifest that no reader resolves — the
         table's committed head is untouched.  An audit job reads the
         would-be state with ``read_staged`` and then either
-        ``publish_staged`` (one atomic manifest rename, same OCC guard as
+        ``publish_staged`` (one atomic manifest link, same OCC guard as
         every other verb) or ``abort_staged`` (files deleted, nothing ever
         became visible).  This is how a 100 TB ingest gets a data-quality
         gate WITHOUT a quarantine copy: the expensive write happens once,

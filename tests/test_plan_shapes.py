@@ -609,6 +609,31 @@ def test_r10_sketch_and_mixing_family_plans(spark, sf_dir):
     assert shuffles <= 3, mix
 
 
+def test_warm_rerun_compiles_no_classes(spark, sf_dir):
+    """Pin the session's generated-code cache size: a plan run again in
+    the same session reuses the classes Janino compiled for it.
+
+    Spark's default cache holds 100 classes; one pass of the nightly
+    report chain compiles about 240, so the LRU cache evicted a query's
+    classes before it ran again and every warm call recompiled them
+    (about 40 for ``star_rank_period_heat``).  Here more than 100 other
+    classes are compiled between the two runs."""
+    from bigdata_homed_spark.plans import QUERIES
+
+    QUERIES["star_rank_period_heat"](spark, sf_dir).collect()
+    with span(spark) as others:
+        for name in (
+            "channel_report_full",
+            "video_play_report",
+            "live_channel_halfhour_full",
+        ):
+            QUERIES[name](spark, sf_dir).collect()
+    assert others.compiles > 100, others
+    with span(spark) as s:
+        QUERIES["star_rank_period_heat"](spark, sf_dir).collect()
+    assert s.compiles == 0, s
+
+
 def test_merge_commit_job_count_ceiling(spark, tmp_path):
     """Pin the r10 driver-job floor of a CoW merge commit (16 -> 10 jobs),
     of a merge-on-read commit (6 jobs) and of a CoW merge keyed on the

@@ -860,6 +860,37 @@ def test_snapshot_commit_conflict_detection(spark, tmp_path):
         assert json.load(f)["version"] == 1
 
 
+def test_snapshot_commit_point_is_put_if_absent(spark, tmp_path):
+    """A writer that listed a stale head prepares a version another writer
+    has already published.  The commit point must refuse it with
+    CommitConflictError; overwriting that ``v<N>.json`` would lose the
+    other writer's commit without an error."""
+    import os
+
+    from bigdata_homed_spark.sources.snapshots import (
+        CommitConflictError,
+        SnapshotTable,
+    )
+
+    path = str(tmp_path / "snap")
+    t = SnapshotTable(path)
+    t.commit_append(spark.range(0, 10).withColumnRenamed("id", "k"))
+    stale = SnapshotTable(path)
+    stale.versions = lambda: [1]  # listed the head before v2 landed
+    assert t.commit_append(spark.range(10, 20).withColumnRenamed("id", "k")) == 2
+    v2 = os.path.join(t.manifest_dir, "v2.json")
+    with open(v2) as f:
+        published = f.read()
+
+    with pytest.raises(CommitConflictError):
+        stale.commit_append(spark.range(100, 105).withColumnRenamed("id", "k"))
+    with open(v2) as f:
+        assert f.read() == published
+    assert sorted(os.listdir(t.manifest_dir)) == ["v1.json", "v2.json"]
+    rows = SnapshotTable(path).read(spark).collect()
+    assert sorted(r.k for r in rows) == list(range(20))
+
+
 def test_snapshot_incremental_read_append_only_contract(spark, tmp_path):
     """incremental_files returns exactly the files added after the
     checkpoint version; a rewrite inside the range breaks the append-only

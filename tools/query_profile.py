@@ -4,7 +4,8 @@ Usage: python tools/query_profile.py SF_DIR[,SF_DIR ...] query [query ...]
 
 For each query and SF directory, one session prints one line:
 
-  query  sf_dir  cold_s  build_s/jobs  plan_s  action_s/jobs  forced_s
+  query  sf_dir  cold_s/jobs/compiles  build_s/jobs/compiles  plan_s
+        action_s/jobs/compiles  forced_s
 
 - cold: the first call, function and ``count()``;
 - build: a second call of the query function alone: Python construction
@@ -15,6 +16,9 @@ For each query and SF directory, one session prints one line:
 - forced: the fastest of 3 calls whose action is a checksum over every
   column (``bit_xor(xxhash64(...))``).  It defeats count-only pruning, so
   every hash and window in the query computes.
+
+``compiles`` counts the generated classes Janino compiled in that phase;
+a class the session's codegen cache already holds costs none.
 
 Below that line comes one line for each ``SnapshotTable`` verb and
 ``StreamingQuery.awaitTermination`` the build ran: calls, seconds and
@@ -96,12 +100,19 @@ def fastest(spark, run, n=3):
     return min(spans, key=lambda s: s.wall_s)
 
 
+def counted(s) -> str:
+    return f"{s.wall_s:.2f}/{s.jobs}/{s.compiles}"
+
+
 def main() -> None:
     sf_dirs = sys.argv[1].split(",")
     names = sys.argv[2:]
     spark = get_spark("profile")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm-up
-    print("query\tsf_dir\tcold_s\tbuild_s/jobs\tplan_s\taction_s/jobs\tforced_s")
+    print(
+        "query\tsf_dir\tcold_s/jobs/compiles\tbuild_s/jobs/compiles\tplan_s\t"
+        "action_s/jobs/compiles\tforced_s"
+    )
     for name in names:
         fn = QUERIES[name]
         for sf in sf_dirs:
@@ -114,9 +125,8 @@ def main() -> None:
             action = fastest(spark, df.count)
             check = fastest(spark, lambda: forced(fn(spark, sf)).collect())
             print(
-                f"{name}\t{sf}\t{cold.wall_s:.2f}\t{build.wall_s:.2f}/{build.jobs}\t"
-                f"{plan.wall_s:.2f}\t{action.wall_s:.2f}/{action.jobs}\t"
-                f"{check.wall_s:.2f}"
+                f"{name}\t{sf}\t{counted(cold)}\t{counted(build)}\t"
+                f"{plan.wall_s:.2f}\t{counted(action)}\t{check.wall_s:.2f}"
             )
             for label, spans in calls.items():
                 if spans:
