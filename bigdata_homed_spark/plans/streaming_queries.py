@@ -11,11 +11,15 @@ its realtime jobs and nightly repair jobs (SURVEY §2.9 T6).
 
 from __future__ import annotations
 
-import os
+import math
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..session import session_dir, session_fixture
+from ..sources.snapshots import SnapshotTable
+from ..sources.tables import load_table
 from ..streaming.jobs import hourly_event_counts, read_events_stream, run_stream_to_memory
 from .analysis_queries import (
     HDR_QS,
@@ -23,29 +27,50 @@ from .analysis_queries import (
     KMV_MAXH,
     SEG_A_SQL,
     SEG_B_SQL,
+    _h40,
     _h40_sql,
     _HDR_B,
 )
 from .registry import query
 
 # ---------------------------------------------------------------------------
-# Session-scoped staging for the replayed-source fixtures.  Every snapshot/
-# state-store stream query drains a staged parquet directory — the stand-in
-# for the Kafka topic a production job would read.  The staged bytes are a
-# pure function of (sf_dir, fixture tag incl. batch count), so re-staging
-# them on every invocation is repeated fixture CONSTRUCTION, not
-# computation: stage once per session through the `session_fixture` memo
-# the snapshot fixtures use.  Only the immutable
-# INPUT is reused — each invocation still runs its full drain (fresh
-# checkpoint, fresh state/table dirs, every commit recomputed), so nothing
-# the oracle checks is ever served from a cache.
-def _stage_source_once(spark: SparkSession, sf_dir: str, tag: str, write) -> str:
-    def build():
-        path = session_dir(spark, f"{tag}_")
-        write(path)
+# The one replayed-source drain of the foreachBatch stream queries.  The
+# batch frame is staged as ``n_batches`` parquet files, the stand-in for the
+# Kafka topic a production job would read, and drained one file per
+# trigger.  The staged bytes are a pure function of (sf_dir, tag,
+# n_batches), so they are written once per session through the
+# `session_fixture` memo.  Only the immutable INPUT is reused: each call
+# still runs its full drain (fresh checkpoint, fresh tables, every commit
+# recomputed), so nothing the oracle checks is ever served from a cache.
+def _drain(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    frame: DataFrame,
+    order_col: str,
+    n_batches: int,
+    process_batch: Callable[[DataFrame, int], None],
+) -> None:
+    """Replay ``frame``, range-split on ``order_col`` into ``n_batches``
+    micro-batches, through ``process_batch(batch_df, batch_id)``."""
+
+    def stage() -> str:
+        path = session_dir(spark, f"{tag}_src_")
+        split = frame.repartitionByRange(n_batches, order_col)
+        split.write.mode("overwrite").parquet(path)
         return path
 
-    return session_fixture(spark, sf_dir, tag, build)
+    staged = session_fixture(spark, sf_dir, f"{tag}{n_batches}", stage)
+    (
+        spark.readStream.schema(frame.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staged)
+        .writeStream.foreachBatch(process_batch)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", session_dir(spark, f"{tag}_ckpt_"))
+        .start()
+        .awaitTermination()
+    )
 
 
 @query(
@@ -70,8 +95,6 @@ def stream_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     in exactly two windows (the reference had no sliding windows; this is
     the Structured-Streaming-native generalization of its wall-clock
     ``timerange`` buckets)."""
-    from pyspark.sql import functions as F
-
     events = read_events_stream(spark, sf_dir)
     agg = (
         events.withWatermark("event_time", "2 hours")
@@ -119,8 +142,6 @@ def stream_channel_hourly_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
     excludes it the same way (`hour_start < last_hour`).  This is the
     documented contract difference vs the batch queries, which see all data.
     """
-    from pyspark.sql import functions as F
-
     events = read_events_stream(spark, sf_dir)
     k = F.coalesce(F.get_json_object("props", "$.k").cast("bigint"), F.lit(0))
     user_grain = (
@@ -160,10 +181,6 @@ def stream_static_segment_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the auto-broadcast threshold), so the streaming side never
     shuffles for the join.  The reference re-read MySQL dims every batch by
     hand; here it's the built-in stream-static join contract."""
-    from pyspark.sql import functions as F
-
-    from ..sources.tables import load_table
-
     events = read_events_stream(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = events.join(cust, events["user_id"] == cust["c_custkey"])
@@ -235,7 +252,6 @@ def stream_online_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_streaming.py::test_state_accumulates_across_microbatches),
     not by this single-batch oracle."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from ..streaming.jobs import online_user_state
 
@@ -271,8 +287,6 @@ def stream_dedup_hourly_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates are discarded from state as the watermark passes — the
     bounded-state spelling of the reference's per-batch reduceByKey dedup
     (ChannelLiveByRunLogRealTime.scala:151-157)."""
-    from pyspark.sql import functions as F
-
     events = read_events_stream(spark, sf_dir)
     dedup = (
         events.withColumn(
@@ -318,8 +332,6 @@ def stream_session_gap_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the batch gap-sessionization truth restricted to watermark-closed
     sessions (`session_end <= max event time`) — the same closed-window
     contract as stream_channel_hourly_uv."""
-    from pyspark.sql import functions as F
-
     events = read_events_stream(spark, sf_dir)
     sess = (
         events.withWatermark("event_time", "0 seconds")
@@ -359,8 +371,6 @@ def stream_stream_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     the other side's watermark passes the bound — bounded memory at any
     scale.  Inner-join emission is eager (not watermark-gated), so the
     oracle is the full batch interval join."""
-    from pyspark.sql import functions as F
-
     views = (
         read_events_stream(spark, sf_dir)
         .where(F.col("event_type") == "view")
@@ -419,18 +429,17 @@ def _run_keyed_upsert_stream(
     when ``retention_sec`` is set) — ONE implementation for both registry
     queries so the keep-latest tiebreaker and stream wiring cannot drift.
 
-    Multi-batch correctness (batches are per-file and NOT event-time
-    ordered): each batch is one ``commit_merge_on_read`` with the
-    ``keep_greatest`` rule, keeping the newer (sec, event_id) per user —
-    so an out-of-order or replayed batch can never overwrite newer state
-    with older events.  The retention cutoff is the running max of event
-    time, read from the table's ``sec`` zone maps, so it is monotonic
-    rather than batch-local; it is applied per batch as a
-    ``commit_delete``."""
-    from pyspark.sql import functions as F
-
-    from ..sources.snapshots import SnapshotTable
-
+    The events replay as 4 micro-batches, each an event-time slice (range
+    split on ``event_id``), which the file source picks up in file
+    modification-time order — not necessarily event-time order.  Each
+    batch is one ``commit_merge_on_read`` with the ``keep_greatest`` rule,
+    keeping the newer (sec, event_id) per user, so an out-of-order or
+    replayed batch can never overwrite newer state with older events.
+    The retention cutoff is the running max of event time, read from the
+    table's ``sec`` zone maps after each batch, so it is monotonic rather
+    than batch-local; it is applied per batch as a ``commit_delete``, and
+    a user it retires comes back when a later batch brings a newer
+    event."""
     t = SnapshotTable(session_dir(spark, "upsert_state_"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -441,16 +450,10 @@ def _run_keyed_upsert_stream(
         if retention_sec is not None and (hmax := _zone_max(t, "sec")) is not None:
             t.commit_delete(batch_df.sparkSession, f"sec < {hmax - retention_sec}")
 
-    events = read_events_stream(spark, sf_dir).select(
+    events = load_table(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "value", F.col("ts_sec").alias("sec")
     )
-    q = (
-        events.writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", session_dir(spark, "upsert_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark, sf_dir, "upsert", events, "event_id", 4, process_batch)
     return t.read(spark)
 
 
@@ -509,7 +512,6 @@ def stream_search_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     once on the materialized counts — the same agg-then-rank split (the rank
     is over the tiny per-(day,key) table, never the raw stream)."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     events = read_events_stream(spark, sf_dir)
     searches = events.where(F.col("event_type") == "click").select(
@@ -628,10 +630,8 @@ def stream_user_status_by_user_log(spark: SparkSession, sf_dir: str) -> DataFram
     terminal dim left-join + nvl(0) (:120-122) runs on the final snapshot
     as a broadcast batch join."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
-    from ..sources.tables import load_table
-    from ..streaming.jobs import read_events_stream, user_status_by_user_log
+    from ..streaming.jobs import user_status_by_user_log
 
     events = read_events_stream(spark, sf_dir)
     # Python-stateful (applyInPandasWithState): keep core-count
@@ -678,52 +678,45 @@ def stream_user_status_by_user_log(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # --------------------------------------------------------------------------
-# Streaming incremental dedup: document ingest as micro-batches, each batch
-# deduplicated against the PERSISTED fingerprint index before admission —
-# the streaming spelling of the dedup family (T1/S10 × dedup_exact), i.e.
-# what a continuous training-data ingest actually runs.  The md5 index is
-# a snapshot table keyed on text_hash; a batch folds its partials into the
-# incumbent rows for its hashes and merges the result back (the same
-# caller-side fold as stream_ivm_aggregates).  Two delivery guarantees,
-# covered by two distinct mechanisms (the r5 advice: associativity alone
-# is NOT a replay guarantee):
-# - OUT-OF-ORDER batches: the merge rule (keeper = min doc_id, copies =
-#   sum) is associative and commutative, so the final state is independent
-#   of arrival order;
+# Streaming incremental dedup: document ingest as micro-batches folded into
+# a persisted fingerprint index — the streaming spelling of the dedup
+# family (T1/S10 × dedup_exact), i.e. what a continuous training-data ingest
+# actually runs.  Each batch folds its rows to one partial per text_hash
+# (keeper = min doc_id with its source, copies = sum) and lands it as one
+# blind, batch-id-stamped append; the index is the same fold over every
+# landed partial, taken at read.  Two delivery guarantees, covered by two
+# distinct mechanisms (associativity alone is NOT a replay guarantee):
+# - OUT-OF-ORDER batches: the fold is associative and commutative, so the
+#   index is independent of arrival order;
 # - REPLAYED batches (foreachBatch is at-least-once — a micro-batch can
-#   re-run after a failure): the merge is stamped with its batch_id, and a
-#   replayed id is skipped whole.  The merge publishes atomically, so a
-#   crash mid-merge leaves nothing half-applied for the replay to heal.
-def dedup_merge_batch(t, batch_df: DataFrame, batch_id: int) -> None:
-    """Merge one ingest micro-batch into the fingerprint index ``t`` (a
-    ``SnapshotTable``), idempotently: a replay of an already-committed
-    ``batch_id`` commits nothing, so it cannot double-count ``n_copies``.
-    Module-level so the replay contract is directly testable."""
-    from pyspark.sql import functions as F
-
-    bagg = (
-        batch_df.select(F.md5("text").alias("text_hash"), "doc_id", "source")
-        .groupBy("text_hash")
-        .agg(
-            F.min("doc_id").alias("keeper_id"),
-            F.min_by("source", "doc_id").alias("keeper_source"),
-            F.count(F.lit(1)).cast("bigint").alias("n_copies"),
-        )
+#   re-run after a failure): the append is stamped with its batch_id, and
+#   the table skips a replayed id whole.  The append publishes atomically,
+#   so a crash mid-commit leaves nothing half-applied for the replay.
+# Stored rows grow as batches × distinct hashes per batch until something
+# folds them; ``t.commit_rewrite(dedup_fold(t.read(spark)))`` bounds them
+# with the table's existing verbs when an ingest needs it.
+def dedup_fold(rows: DataFrame) -> DataFrame:
+    """Fold (text_hash, keeper_id, keeper_source, n_copies) rows to one row
+    per text_hash: a batch's documents on the write side, the landed
+    partials on the read side."""
+    return rows.groupBy("text_hash").agg(
+        F.min("keeper_id").alias("keeper_id"),
+        F.min_by("keeper_source", "keeper_id").alias("keeper_source"),
+        F.sum("n_copies").cast("bigint").alias("n_copies"),
     )
-    if t.versions():
-        existing = t.read(batch_df.sparkSession).join(
-            F.broadcast(bagg.select("text_hash")), "text_hash", "left_semi"
-        )
-        bagg = (
-            bagg.unionByName(existing)
-            .groupBy("text_hash")
-            .agg(
-                F.min("keeper_id").alias("keeper_id"),
-                F.min_by("keeper_source", "keeper_id").alias("keeper_source"),
-                F.sum("n_copies").cast("bigint").alias("n_copies"),
-            )
-        )
-    t.commit_merge_on_read(bagg, key="text_hash", batch_id=batch_id)
+
+
+def dedup_commit_batch(t: SnapshotTable, batch_df: DataFrame, batch_id: int) -> None:
+    """Land one ingest micro-batch's partial in the fingerprint index
+    ``t``; a replay of an already-committed ``batch_id`` commits nothing,
+    so it cannot double-count ``n_copies``."""
+    docs = batch_df.select(
+        F.md5("text").alias("text_hash"),
+        F.col("doc_id").alias("keeper_id"),
+        F.col("source").alias("keeper_source"),
+        F.lit(1).cast("bigint").alias("n_copies"),
+    )
+    t.commit_append(dedup_fold(docs), batch_id=batch_id)
 
 
 @query(
@@ -744,43 +737,15 @@ def dedup_merge_batch(t, batch_df: DataFrame, batch_id: int) -> None:
     """,
 )
 def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ..sources.snapshots import SnapshotTable
-    from ..sources.tables import load_table
-
-    # stage the corpus as 4 files = 4 micro-batches (the single-file fixture
-    # would otherwise collapse to one batch and test nothing incremental)
-    staged = _stage_source_once(
-        spark, sf_dir, "doc_stream4",
-        lambda p: load_table(spark, sf_dir, "documents").repartitionByRange(
-            4, "doc_id"
-        ).write.mode("overwrite").parquet(p),
-    )
-
     t = SnapshotTable(session_dir(spark, "dedup_index_"))
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_merge_batch(t, batch_df, batch_id)
-
-    docs_schema = (
-        "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    # 4 staged batches: the single-file fixture would otherwise collapse to
+    # one batch and test nothing incremental
+    _drain(
+        spark, sf_dir, "dedup",
+        load_table(spark, sf_dir, "documents").select("doc_id", "text", "source"),
+        "doc_id", 4, lambda df, batch_id: dedup_commit_batch(t, df, batch_id),
     )
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", session_dir(spark, "dedup_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
-    index = t.read(spark)
-    return index.groupBy("keeper_source").agg(
+    return dedup_fold(t.read(spark)).groupBy("keeper_source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_unique_docs"),
         F.sum("n_copies").cast("bigint").alias("n_total_docs"),
         (F.sum("n_copies") - F.count(F.lit(1)))
@@ -887,22 +852,6 @@ def stream_channel_live_counts(
     because keep-latest leaves one row per user), the A7 re-agg trick,
     so no second pass and no grouping-sets expansion of the fact.
     """
-    from pyspark.sql import functions as F
-
-    from ..sources.snapshots import SnapshotTable
-    from ..sources.tables import load_table
-
-    # stage the events as n_batches files = n_batches replayed micro-batches
-    # (same T1 staging as stream_incremental_dedup; the snapshot merge makes
-    # the result independent of the split — pinned by
-    # test_channel_live_split_independent)
-    staged = _stage_source_once(
-        spark, sf_dir, f"chl_stream{n_batches}",
-        lambda p: load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value", "props", "ts_sec"
-        ).repartitionByRange(n_batches, "event_id").write.mode("overwrite").parquet(p),
-    )
-
     term = (
         load_table(spark, sf_dir, "customer")
         .where(F.col("c_custkey") % 4 != 0)
@@ -967,21 +916,12 @@ def stream_channel_live_counts(
             keep_greatest=["sec", "event_id"],
         )
 
-    schema = (
-        "event_id bigint, user_id bigint, event_type string, "
-        "value double, props string, ts_sec bigint"
+    # the snapshot merge makes the result independent of the split — pinned
+    # by test_channel_live_split_independent
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value", "props", "ts_sec"
     )
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
-        .writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", session_dir(spark, "chl_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark, sf_dir, "chl", events, "event_id", n_batches, process_batch)
 
     # retention (S13): one DELETE against the final event-time horizon;
     # keep-latest then retention equals the oracle's latest ∩ window
@@ -1079,18 +1019,6 @@ def stream_cdc_apply(
     replay-idempotent (batch id guard; a replayed row ties, and the
     incumbent stays).
     """
-    from pyspark.sql import functions as F
-
-    from ..sources.snapshots import SnapshotTable
-    from ..sources.tables import load_table
-
-    staged = _stage_source_once(
-        spark, sf_dir, f"cdc_stream{n_batches}",
-        lambda p: load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value", "ts_sec"
-        ).repartitionByRange(n_batches, "event_id").write.mode("overwrite").parquet(p),
-    )
-
     t = SnapshotTable(session_dir(spark, "cdc_state_"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1107,21 +1035,10 @@ def stream_cdc_apply(
             ops, key="user_id", batch_id=batch_id, keep_greatest=["sec", "event_id"]
         )
 
-    schema = (
-        "event_id bigint, user_id bigint, event_type string, "
-        "value double, ts_sec bigint"
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value", "ts_sec"
     )
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
-        .writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", session_dir(spark, "cdc_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark, sf_dir, "cdc", events, "event_id", n_batches, process_batch)
 
     # tombstones drop at READ time, never at ingest
     return (
@@ -1161,42 +1078,14 @@ def stream_cdc_apply(
 def stream_snapshot_commits(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ..sources.snapshots import SnapshotTable
-    from ..sources.tables import load_table
-
-    staged = _stage_source_once(
-        spark, sf_dir, f"snapstream{n_batches}",
-        lambda p: load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value", "ts_sec"
-        ).repartitionByRange(n_batches, "event_id").write.mode("overwrite").parquet(p),
-    )
-
     t = SnapshotTable(session_dir(spark, "snapstream_tbl_"))
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        t.commit_append(
-            batch_df.select("event_id", "user_id", "event_type", "value", "ts_sec"),
-            n_files=1,
-            batch_id=batch_id,
-        )
-
-    schema = (
-        "event_id bigint, user_id bigint, event_type string, "
-        "value double, ts_sec bigint"
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value", "ts_sec"
     )
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
-        .writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", session_dir(spark, "snapstream_ckpt_"))
-        .start()
+    _drain(
+        spark, sf_dir, "snapstream", events, "event_id", n_batches,
+        lambda df, batch_id: t.commit_append(df, batch_id=batch_id),
     )
-    q.awaitTermination()
 
     # replay batch 0 with a POISONED frame: a working idempotency guard
     # commits nothing; a broken one adds a bogus group AND a 5th version,
@@ -1247,40 +1136,18 @@ def stream_snapshot_commits(
 def stream_dual_snapshot_commits(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ..sources.snapshots import SnapshotTable
-    from ..sources.tables import load_table
-
-    staged = _stage_source_once(
-        spark, sf_dir, f"snapdual{n_batches}",
-        lambda p: load_table(spark, sf_dir, "events").select(
-            "event_id", "event_type", "value"
-        ).repartitionByRange(n_batches, "event_id").write.mode("overwrite").parquet(p),
-    )
-
     fact = SnapshotTable(session_dir(spark, "snapdual_fact_"))
     agg = SnapshotTable(session_dir(spark, "snapdual_agg_"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.select("event_id", "event_type", "value")
-        fact.commit_append(rows, n_files=1, batch_id=batch_id)
-        partial = rows.groupBy("event_type").agg(
+        fact.commit_append(batch_df, batch_id=batch_id)
+        partial = batch_df.groupBy("event_type").agg(
             F.count(F.lit(1)).cast("bigint").alias("n")
         )
-        agg.commit_append(partial, n_files=1, batch_id=batch_id)
+        agg.commit_append(partial, batch_id=batch_id)
 
-    q = (
-        spark.readStream.schema("event_id bigint, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
-        .writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", session_dir(spark, "snapdual_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    events = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
+    _drain(spark, sf_dir, "snapdual", events, "event_id", n_batches, process_batch)
 
     # the poisoned replay, against BOTH tables: a working guard commits
     # nothing anywhere; a broken one adds a bogus group and a 5th version
@@ -1350,18 +1217,6 @@ def stream_dual_snapshot_commits(
 def stream_mor_upsert(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ..sources.snapshots import SnapshotTable
-    from ..sources.tables import load_table
-
-    staged = _stage_source_once(
-        spark, sf_dir, f"morups{n_batches}",
-        lambda p: load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "value", "ts_sec"
-        ).repartitionByRange(n_batches, "event_id").write.mode("overwrite").parquet(p),
-    )
-
     t = SnapshotTable(session_dir(spark, "morups_tbl_"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1370,19 +1225,10 @@ def stream_mor_upsert(
             keep_greatest=["ts_sec", "event_id"],
         )
 
-    q = (
-        spark.readStream.schema(
-            "event_id bigint, user_id bigint, value double, ts_sec bigint"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
-        .writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", session_dir(spark, "morups_ckpt_"))
-        .start()
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "value", "ts_sec"
     )
-    q.awaitTermination()
+    _drain(spark, sf_dir, "morups", events, "event_id", n_batches, process_batch)
 
     # poisoned replay of batch 0: a working guard merges NOTHING — a broken
     # one would plant an absurd-timestamp row on user -1, add a 5th version
@@ -1429,18 +1275,6 @@ def stream_mor_upsert(
 def stream_partitioned_snapshot_sink(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ..sources.snapshots import SnapshotTable
-    from ..sources.tables import load_table
-
-    staged = _stage_source_once(
-        spark, sf_dir, f"snappart{n_batches}",
-        lambda p: load_table(spark, sf_dir, "events").select(
-            "event_id", "event_type", "ts_sec"
-        ).repartitionByRange(n_batches, "event_id").write.mode("overwrite").parquet(p),
-    )
-
     t = SnapshotTable(session_dir(spark, "snappart_tbl_"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1451,21 +1285,10 @@ def stream_partitioned_snapshot_sink(
             .groupBy("day", "event_type")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         )
-        t.commit_append(
-            partial, n_files=1, partition_by=["day"], batch_id=batch_id
-        )
+        t.commit_append(partial, partition_by=["day"], batch_id=batch_id)
 
-    q = (
-        spark.readStream.schema("event_id bigint, event_type string, ts_sec bigint")
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
-        .writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", session_dir(spark, "snappart_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    events = load_table(spark, sf_dir, "events").select("event_id", "event_type", "ts_sec")
+    _drain(spark, sf_dir, "snappart", events, "event_id", n_batches, process_batch)
 
     # poisoned replay of batch 0 (absurd day + bogus type): a working
     # batch-id guard commits nothing for partitioned appends too
@@ -1494,19 +1317,48 @@ def stream_partitioned_snapshot_sink(
 # streaming sink here: the maintained state is an AGGREGATE view
 # (per-type count + sum), not keyed latest rows, and the changelog carries
 # DELETES that must subtract exactly what their inserts added.  Per batch:
-# signed deltas (+1/+value insert, -1/-value retract) fold into the view
-# by an additive merge against the incumbent rows for the touched keys
-# (commit_merge_on_read keyed by event_type — DV-kill + fresh partials,
-# O(touched groups) per batch), stamped with the batch_id for exactly-once.
-# Because addition commutes, the converged view is BATCHING-INDEPENDENT —
-# which is what makes the batching-blind SQL oracle possible — and sums
-# ride decimal(27,6) so a retraction cancels its insert bit-exactly.
-# Groups driven to zero stay in the TABLE as consolidation state (the
-# tombstone-is-state rule of stream_cdc_apply) and are dropped at READ:
-# the synthetic '__temp__' group is fully inserted then fully retracted
+# signed deltas (+1/+value insert, -1/-value retract) are summed per type
+# and the partial lands as one blind append stamped with the batch_id for
+# exactly-once; the view sums the landed partials per type at read.
+# Because addition commutes, the view is BATCHING-INDEPENDENT — which is
+# what makes the batching-blind SQL oracle possible — and sums ride
+# decimal(27,6) so a retraction cancels its insert bit-exactly.  Groups
+# that fold to zero are dropped by the view, not by the fold: the
+# synthetic '__temp__' group is fully inserted then fully retracted
 # in-stream, so a broken zero-drop (or a lost retraction) surfaces as an
 # extra oracle row.  The poisoned replay of batch 0 after the drain pins
-# the idempotency guard via the n_versions=4 literal.
+# the idempotency guard via the n_versions=4 literal.  Stored rows grow as
+# batches × touched groups until something folds them;
+# ``t.commit_rewrite(ivm_fold(t.read(spark)))`` bounds them with the
+# table's existing verbs when a stream needs it.
+def ivm_fold(rows: DataFrame) -> DataFrame:
+    """Sum (event_type, n_live, s_live) rows per event_type: a batch's
+    signed deltas on the write side, the landed partials on the read side.
+    A group that folds to n_live = 0 is kept."""
+    return rows.groupBy("event_type").agg(
+        F.sum("n_live").cast("bigint").alias("n_live"),
+        F.sum("s_live").cast("decimal(27,6)").alias("s_live"),
+    )
+
+
+def ivm_commit_batch(t: SnapshotTable, batch_df: DataFrame, batch_id: int) -> None:
+    """Land one changelog micro-batch's (seq, event_type, value, sign) rows
+    in ``t`` as a per-type partial; a replayed ``batch_id`` commits
+    nothing."""
+    deltas = batch_df.select(
+        "event_type",
+        F.col("sign").cast("bigint").alias("n_live"),
+        (F.col("sign") * F.col("value").cast("decimal(27,6)")).alias("s_live"),
+    )
+    t.commit_append(ivm_fold(deltas), batch_id=batch_id)
+
+
+def ivm_view(spark: SparkSession, t: SnapshotTable) -> DataFrame:
+    """The maintained view: the partials folded per type, zero-count
+    groups dropped."""
+    return ivm_fold(t.read(spark)).where(F.col("n_live") != 0)
+
+
 @query(
     "stream_ivm_aggregates",
     oracle="""
@@ -1521,11 +1373,6 @@ def stream_partitioned_snapshot_sink(
 def stream_ivm_aggregates(
     spark: SparkSession, sf_dir: str, n_batches: int = 4
 ) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from ..sources.snapshots import SnapshotTable
-    from ..sources.tables import load_table
-
     # changelog synthesis: every event is inserted; events with
     # event_id % 5 == 0 are retracted LATER (seq pushes all deletes after
     # all inserts under the range batching); the '__temp__' group is born
@@ -1552,62 +1399,13 @@ def stream_ivm_aggregates(
         (F.col("seq") + big + big).alias("seq"), "event_type", "value",
         F.lit(-1).alias("sign"),
     )
-    staged = _stage_source_once(
-        spark, sf_dir, f"ivmagg{n_batches}",
-        lambda p: inserts.unionByName(deletes).unionByName(tmp_rows).unionByName(
-            tmp_dels
-        ).repartitionByRange(n_batches, "seq").write.mode("overwrite").parquet(p),
-    )
+    changelog = inserts.unionByName(deletes).unionByName(tmp_rows).unionByName(tmp_dels)
 
     t = SnapshotTable(session_dir(spark, "ivmagg_tbl_"))
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        delta = batch_df.groupBy("event_type").agg(
-            F.sum("sign").cast("bigint").alias("d_n"),
-            F.sum(F.col("sign") * F.col("value").cast("decimal(27,6)")).alias("d_s"),
-        )
-        if t.versions():
-            incumbent = t.read(spark).join(
-                F.broadcast(delta.select("event_type")), "event_type", "left_semi"
-            )
-            delta = (
-                incumbent.select(
-                    "event_type",
-                    F.col("n_live").alias("i_n"),
-                    F.col("s_live").alias("i_s"),
-                )
-                .join(delta, "event_type", "full_outer")
-                .select(
-                    "event_type",
-                    (
-                        F.coalesce("i_n", F.lit(0)) + F.coalesce("d_n", F.lit(0))
-                    ).cast("bigint").alias("d_n"),
-                    (
-                        F.coalesce(F.col("i_s"), F.lit(0).cast("decimal(27,6)"))
-                        + F.coalesce(F.col("d_s"), F.lit(0).cast("decimal(27,6)"))
-                    ).cast("decimal(27,6)").alias("d_s"),
-                )
-            )
-        merged = delta.select(
-            "event_type",
-            F.col("d_n").alias("n_live"),
-            F.col("d_s").cast("decimal(27,6)").alias("s_live"),
-        )
-        t.commit_merge_on_read(merged, key="event_type", batch_id=batch_id)
-
-    q = (
-        spark.readStream.schema(
-            "seq bigint, event_type string, value double, sign int"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
-        .writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", session_dir(spark, "ivmagg_ckpt_"))
-        .start()
+    _drain(
+        spark, sf_dir, "ivmagg", changelog, "seq", n_batches,
+        lambda df, batch_id: ivm_commit_batch(t, df, batch_id),
     )
-    q.awaitTermination()
 
     # poisoned replay of batch 0: a working guard folds nothing — a broken
     # one would plant a '__replayed__' group and a 5th version
@@ -1615,18 +1413,13 @@ def stream_ivm_aggregates(
         [(0, "__replayed__", 1.0, 1)],
         "seq bigint, event_type string, value double, sign int",
     )
-    process_batch(poison, 0)
+    ivm_commit_batch(t, poison, 0)
 
-    # the VIEW: zero-count groups are consolidation state, dropped at read
-    return (
-        t.read(spark)
-        .where(F.col("n_live") != 0)
-        .select(
-            "event_type",
-            F.col("n_live").cast("bigint").alias("n_live"),
-            F.col("s_live").cast("double").alias("sum_live"),
-            F.lit(len(t.versions())).cast("bigint").alias("n_versions"),
-        )
+    return ivm_view(spark, t).select(
+        "event_type",
+        "n_live",
+        F.col("s_live").cast("double").alias("sum_live"),
+        F.lit(len(t.versions())).cast("bigint").alias("n_versions"),
     )
 
 
@@ -1636,19 +1429,45 @@ def stream_ivm_aggregates(
 # keep the K smallest — so maintaining one incrementally over micro-batches
 # MUST reproduce the batch sketch bit-for-bit (the oracle below is the same
 # SQL as kmv_audience_overlap's sketch columns, computed over the whole
-# table at once).  The merged top-K is always a subset of
-# state_topK ∪ batch_topK, so each batch contributes at most K rows per
-# segment: the collect is sketch-bounded (≤ 2K = 64 rows/batch), and the
-# persisted state is one tiny JSON written atomically (tmp+replace).
-# Replay safety comes free: sketch union is idempotent AND commutative, so
-# a replayed or reordered batch cannot change the converged sketch — no
-# batch-id dedup needed, unlike the additive IVM jobs (T7).
+# table at once).  The merged top-K is a subset of the union of the
+# per-batch top-Ks, so each batch lands at most K (seg, h) rows per segment
+# as one batch-id-stamped append, and the readout keeps the K smallest
+# distinct hashes per segment over at most K × batches rows.  Sketch union
+# is idempotent and commutative, so a replayed or reordered batch could not
+# change the converged sketch even without the table's batch-id guard.
 #
 # At 100 TB this is the shape of every streaming distinct-cardinality
 # dashboard: per-batch work is one scan + a TakeOrderedAndProject cut to
-# K rows; state is O(K) regardless of history; and the exact same sketch
-# bytes can be unioned ACROSS streams/partitions/days later (the
-# DataSketches set-operation contract).
+# K rows, and the exact same sketch rows can be unioned ACROSS
+# streams/partitions/days later (the DataSketches set-operation contract).
+# Stored rows grow as K × batches until something folds them;
+# ``commit_rewrite`` of the readout's K rows per segment bounds them.
+KMV_SEGMENTS = (("a", SEG_A_SQL), ("b", SEG_B_SQL))
+
+
+def kmv_commit_batch(t: SnapshotTable, batch_df: DataFrame, batch_id: int) -> None:
+    """Land one batch's K smallest distinct user hashes per segment in
+    ``t`` as (seg, h) rows."""
+    parts = [
+        batch_df.where(F.expr(pred))
+        .select(F.lit(seg).alias("seg"), _h40(F.col("user_id")).alias("h"))
+        .distinct()
+        .orderBy("h")
+        .limit(KMV_K)
+        for seg, pred in KMV_SEGMENTS
+    ]
+    t.commit_append(parts[0].unionByName(parts[1]), batch_id=batch_id)
+
+
+def kmv_sketches(spark: SparkSession, t: SnapshotTable) -> dict[str, list[int]]:
+    """Each segment's sketch: the K smallest distinct hashes over every
+    landed (seg, h) row, ascending."""
+    hashes: dict[str, set[int]] = {seg: set() for seg, _ in KMV_SEGMENTS}
+    for r in t.read(spark).collect():
+        hashes[r["seg"]].add(r["h"])
+    return {seg: sorted(hs)[:KMV_K] for seg, hs in hashes.items()}
+
+
 @query(
     "stream_kmv_sketch_merge",
     # oracle interpolates the SAME constants (KMV_K/KMV_MAXH/SEG_*_SQL/
@@ -1691,73 +1510,21 @@ def stream_ivm_aggregates(
     """,
 )
 def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json
-    import os
-    from pyspark.sql import functions as F
-
-    from ..sources.tables import load_table
-    from .analysis_queries import _h40  # scalar constants imported at module level
-
-    # stage the fact as 4 micro-batches (narrow projection: the sketch
-    # needs nothing but the segment predicate columns)
-    staged = _stage_source_once(
-        spark, sf_dir, "kmv_stream4",
-        lambda p: load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "value"
-        ).repartitionByRange(4, "event_id").write.mode("overwrite").parquet(p),
+    t = SnapshotTable(session_dir(spark, "kmv_tbl_"))
+    # narrow projection: the sketch needs nothing but the segment predicate
+    # columns
+    events = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "event_type", "value"
     )
-
-    state_path = os.path.join(session_dir(spark, "kmv_state_"), "sketch.json")
-
-    def load_state() -> dict:
-        try:
-            with open(state_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"a": [], "b": []}
-
-    def merge(old: list[int], batch: list[int]) -> list[int]:
-        return sorted(set(old) | set(batch))[:KMV_K]
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        state = load_state()
-        for seg, pred in (("a", SEG_A_SQL), ("b", SEG_B_SQL)):
-            # batch-side top-K: the merged top-K is a subset of
-            # state_topK ∪ batch_topK, so K rows is all a batch can add
-            rows = (
-                batch_df.where(F.expr(pred))
-                .select(_h40(F.col("user_id")).alias("h"))
-                .distinct()
-                .orderBy("h")
-                .limit(KMV_K)
-                .collect()
-            )
-            state[seg] = merge(state[seg], [r["h"] for r in rows])
-        tmp = state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, state_path)  # atomic; idempotent under replay
-
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, user_id bigint, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
+    _drain(
+        spark, sf_dir, "kmv", events, "event_id", 4,
+        lambda df, batch_id: kmv_commit_batch(t, df, batch_id),
     )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", session_dir(spark, "kmv_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
 
     # readout: the same exact-bigint estimator arithmetic as the batch
-    # query, over the converged O(K) state (sketch-sized driver math)
-    state = load_state()
-    ska, skb = state["a"], state["b"]
+    # query, over the converged sketches (sketch-sized driver math)
+    sketches = kmv_sketches(spark, t)
+    ska, skb = sketches["a"], sketches["b"]
     th_a = KMV_MAXH if len(ska) < KMV_K else ska[-1]
     th_b = KMV_MAXH if len(skb) < KMV_K else skb[-1]
     theta = min(th_a, th_b)
@@ -1776,15 +1543,43 @@ def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming HDR-histogram sketch maintenance: the ADDITIVE-merge
 # counterpart of stream_kmv_sketch_merge.  Bucket counts merge by
 # addition, which — unlike KMV set-union — is NOT idempotent, so this job
-# carries the T7 exactly-once contract explicitly: the persisted state
-# records processed batch ids and a replayed batch is skipped whole (the
-# same batch-id-stamped-commit recipe as the snapshot sinks,
-# `sources/snapshots.py::commit_append`).  The query re-plays batch 0
-# through the sink after convergence and pins that the state did not
-# move.  Per-batch work: one combinable groupBy cut to the O(64·2^p)
-# bucket frame; state is O(buckets) regardless of history; the readout
+# leans on the T7 exactly-once contract: each batch's (bucket, lower_fp,
+# cnt) frame lands as one batch-id-stamped append, and the table skips a
+# replayed id whole (`sources/snapshots.py::commit_append`).  The query
+# re-plays batch 0 through the sink after convergence and pins that no
+# version was committed.  Per-batch work: one combinable groupBy cut to
+# the O(64·2^p) bucket frame; the readout sums the counts per bucket and
 # must reproduce the whole-table batch sketch bucket-for-bucket (the
-# oracle is the same SQL as hdr_histogram_quantiles' sketch walk).
+# oracle is the same SQL as hdr_histogram_quantiles' sketch walk).  Stored
+# rows grow as buckets × batches until something folds them;
+# ``commit_rewrite`` of the summed buckets bounds them.
+def hdr_commit_batch(t: SnapshotTable, batch_df: DataFrame, batch_id: int) -> None:
+    """Land one batch's HDR bucket counts of ``value`` in ``t``."""
+    buckets = (
+        batch_df.select(F.expr("cast(floor(value * 100) as bigint)").alias("v"))
+        .where(F.col("v") >= 1)
+        .select(
+            F.expr(_HDR_B["bucket"]).alias("bucket"),
+            F.expr(_HDR_B["lower"]).alias("lower_fp"),
+        )
+        .groupBy("bucket", "lower_fp")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    t.commit_append(buckets, batch_id=batch_id)
+
+
+def hdr_buckets(spark: SparkSession, t: SnapshotTable) -> list[tuple[int, int]]:
+    """(lower_fp, count) per bucket, summed over every landed batch and
+    ordered by lower bound."""
+    rows = (
+        t.read(spark)
+        .groupBy("bucket", "lower_fp")
+        .agg(F.sum("cnt").alias("cnt"))
+        .collect()  # bounded: O(64 * 2^p) bucket rows, never data-sized
+    )
+    return sorted((r["lower_fp"], r["cnt"]) for r in rows)
+
+
 @query(
     "stream_hdr_sketch_merge",
     oracle=f"""
@@ -1820,86 +1615,25 @@ def stream_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_hdr_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json
-    import math
-    import os
-    from pyspark.sql import functions as F
-
-    from ..sources.tables import load_table
-
-    staged = _stage_source_once(
-        spark, sf_dir, "hdr_stream4",
-        lambda p: load_table(spark, sf_dir, "events").select(
-            "event_id", "value"
-        ).repartitionByRange(4, "event_id").write.mode("overwrite").parquet(p),
+    t = SnapshotTable(session_dir(spark, "hdr_tbl_"))
+    events = load_table(spark, sf_dir, "events").select("event_id", "value")
+    _drain(
+        spark, sf_dir, "hdr", events, "event_id", 4,
+        lambda df, batch_id: hdr_commit_batch(t, df, batch_id),
     )
 
-    state_path = os.path.join(session_dir(spark, "hdr_state_"), "sketch.json")
-
-    def load_state() -> dict:
-        try:
-            with open(state_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"seen": [], "buckets": {}}
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        state = load_state()
-        if batch_id in state["seen"]:
-            return  # replayed batch: additive merge must skip it whole
-        rows = (
-            batch_df.select(
-                F.expr("cast(floor(value * 100) as bigint)").alias("v")
-            )
-            .where(F.col("v") >= 1)
-            .select(
-                F.expr(_HDR_B["bucket"]).alias("bucket"),
-                F.expr(_HDR_B["lower"]).alias("lower_fp"),
-            )
-            .groupBy("bucket", "lower_fp")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()  # bounded: O(64 * 2^p) bucket rows, never data-sized
-        )
-        for r in rows:
-            key = str(r["bucket"])
-            lo, cnt = state["buckets"].get(key, (r["lower_fp"], 0))
-            state["buckets"][key] = [r["lower_fp"], cnt + r["cnt"]]
-        state["seen"].append(batch_id)
-        tmp = state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, state_path)  # atomic commit of state + dedup record
-
-    stream = (
-        spark.readStream.schema("event_id bigint, value double")
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(staged)
-    )
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", session_dir(spark, "hdr_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
-
-    # replay probe: push a seen batch id through the sink again — the
-    # batch-id guard must leave the persisted state bit-identical
-    before = json.dumps(load_state(), sort_keys=True)
-    first = sorted(os.listdir(staged))
-    replay_df = spark.read.parquet(
-        os.path.join(staged, next(n for n in first if n.endswith(".parquet")))
-    )
-    process_batch(replay_df, 0)
-    replay_safe = json.dumps(load_state(), sort_keys=True) == before
+    # replay probe: push a committed batch id through the sink again, with
+    # a frame that would add a bogus bucket — the batch-id guard must
+    # commit no version
+    head = t.versions()
+    poison = spark.createDataFrame([(-1, 1.0e6)], "event_id bigint, value double")
+    hdr_commit_batch(t, poison, 0)
+    replay_safe = t.versions() == head
 
     # sketch-sized driver readout, same arithmetic as the batch oracle
-    state = load_state()
-    buckets = sorted(
-        ((v[0], v[1]) for v in state["buckets"].values()), key=lambda t: t[0]
-    )
+    buckets = hdr_buckets(spark, t)
     n = sum(c for _, c in buckets)
+    n_batches = len(t.committed_batch_ids())
     out = []
     for qq in HDR_QS:
         r = math.ceil(qq * n)
@@ -1910,17 +1644,7 @@ def stream_hdr_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             if cum >= r:
                 est_fp = lo
                 break
-        out.append(
-            (
-                qq,
-                n,
-                r,
-                est_fp / 100.0,
-                len(buckets),
-                len(state["seen"]),
-                bool(replay_safe),
-            )
-        )
+        out.append((qq, n, r, est_fp / 100.0, len(buckets), n_batches, replay_safe))
     return spark.createDataFrame(
         out,
         "q double, n_total bigint, rank_r bigint, est_value double, "
@@ -1983,8 +1707,6 @@ def stream_hdr_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     ev = read_events_stream(spark, sf_dir).withColumn(
         "event_sec", F.timestamp_seconds(F.col("ts_sec"))
     )

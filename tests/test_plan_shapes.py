@@ -764,3 +764,21 @@ def test_merge_latest_job_count_ceiling(spark, tmp_path):
             t.commit_merge_on_read(upd, key="k", keep_greatest=["sec"])
         counts.append(s.jobs)
     assert max(counts) <= 6, counts
+
+
+def test_mergeable_stream_job_count_ceiling(spark, sf_dir):
+    """Pin the warm build jobs of the two caller-fold streams (36 -> 13
+    and 31 -> 13 at sf0.01) once each batch lands its partial as a blind
+    ``commit_append`` folded at read.  The caller-side fold read the
+    incumbents and ran a keyed ``commit_merge_on_read`` per batch; either
+    re-adds whole jobs per batch, which these ceilings catch."""
+    from bigdata_homed_spark.plans import QUERIES
+
+    ceilings = {"stream_ivm_aggregates": 18, "stream_incremental_dedup": 16}
+    counts = {}
+    for name in ceilings:
+        QUERIES[name](spark, sf_dir)  # warm-up: stages the source
+        with span(spark) as s:
+            QUERIES[name](spark, sf_dir)
+        counts[name] = s.jobs
+    assert all(counts[n] <= c for n, c in ceilings.items()), counts

@@ -236,9 +236,12 @@ def test_online_user_state_totals(spark, sf_dir):
 
 def test_incremental_dedup_batch_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: re-running the SAME (batch_df,
-    batch_id) must leave the fingerprint index byte-identical (no
-    n_copies double-count), while a NEW batch id still merges."""
-    from bigdata_homed_spark.plans.streaming_queries import dedup_merge_batch
+    batch_id) must commit no version and leave the folded index identical
+    (no n_copies double-count), while a NEW batch id still folds in."""
+    from bigdata_homed_spark.plans.streaming_queries import (
+        dedup_commit_batch,
+        dedup_fold,
+    )
     from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
     store = SnapshotTable(str(tmp_path / "idx"))
@@ -246,33 +249,37 @@ def test_incremental_dedup_batch_replay_is_idempotent(spark, tmp_path):
         [(1, "alpha", "s1"), (2, "alpha", "s1"), (3, "beta", "s2")],
         "doc_id bigint, text string, source string",
     )
-    dedup_merge_batch(store, b0, 0)
+    dedup_commit_batch(store, b0, 0)
 
     def snapshot():
         return sorted(
             (r["text_hash"], r["keeper_id"], r["n_copies"])
-            for r in store.read(spark).collect()
+            for r in dedup_fold(store.read(spark)).collect()
         )
 
     after_b0 = snapshot()
     assert [c for _, _, c in after_b0] == [2, 1]
 
-    # replay of batch 0 (same id): a per-row no-op
-    dedup_merge_batch(store, b0, 0)
+    # replay of batch 0 (same id): no version, and a per-row no-op
+    n_versions = len(store.versions())
+    dedup_commit_batch(store, b0, 0)
+    assert len(store.versions()) == n_versions
     assert snapshot() == after_b0
 
-    # a genuinely new batch still merges (alpha gains a copy, gamma appears)
+    # a genuinely new batch still folds in (alpha gains a copy, gamma appears)
     b1 = spark.createDataFrame(
         [(4, "alpha", "s1"), (5, "gamma", "s3")],
         "doc_id bigint, text string, source string",
     )
-    dedup_merge_batch(store, b1, 1)
+    dedup_commit_batch(store, b1, 1)
     after_b1 = snapshot()
     copies = {h: c for h, _, c in after_b1}
     assert sorted(copies.values()) == [1, 1, 3]
 
     # and replaying batch 1 changes nothing
-    dedup_merge_batch(store, b1, 1)
+    n_versions = len(store.versions())
+    dedup_commit_batch(store, b1, 1)
+    assert len(store.versions()) == n_versions
     assert snapshot() == after_b1
 
 
@@ -359,59 +366,47 @@ def test_kafka_provider_selection_both_ways(spark, sf_dir):
 
 def test_ivm_fold_retraction_and_zero_group_state(spark, tmp_path):
     """The additive IVM fold: a retraction cancels its insert bit-exactly
-    (decimal path), a fully-retracted group stays in the TABLE as a
-    zero-count consolidation row but vanishes from the read view, and a
-    replayed batch folds nothing."""
-    from pyspark.sql import functions as F
-
+    (decimal path), a fully-retracted group folds to a zero-count row that
+    only the view drops, and a replayed batch folds nothing."""
+    from bigdata_homed_spark.plans.streaming_queries import (
+        ivm_commit_batch,
+        ivm_fold,
+        ivm_view,
+    )
     from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
     t = SnapshotTable(str(tmp_path / "ivm"))
 
-    def fold(rows, batch_id):
+    def commit(rows, batch_id):
         batch = spark.createDataFrame(
-            rows, "event_type string, value double, sign int"
+            [(i, *r) for i, r in enumerate(rows)],
+            "seq bigint, event_type string, value double, sign int",
         )
-        delta = batch.groupBy("event_type").agg(
-            F.sum("sign").cast("bigint").alias("d_n"),
-            F.sum(F.col("sign") * F.col("value").cast("decimal(27,6)")).alias("d_s"),
-        )
-        if t.versions():
-            inc = t.read(spark).join(
-                F.broadcast(delta.select("event_type")), "event_type", "left_semi"
-            )
-            delta = (
-                inc.select("event_type", F.col("n_live").alias("i_n"), F.col("s_live").alias("i_s"))
-                .join(delta, "event_type", "full_outer")
-                .select(
-                    "event_type",
-                    (F.coalesce("i_n", F.lit(0)) + F.coalesce("d_n", F.lit(0))).cast("bigint").alias("d_n"),
-                    (
-                        F.coalesce(F.col("i_s"), F.lit(0).cast("decimal(27,6)"))
-                        + F.coalesce(F.col("d_s"), F.lit(0).cast("decimal(27,6)"))
-                    ).cast("decimal(27,6)").alias("d_s"),
-                )
-            )
-        merged = delta.select(
-            "event_type", F.col("d_n").alias("n_live"), F.col("d_s").cast("decimal(27,6)").alias("s_live")
-        )
-        t.commit_merge_on_read(merged, key="event_type", batch_id=batch_id)
+        ivm_commit_batch(t, batch, batch_id)
 
-    fold([("a", 0.1, 1), ("a", 0.2, 1), ("b", 7.75, 1)], 0)
-    fold([("a", 0.1, -1), ("b", 1.0, 1)], 1)   # retract one 'a' insert
-    fold([("b", 7.75, -1), ("b", 1.0, -1)], 2)  # drive 'b' to zero
+    commit([("a", 0.1, 1), ("a", 0.2, 1), ("b", 7.75, 1)], 0)
+    commit([("a", 0.1, -1), ("b", 1.0, 1)], 1)   # retract one 'a' insert
+    commit([("b", 7.75, -1), ("b", 1.0, -1)], 2)  # drive 'b' to zero
 
-    table = {r["event_type"]: r for r in t.read(spark).collect()}
-    # zero-count group kept as consolidation state ...
-    assert table["b"]["n_live"] == 0 and float(table["b"]["s_live"]) == 0.0
+    folded = {r["event_type"]: r for r in ivm_fold(t.read(spark)).collect()}
+    # zero-count group kept by the fold ...
+    assert folded["b"]["n_live"] == 0 and float(folded["b"]["s_live"]) == 0.0
     # ... and the decimal retraction cancelled the insert exactly
-    assert table["a"]["n_live"] == 1 and float(table["a"]["s_live"]) == 0.2
+    assert folded["a"]["n_live"] == 1 and float(folded["a"]["s_live"]) == 0.2
+    # ... and only the view drops it
+    view = {r["event_type"]: r["n_live"] for r in ivm_view(spark, t).collect()}
+    assert view == {"a": 1}
 
     # replayed batch folds nothing (no extra version, no double subtract)
     n_versions = len(t.versions())
-    fold([("a", 0.2, -1)], 1)
+    commit([("a", 0.2, -1)], 1)
     assert len(t.versions()) == n_versions
-    assert {r["event_type"]: r["n_live"] for r in t.read(spark).collect()}["a"] == 1
+    assert {r["event_type"]: r["n_live"] for r in ivm_fold(t.read(spark)).collect()}["a"] == 1
+
+    # a new batch id still folds in
+    commit([("a", 0.2, -1), ("c", 3.5, 1)], 3)
+    view = {r["event_type"]: r["n_live"] for r in ivm_view(spark, t).collect()}
+    assert view == {"c": 1}
 
 
 def test_kafka_probe_decision_matches_classpath(spark, monkeypatch):
