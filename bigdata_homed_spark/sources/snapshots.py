@@ -1536,31 +1536,21 @@ class SnapshotTable:
             return self.commit_append(
                 updates, n_new_files, stats_cols, batch_id=batch_id
             )
-        updates = self._apply_generated(updates)
-        self._enforce_constraints(updates, self._incoming_constraints())
         head = versions[-1] if versions else 0
         m = self._manifest(head) if versions else {"files": []}
-        mapping = m.get("column_map", {})
-        ext = self._extended_map(updates.columns, mapping)
         # the updates land as FLAT new files even on a Hive-partitioned
         # parent — safe since reads group the layout generations
         # (_read_entries); the strict guard applies only to
         # commit_append without evolve=True
-        new, scan = self._write_merge_batch(
-            updates, key, head, n_new_files, stats_cols
+        _, new, losers, ext = self._merge_prelude(
+            updates, key, head, m, n_new_files, stats_cols,
+            keep_greatest=keep_greatest,
         )
         dvs = list(m.get("delete_files", []))
-        if scan or keep_greatest:
+        if losers is not None:
             # write IS the emptiness probe (footer row count): one action
             # instead of probe + write, and no doomed persist
-            dvs += self._write_delete_files_nonempty(
-                self._merge_losers(
-                    updates.sparkSession,
-                    {**m, "column_map": ext or mapping},
-                    self._to_physical(updates, mapping).schema,
-                    key, keep_greatest or [], scan, new,
-                )
-            )
+            dvs += self._write_delete_files_nonempty(losers)
         return self._publish(
             list(m["files"]) + new,
             batch_id=batch_id,
@@ -1568,6 +1558,73 @@ class SnapshotTable:
             delete_files=dvs or None,
             column_map=ext,
         )
+
+    def _merge_prelude(
+        self,
+        updates: DataFrame,
+        key: str,
+        head: int,
+        m: dict,
+        n_new_files: int,
+        stats_cols: list[str] | None,
+        partition_by: list[str] | None = None,
+        keep_greatest: list[str] | None = None,
+    ) -> tuple[DataFrame, list[dict], DataFrame | None, dict | None]:
+        """The part both merge verbs share, against manifest ``m`` of
+        version ``head`` (0 for the empty table): generated columns and
+        constraints applied to ``updates``, the column mapping extended,
+        the batch landed and routed, and the loser decision built.
+        Returns ``(updates as landed, new entries, losers, extended
+        mapping)``; ``losers`` (``_merge_losers``) is None when no
+        incumbent can hold a batch key and no rule ranks the batch's own
+        rows.
+
+        The batch lands FIRST, partitioned by ``partition_by`` (the new
+        files join the manifest only at the atomic publish, so the order
+        against the loser scan is free), with the key added to
+        ``stats_cols``: the key's zone map in the footers the write just
+        produced gives the batch's key range without a separate job, and
+        lets every later merge prune these files.  Routing then keeps the
+        incumbents that may hold a batch key: when the key is a partition
+        column of the new files, manifest-only partition pruning on the
+        batch's key values; otherwise zone-map routing on that key range
+        (parquet truncation only ever widens a footer's [min, max], and
+        files without a zone map are kept)."""
+        updates = self._apply_generated(updates)
+        self._enforce_constraints(updates, self._incoming_constraints())
+        if partition_by and not set(partition_by) <= set(updates.columns):
+            raise ValueError(
+                f"commit_merge updates must carry the table's partition "
+                f"columns {tuple(partition_by)} so upserted rows keep their layout"
+            )
+        mapping = m.get("column_map", {})
+        ext = self._extended_map(updates.columns, mapping)
+        physical = self._to_physical(updates, mapping)
+        new = self._write_data_files(
+            physical,
+            n_new_files,
+            self._physical_names(mapping, [*(stats_cols or []), key]),
+            partition_by=partition_by,
+        )
+        values = {e["partitions"][key] for e in new if key in e.get("partitions", {})}
+        rng = self._key_range_from_footers(new, mapping.get(key, key))
+        if not head:
+            scan = []
+        elif values:
+            scan = self.pruned_entries(version=head, partitions={key: values})
+        elif rng is None:
+            scan = list(m["files"])
+        else:
+            scan = self.pruned_entries(key, *rng, version=head) if rng else []
+        if not (scan or keep_greatest):
+            return updates, new, None, ext
+        losers = self._merge_losers(
+            updates.sparkSession,
+            {**m, "column_map": ext or mapping},
+            physical.schema,
+            key, keep_greatest or [], scan, new,
+        )
+        return updates, new, losers, ext
 
     def _merge_losers(
         self,
@@ -1580,7 +1637,9 @@ class SnapshotTable:
         new: list[dict],
     ) -> DataFrame:
         """The (``__file``, ``__pos``) of every row that loses its key in a
-        merge-on-read commit: ONE window over the live rows of ``scan``
+        merge — the one loser decision of both merge verbs (merge-on-read
+        publishes it as a deletion vector, copy-on-write folds it into the
+        files it hits): ONE window over the live rows of ``scan``
         (the key-range-pruned incumbents) and ``new`` (the batch's freshly
         written files), partitioned by key, ordered by ``cols`` descending
         and then incumbent first under a rule, batch first without one;
@@ -1613,49 +1672,15 @@ class SnapshotTable:
             .select("__file", "__pos")
         )
 
-    def _write_merge_batch(
-        self,
-        updates: DataFrame,
-        key: str,
-        version: int,
-        n_new_files: int,
-        stats_cols: list[str] | None,
-        partition_by: list[str] | None = None,
-    ) -> tuple[list[dict], list[dict]]:
-        """The half both merge verbs share.  ``updates`` lands as new data
-        files FIRST (they join the manifest only at the atomic publish, so
-        the order against hit detection is free), with the key added to
-        ``stats_cols``: the key's zone map in the footers the write just
-        produced gives this commit the batch's key range without a
-        separate job, and lets every later merge prune these files.
-        Returns ``(new entries, entries of version that may hold a batch
-        key)``: zone-map routing keeps only incumbents whose key range
-        overlaps the batch's (parquet truncation only ever widens a
-        footer's [min, max], and files without a zone map are kept).
-        A falsy ``version`` is the empty table: nothing to route."""
-        m = self._manifest(version) if version else {"files": []}
-        mapping = m.get("column_map", {})
-        new = self._write_data_files(
-            self._to_physical(updates, mapping),
-            n_new_files,
-            self._physical_names(mapping, [*(stats_cols or []), key]),
-            partition_by=partition_by,
-        )
-        rng = self._key_range_from_footers(new, mapping.get(key, key))
-        if rng is None:
-            return new, list(m["files"])
-        return new, (
-            self.pruned_entries(key, *rng, version=version) if rng and version else []
-        )
-
     @staticmethod
     def _key_range_from_footers(entries: list[dict], phys_key: str):
         """The key range of a merge batch, folded from the ``phys_key``
         zone maps of its freshly written ``entries`` under ``_stat_key``.
         None when a non-empty file's footer can't vouch for the key
-        (all-NULL keys, INT96 timestamps, a key that lives in the path):
-        every incumbent must be scanned.  ``()`` when no file holds a row:
-        nothing can match.  Otherwise ``(lo, hi)``."""
+        (all-NULL keys, INT96 timestamps): every incumbent must be
+        scanned.  (A key that lives in the path also gives None; the merge
+        routes such a batch by its partition values instead.)  ``()`` when
+        no file holds a row: nothing can match.  Otherwise ``(lo, hi)``."""
         lo = hi = None
         for e in entries:
             if e.get("n_rows", 0) == 0:
@@ -1707,19 +1732,9 @@ class SnapshotTable:
         read, old sandbox tables only — never a data pass)."""
         import pyarrow.parquet as pq
 
-        from urllib.parse import unquote, urlparse
-
         v = self.versions()[-1] if version is None else version
         m = self._manifest(v)
-        dead: dict[str, int] = {}
-        for dvp in m.get("delete_files", []):
-            for f in pq.read_table(dvp, columns=["__file"]).column("__file").to_pylist():
-                # DVs record Spark's _metadata.file_path (a file: URI,
-                # PERCENT-ENCODED for spaces/'%'/non-ASCII); manifest
-                # entries carry plain decoded filesystem paths — decode or
-                # dead.get() silently misses under such paths
-                p = unquote(urlparse(f).path) if f.startswith("file:") else f
-                dead[p] = dead.get(p, 0) + 1
+        dead = self._dead_per_file(m.get("delete_files", []))
         rows = []
         for e in m["files"]:
             n_rows, nbytes = e.get("n_rows"), e.get("bytes")
@@ -1734,7 +1749,7 @@ class SnapshotTable:
                     json.dumps(parts, sort_keys=True) if parts else None,
                     n_rows,
                     nbytes,
-                    dead.get(e["path"], 0),
+                    dead.get(os.path.basename(e["path"]), 0),
                     json.dumps(e["stats"], sort_keys=True) if e.get("stats") else None,
                 )
             )
@@ -2313,185 +2328,110 @@ class SnapshotTable:
         stats_cols: list[str] | None = None,
     ) -> int:
         """Copy-on-write MERGE (upsert by ``key``, the Delta ``MERGE INTO``
-        shape): files containing NO matched key are carried into the new
-        manifest unchanged (no IO); each file with at least one match is
-        rewritten without its matched rows; ``updates`` (new values for
-        matched keys + brand-new keys) lands as fresh files.  Touch cost is
-        proportional to the files actually hit — with clustered layout +
-        zone maps that is the handful of files the keys live in, not the
-        table.  ``updates`` must be unique on ``key`` (upsert semantics).
+        shape): the merge-on-read decision followed by a fold.  ``updates``
+        (new values for matched keys + brand-new keys) lands as fresh
+        files, and ``_merge_losers`` — the window ``commit_merge_on_read``
+        publishes — picks every row that loses its key.  That set is
+        written as a SCRATCH deletion vector, which is never published:
 
-        The per-hit-file rewrites are file-count-bounded driver work
-        (same class as a commit cadence loop), not data-volume work, and
-        fan out over the maintenance thread pool
-        (``MAINTENANCE_PARALLELISM`` concurrent Spark jobs) so a
-        wide-key merge never serializes thousands of tiny jobs.
+        - a file with no loser is carried unchanged (no IO);
+        - a hit file whose dead positions (losers plus older DV rows)
+          cover its ``n_rows`` leaves the manifest without a rewrite;
+        - every other hit file is rewritten by ``_repack_group`` (the
+          OPTIMIZE bin: scanned flat with every dead row subtracted, landed
+          back inside its own ``col=value`` directory with its
+          ``"partitions"`` tag), one job per file over the maintenance
+          pool (``MAINTENANCE_PARALLELISM`` concurrent Spark jobs);
+        - older vectors are trimmed to positions in carried files, as in
+          ``commit_compact_small``, and the scratch vector is removed
+          whether or not the commit publishes.
 
-        **Hive-partitioned tables**: survivor files are rewritten flat
-        (content exactly as stored — no path-encoded column ever moves
-        into the data) and relocated back inside their own ``col=value``
-        directory, keeping their ``"partitions"`` tag, so tier-1 partition
-        pruning survives the merge; ``updates`` land partitioned by the
-        table's DECLARED layout (they must carry those columns).  When
-        ``key`` IS a partition column, a matched file's fate is decided
-        from the manifest alone — every live row shares the key value, so
-        the file either disappears whole or is carried untouched; no data
-        file is opened for hit detection.
-
-        **Deletion vectors**: a table that has taken merge-on-read
-        deletes can be CoW-merged directly — dead positions are
-        subtracted in the survivor rewrite (those rows vanish for good),
-        and the vectors are trimmed to positions in carried files, same
-        as ``commit_compact_small``.
-        """
+        Touch cost is proportional to the files actually hit: zone-map
+        routing (or, when ``key`` is a partition column, the batch's
+        partition values) keeps the loser scan to files that may hold a
+        batch key.  ``updates`` must be unique on ``key`` (upsert
+        semantics).  On a Hive-partitioned table ``updates`` lands
+        partitioned by the table's DECLARED layout and must carry those
+        columns; when ``key`` IS a partition column every row of a matched
+        partition loses, so its files leave the manifest whole."""
         versions = self.versions()
         if not versions:
             return self.commit_append(updates, n_new_files, stats_cols)
-        updates = self._apply_generated(updates)
-        self._enforce_constraints(updates, self._incoming_constraints())
-        # `updates` feeds the data-file write and the hit-detection
-        # semi-joins: persist once (batch-sized), don't
-        # recompute the caller's upstream plan per action (guide §5)
-        updates = updates.persist()
-        try:
-            return self._commit_merge_inner(
-                updates, key, n_new_files, stats_cols, versions
-            )
-        finally:
-            updates.unpersist()
-
-    def _commit_merge_inner(
-        self,
-        updates: DataFrame,
-        key: str,
-        n_new_files: int,
-        stats_cols: list[str] | None,
-        versions: list[int],
-    ) -> int:
-        from urllib.parse import unquote, urlparse
-
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        spark = updates.sparkSession
-        cur = self._manifest(versions[-1])
-        cur_entries = cur["files"]
-        dvs = list(cur.get("delete_files", []))
+        head = versions[-1]
+        m = self._manifest(head)
         # the table's declared layout decides where the update rows land;
         # legacy manifests fall back to the entry-inferred single layout
-        lay = cur.get("layout")
+        lay = m.get("layout")
         if lay is None:
-            lay, _mixed = self._infer_layout(cur_entries)
-        if lay and not set(lay) <= set(updates.columns):
-            raise ValueError(
-                f"commit_merge updates must carry the table's partition "
-                f"columns {tuple(lay)} so upserted rows keep their layout"
-            )
-        mapping = cur.get("column_map", {})
-        ext = self._extended_map(updates.columns, mapping)
-        phys_key = mapping.get(key, key)
-        upd_keys = updates.select(key).distinct()
-        # at 100 TB with clustered layout, zone-map routing leaves the
-        # handful of files the keys live in; a key that IS a partition
-        # column has no zone map (it lives in the path), so every entry
-        # is kept and the partition-keyed ones are matched from the
-        # manifest below
-        new, scan_entries = self._write_merge_batch(
-            updates, key, versions[-1], n_new_files, stats_cols,
+            lay, _mixed = self._infer_layout(m["files"])
+        updates, new, losers, ext = self._merge_prelude(
+            updates, key, head, m, n_new_files, stats_cols,
             partition_by=list(lay) or None,
         )
-        # entries whose KEY is path-encoded never open a data file for hit
-        # detection: the manifest's partition value is the key value for
-        # every row in the file.  The comparison joins a one-row-per-FILE
-        # frame (file-count-bounded, not data) against the update keys,
-        # cast to the key's own type so '19723' matches 19723.
-        part_entries = [e for e in scan_entries if key in e.get("partitions", {})]
-        data_entries = [e for e in scan_entries if key not in e.get("partitions", {})]
-        hit_paths: set[str] = set()
-        if part_entries:
-            kt = updates.schema[key].dataType.simpleString()
-            pv = spark.createDataFrame(
-                [(e["path"], e["partitions"][key]) for e in part_entries],
-                "path string, __pv string",
-            ).select("path", F.col("__pv").cast(kt).alias(key))
-            hit_paths.update(
-                r["path"]
-                for r in pv.join(F.broadcast(upd_keys), key, "left_semi")
-                .select("path")
-                .collect()  # bounded: one row per partition-routed file
+        dvs = list(m.get("delete_files", []))
+        scratch = [] if losers is None else self._write_delete_files_nonempty(losers)
+        try:
+            lost = self._dead_per_file(scratch)
+            dead = self._dead_per_file(dvs) if lost else {}
+            kept, hit = [], []
+            for e in list(m["files"]) + new:
+                b = os.path.basename(e["path"])
+                if b not in lost:
+                    kept.append(e)
+                elif lost[b] + dead.get(b, 0) < e.get("n_rows", math.inf):
+                    hit.append(e)
+            spark = updates.sparkSession
+            if hit:
+                dv_df = self._read_dvs(spark, dvs + scratch)
+                hit = [
+                    w
+                    for lst in self._run_maintenance_jobs(
+                        lambda e: self._repack_group(
+                            spark, [e], dv_df, 1, list(e.get("stats", {})) or None
+                        ),
+                        hit,
+                    )
+                    for w in lst
+                ]
+            if lost.keys() & dead.keys():
+                # older positions in dropped or rewritten files are folded
+                # in; the trim job runs only when kept files hold some too
+                trim = dead.keys() - lost.keys()
+                dvs = self._trim_dvs(spark, dvs, kept) if trim else []
+            return self._publish(
+                kept + hit,
+                expected_parent=head,
+                delete_files=dvs or None,
+                column_map=ext,
+                # partition columns are rename-guarded, so logical names in
+                # `updates` ARE the path-encoded names the write just produced
+                partition_types=self._merged_ptypes(m, updates, list(lay) or None),
             )
-        if data_entries:
-            # LIVE rows only: a key whose old row a DV already killed must
-            # not mark its file as hit (the rewrite would change nothing);
-            # the key's type comes from the batch, so no inference job
-            key_schema = T.StructType(
-                [T.StructField(phys_key, updates.schema[key].dataType)]
-            )
-            hits = (
-                self._read_entries(
-                    spark, cur, data_entries, with_pos=True, schema=key_schema
-                )
-                .join(F.broadcast(upd_keys), key, "left_semi")
-                .select("__file")
-                .distinct()
-                .collect()
-            )  # bounded: at most one row per data file
-            hit_paths.update(unquote(urlparse(r["__file"]).path) for r in hits)
-        kept = [e for e in cur_entries if e["path"] not in hit_paths]
-        dv_df = self._read_dvs(spark, dvs) if dvs else None  # read ONCE
-        hit_entries = [
-            e
-            for e in cur_entries
-            if e["path"] in hit_paths and key not in e.get("partitions", {})
-            # partition-keyed matches never appear here: every live row
-            # shares the key value, the file disappears whole
-        ]
+        finally:
+            for f in scratch:
+                # tolerant: a concurrent vacuum scanning for unreferenced
+                # files may have deleted the never-published vector first
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(f)
 
-        def _rewrite_survivors(e: dict) -> list[dict]:
-            # survivors stay PHYSICAL end-to-end (scan flat, write back
-            # unchanged); only the join key crosses the mapping boundary
-            survivors = self._scan_flat_live(spark, [e["path"]], dv_df).join(
-                F.broadcast(upd_keys.withColumnRenamed(key, phys_key)),
-                phys_key,
-                "left_anti",
-            )
-            # ONE action per hit file: the narrow write doubles as the
-            # emptiness probe (footer row count) — the old probe-then-write
-            # shape ran the scan+anti-join twice for every partially-matched
-            # file, the common case at scale (same fold as the DV writes)
-            cols = list(e.get("stats", {})) or None
-            written = self._write_data_files(survivors, 1, cols, narrow=True)
-            if sum(w.get("n_rows", 0) for w in written) == 0:
-                for w in written:
-                    # tolerant: a concurrent vacuum scanning for unreferenced
-                    # files may have deleted the never-published file first
-                    with contextlib.suppress(FileNotFoundError):
-                        os.remove(w["path"])
-                return []  # fully-matched file: disappears from the manifest
-            return self._relocate_into_partition(written, e)
+    @staticmethod
+    def _dead_per_file(dvs: list[str]) -> dict[str, int]:
+        """Dead positions per data file, keyed by its uuid basename, in the
+        deletion-vector files ``dvs``: read on the driver with pyarrow,
+        O(dead rows) and no Spark job.  The basename sidesteps the
+        percent-encoding of the ``file:`` URIs a DV records.  Positions
+        never repeat across vectors — every DV writer subtracts the
+        already-dead rows first."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
-        # per-hit-file rewrites are independent jobs: fan out over the
-        # maintenance pool (file-count-bounded, same as the OPTIMIZE bins)
-        rewritten: list[dict] = [
-            e
-            for lst in self._run_maintenance_jobs(_rewrite_survivors, hit_entries)
-            for e in lst
-        ]
-        # trim DVs to carried files: rewritten/vanished files folded their
-        # dead rows in above, so only kept-file positions stay live
-        new_dvs = self._trim_dvs(spark, dvs, kept)
-        # same lost-update guard as commit_append: the kept/rewritten lists
-        # were derived from versions[-1], so publishing over a moved head
-        # would drop the interleaved commit
-        return self._publish(
-            kept + rewritten + new,
-            expected_parent=versions[-1],
-            delete_files=new_dvs or None,
-            column_map=ext,
-            # partition columns are rename-guarded, so logical names in
-            # `updates` ARE the path-encoded names the write just produced
-            partition_types=self._merged_ptypes(cur, updates, list(lay) or None),
-        )
+        out: dict[str, int] = {}
+        for f in dvs:
+            col = pq.read_table(f, columns=["__file"])["__file"]
+            for d in pc.value_counts(col).to_pylist():
+                b = os.path.basename(d["values"])
+                out[b] = out.get(b, 0) + d["counts"]
+        return out
 
     def incremental_files(self, v_from: int, v_to: int | None = None) -> list[str]:
         """Files ADDED between two versions — the change-feed consumption

@@ -635,15 +635,19 @@ def test_warm_rerun_compiles_no_classes(spark, sf_dir):
 
 
 def test_merge_commit_job_count_ceiling(spark, tmp_path):
-    """Pin the r10 driver-job floor of a CoW merge commit (16 -> 10 jobs),
-    of a merge-on-read commit (6 jobs) and of a CoW merge keyed on the
-    partition column (7 -> 5 jobs once its key-range agg was deleted).
+    """Pin the driver-job floor of a CoW merge commit (16 -> 10 -> 8 jobs),
+    of a merge-on-read commit (6 jobs), of a CoW merge keyed on the
+    partition column (7 -> 5 -> 4 jobs) and of a CoW merge that matches a
+    whole file over an older deletion vector (12 -> 7 jobs).
 
     Per-job fixed cost dominates commit wall time on the local harness
-    (and schedules a full round-trip at any scale), so the r10 fusions
-    (write-as-probe, footer key-range fold, survivor-write-as-emptiness-
-    probe) are pinned by job COUNT — a regression to any pre-fusion shape
-    re-adds whole jobs, which this ceiling catches deterministically."""
+    (and schedules a full round-trip at any scale), so the fusions are
+    pinned by job COUNT: the write-as-probe, the footer key-range fold,
+    and the CoW merge as the merge-on-read loser decision folded into the
+    files it hits (a fully dead file leaves without a rewrite, and a
+    vector left with no carried position needs no trim job).  A
+    regression to an earlier shape re-adds whole jobs, which this
+    ceiling catches deterministically."""
     from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
     t = SnapshotTable(str(tmp_path / "jc_merge"))
@@ -656,7 +660,7 @@ def test_merge_commit_job_count_ceiling(spark, tmp_path):
             key="k",
             stats_cols=["k"],
         )
-    assert s.jobs <= 10, s
+    assert s.jobs <= 8, s
 
     # merge-on-read: the data-file write, then the DV semi-join write
     t = SnapshotTable(str(tmp_path / "jc_mor"))
@@ -671,15 +675,34 @@ def test_merge_commit_job_count_ceiling(spark, tmp_path):
         )
     assert s.jobs <= 6, s
 
-    # keyed on the partition column, hits are decided from the manifest:
-    # the key has no zone map, and no key-range job runs in its place
+    # keyed on the partition column, the batch is routed from the
+    # manifest's partition values: the key has no zone map, and no
+    # key-range job runs in its place
     t = SnapshotTable(str(tmp_path / "jc_part"))
     t.commit_append(
         spark.range(0, 1000).selectExpr("id % 4 as p", "id as v"), partition_by=["p"]
     )
     with span(spark) as s:
         t.commit_merge(spark.createDataFrame([(1, -1)], "p long, v long"), key="p")
-    assert s.jobs <= 5, s
+    assert s.jobs <= 4, s
+
+    # the batch matches every live row of file B, whose other rows an
+    # older deletion vector already killed: B leaves the manifest without
+    # a rewrite, and the vector, which held only B's positions, is dropped
+    t = SnapshotTable(str(tmp_path / "jc_full"))
+    for lo in (0, 100):
+        t.commit_append(
+            spark.range(lo, lo + 100).selectExpr("id as k", "id*2 as v"),
+            stats_cols=["k"],
+        )
+    t.commit_delete(spark, "k >= 190")
+    with span(spark) as s:
+        t.commit_merge(
+            spark.range(100, 210).selectExpr("id as k", "id*7 as v"),
+            key="k",
+            stats_cols=["k"],
+        )
+    assert s.jobs <= 7, s
 
 
 def test_channel_report_full_job_count_ceiling(spark, sf_dir):

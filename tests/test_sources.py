@@ -2177,9 +2177,11 @@ def test_snapshot_partitioned_cow_merge(spark, tmp_path):
 
 
 def test_snapshot_partitioned_merge_key_is_partition_col(spark, tmp_path):
-    """When the merge key IS the partition column, hit detection reads no
-    data file at all (manifest-only routing) and a matched partition's
-    files disappear whole, replaced by the update rows."""
+    """When the merge key IS the partition column, routing is manifest-only
+    (the batch's partition values prune the other partitions' files
+    unopened); the matched partition's files are scanned for the row
+    positions of the loser decision, and since every live row in them
+    loses they disappear whole, replaced by the update rows."""
     from pyspark.sql import functions as F
 
     from bigdata_homed_spark.sources.snapshots import SnapshotTable
@@ -2981,9 +2983,9 @@ def test_compact_small_parallel_64_partitions(spark, tmp_path, monkeypatch):
 
 
 def test_commit_merge_parallel_survivor_rewrites(spark, tmp_path, monkeypatch):
-    """CoW MERGE survivor rewrites fan out the same way: a merge hitting
-    many files runs the per-file survivor jobs concurrently with results
-    identical to the sequential path."""
+    """CoW MERGE rewrites of hit files fan out the same way: a merge
+    hitting many files runs the per-file repack jobs concurrently with
+    results identical to the sequential path."""
     import threading
 
     from pyspark.sql import functions as F
@@ -3407,11 +3409,13 @@ def test_snapshot_multiple_tags_and_gap_chains(spark, tmp_path):
 
 
 def test_merge_write_as_probe_leaves_no_orphans(spark, tmp_path):
-    """The CoW merge's survivor rewrite and DV trim use the write itself as
-    the emptiness probe (footer row count): a fully-matched file's empty
-    survivor write and an empty DV trim must clean up after themselves —
-    every parquet on disk is referenced by SOME manifest version (nothing
-    for vacuum to chase), and the live manifest carries no 0-row files."""
+    """A CoW merge that matches every live row of a file over an older
+    deletion vector leaves no orphan: the file is dropped without a
+    rewrite (losers plus old dead rows cover its ``n_rows``) and the
+    vector, which held only that file's positions, is dropped without a
+    trim.  Every parquet on disk is referenced by SOME manifest version
+    (nothing for vacuum to chase), and the live manifest carries no 0-row
+    files."""
     import glob
     import os
 
@@ -3425,8 +3429,8 @@ def test_merge_write_as_probe_leaves_no_orphans(spark, tmp_path):
     )
     t.commit_append(mk(0, 100), n_files=1, stats_cols=["k"])    # file A
     t.commit_append(mk(100, 200), n_files=1, stats_cols=["k"])  # file B
-    # MoR delete marks rows ONLY in file B -> after the merge below fully
-    # rewrites B, the DV trim's surviving frame is empty
+    # MoR delete marks rows ONLY in file B -> once the merge below drops
+    # B, no position of the vector is left in a carried file
     t.commit_delete(spark, "k >= 190")
     # merge matches ALL of B (fully-matched: disappears) + new keys
     upd = spark.range(100, 210).selectExpr("id AS k", "cast(-1.0 as double) AS v")
@@ -3435,8 +3439,8 @@ def test_merge_write_as_probe_leaves_no_orphans(spark, tmp_path):
     rows = {r.k: r.v for r in t.read(spark, v).collect()}
     assert len(rows) == 210 and rows[0] == 0.0 and rows[150] == -1.0
 
-    # every data file on disk belongs to some manifest version (the empty
-    # survivor write was removed, not leaked)
+    # every data file on disk belongs to some manifest version (no empty
+    # rewrite was written or leaked)
     on_disk = set(glob.glob(os.path.join(t.data_dir, "**", "*.parquet"), recursive=True))
     referenced = {p for ver in t.versions() for p in t.files(ver)}
     assert on_disk == referenced
@@ -3700,3 +3704,150 @@ def test_snapshot_zone_maps_and_merges_match_unpruned_model(spark, tmp_path, dty
         assert sorted(pruned.collect()) == sorted(full.collect())
 
     run()
+
+
+def test_snapshot_merge_verbs_match_dict_model(spark, tmp_path):
+    """Differential test of the two MERGE verbs against a dict upsert.
+
+    Each example draws a table of unique keys, a layout (flat, partitioned
+    by a non-key column, or partitioned by the key), an optional prior
+    ``commit_delete`` and one or two batches unique on the key, and runs
+    ``commit_merge`` and ``commit_merge_on_read`` on twin tables.  Both
+    must read as the model, so no key is live twice.  The copy-on-write
+    head lists no 0-row file and adds no deletion vector of its own: any
+    DV row it carries is one the delete wrote.  The merge-on-read head
+    carries every file of the table it started from."""
+    import itertools
+    import os
+
+    import pyarrow.parquet as pq
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
+
+    case_n = itertools.count()
+
+    def frame(rows):
+        return spark.createDataFrame(
+            [(k, p, v) for k, (p, v) in rows.items()], "k long, p long, v long"
+        )
+
+    def dv_rows(t):
+        out = set()
+        for path in t._manifest(t.versions()[-1]).get("delete_files", []):
+            d = pq.read_table(path).to_pydict()
+            out.update(zip(map(os.path.basename, d["__file"]), d["__pos"]))
+        return out
+
+    def rows_of(keys):
+        return st.dictionaries(
+            st.integers(*keys), st.integers(0, 1), min_size=1, max_size=6
+        )
+
+    @settings(
+        max_examples=6,
+        deadline=None,
+        suppress_health_check=[
+            HealthCheck.function_scoped_fixture, HealthCheck.too_slow
+        ],
+    )
+    @given(
+        base=rows_of((0, 9)),
+        layout=st.sampled_from([None, "p", "k"]),
+        deleted=st.none() | st.integers(0, 9),
+        batches=st.lists(rows_of((0, 13)), min_size=1, max_size=2),
+    )
+    def run(base, layout, deleted, batches):
+        n = next(case_n)
+        ids = itertools.count()
+        model = {k: (p, next(ids)) for k, p in base.items()}
+        cow = SnapshotTable(os.path.join(str(tmp_path), f"cow_{n}"))
+        mor = SnapshotTable(os.path.join(str(tmp_path), f"mor_{n}"))
+        for t in (cow, mor):
+            t.commit_append(
+                frame(model),
+                n_files=2,
+                stats_cols=["k"],
+                partition_by=[layout] if layout else None,
+            )
+            if deleted is not None:
+                t.commit_delete(spark, f"k <= {deleted}")
+        if deleted is not None:
+            model = {k: r for k, r in model.items() if k > deleted}
+        delete_dv, parent_files = dv_rows(cow), set(mor.files())
+        for batch in batches:
+            upd = {k: (p, next(ids)) for k, p in batch.items()}
+            cow.commit_merge(frame(upd), key="k", stats_cols=["k"])
+            mor.commit_merge_on_read(frame(upd), key="k", stats_cols=["k"])
+            model.update(upd)
+        want = sorted((k, p, v) for k, (p, v) in model.items())
+        for t in (cow, mor):
+            got = sorted(map(tuple, t.read(spark).select("k", "p", "v").collect()))
+            assert got == want, (t.path, got, want)
+        assert dv_rows(cow) <= delete_dv
+        assert all(e["n_rows"] > 0 for e in cow._manifest(cow.versions()[-1])["files"])
+        assert parent_files <= set(mor.files())
+
+    run()
+
+
+def test_snapshot_cow_merge_failed_rewrite_publishes_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """A copy-on-write merge that fails inside a file rewrite publishes
+    nothing: the head and ``read()`` are unchanged, the scratch deletion
+    vector is gone from ``_deletes/``, the next merge succeeds, and
+    ``vacuum`` then leaves no parquet file that no version references."""
+    import glob
+    import os
+
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path / "crash"))
+    mk = lambda lo, hi, v: spark.range(lo, hi).selectExpr("id AS k", f"{v} AS v")
+    t.commit_append(mk(0, 100, 1), n_files=1, stats_cols=["k"])
+    t.commit_append(mk(100, 200, 1), n_files=1, stats_cols=["k"])
+    t.commit_delete(spark, "k >= 190")
+    head = t.versions()[-1]
+    before = sorted(t.read(spark).collect())
+    dvs_before = set(glob.glob(os.path.join(t.delete_dir, "*.parquet")))
+
+    def fail(self, *a, **kw):
+        raise RuntimeError("rewrite failed")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(SnapshotTable, "_repack_group", fail)
+        with pytest.raises(RuntimeError, match="rewrite failed"):
+            t.commit_merge(mk(50, 60, -1), key="k", stats_cols=["k"])
+    assert t.versions()[-1] == head
+    assert sorted(t.read(spark).collect()) == before
+    assert set(glob.glob(os.path.join(t.delete_dir, "*.parquet"))) == dvs_before
+
+    v = t.commit_merge(mk(50, 60, -1), key="k", stats_cols=["k"])
+    got = {r.k: r.v for r in t.read(spark, v).collect()}
+    assert got == {k: -1 if 50 <= k < 60 else 1 for k in range(190)}
+    t.vacuum(keep_last=1)
+    on_disk = {
+        p
+        for d in (t.data_dir, t.delete_dir)
+        for p in glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
+    }
+    m = t._manifest(v)
+    assert on_disk == set(t.files(v)) | set(m.get("delete_files", []))
+
+
+def test_snapshot_compact_small_all_dead_table_reads_empty(spark, tmp_path):
+    """OPTIMIZE over a table whose every row is DV-dead still publishes a
+    readable head of 0 rows: the repack keeps its row-less output file.
+    Dropping empty repack output would publish a manifest with no file,
+    which ``read()`` refuses as a table with no commits."""
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
+
+    t = SnapshotTable(str(tmp_path / "all_dead"))
+    t.commit_append(spark.range(20).selectExpr("id AS k"), n_files=2)
+    t.commit_delete(spark, "k >= 0")
+    v = t.commit_compact_small(spark, threshold_bytes=1 << 30)
+    assert v == 3
+    assert not t._manifest(v).get("delete_files")
+    assert t.read(spark, v).count() == 0
