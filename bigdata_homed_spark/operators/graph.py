@@ -335,8 +335,11 @@ def min_label_components(edges: DataFrame) -> DataFrame:
         )
     )
     while changed:
+        # the labels (one row per node) are the join's build side in every
+        # round: left to AQE's runtime sizes, the side flipped between runs
+        # of the same query, re-planning and recompiling the loop
         msgs = (
-            sym.join(labels, sym["src"] == labels["node"])
+            sym.join(labels.hint("shuffle_hash"), sym["src"] == labels["node"])
             .groupBy(F.col("dst").alias("id2"))
             .agg(F.min("label").alias("nbr_min"))
         )

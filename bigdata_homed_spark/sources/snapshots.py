@@ -60,6 +60,11 @@ from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 
+# the footer key under which Spark records the schema a file was written
+# with; Spark's parquet schema inference reads it in preference to the
+# file's own parquet schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 def _stat_key(v):
     """Sort key of a zone-map value or a pruning bound — the ONE ordering
@@ -2136,11 +2141,35 @@ class SnapshotTable:
         to every rewrite that must land its output back inside the same
         partition directory.  ``dv_df`` is the PRE-READ deletion-vector
         frame (``__file``/``__pos``) — callers that loop over groups or
-        hit files read it ONCE, not once per iteration."""
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
+        hit files read it ONCE, not once per iteration.
+
+        The scan is typed from the schema Spark records in each footer it
+        writes, which is what its own inference would read there, so no
+        inference job runs; files without that record, or with records
+        that differ (an evolved schema), are merged by inference."""
+        schema = self._footer_schema(paths)
+        if schema is None:
+            df = spark.read.option("mergeSchema", "true").parquet(*paths)
+        else:
+            df = spark.read.schema(schema).parquet(*paths)
         if dv_df is None:
             return df
         return self._drop_dead(self._with_pos(df), dv_df).drop("__file", "__pos")
+
+    @staticmethod
+    def _footer_schema(paths: list[str]):
+        """The one Spark schema recorded in the footers of ``paths``, read
+        on the driver with pyarrow; None unless every file records the
+        same one."""
+        import pyarrow.parquet as pq
+        from pyspark.sql import types as T
+
+        found = {
+            (pq.read_metadata(p).metadata or {}).get(_SPARK_SCHEMA_KEY) for p in paths
+        }
+        if len(found) != 1 or None in found:
+            return None
+        return T.StructType.fromJson(json.loads(found.pop()))
 
     def _relocate_into_partition(
         self, entries: list[dict], template: dict

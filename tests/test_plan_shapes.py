@@ -635,10 +635,11 @@ def test_warm_rerun_compiles_no_classes(spark, sf_dir):
 
 
 def test_merge_commit_job_count_ceiling(spark, tmp_path):
-    """Pin the driver-job floor of a CoW merge commit (16 -> 10 -> 8 jobs),
-    of a merge-on-read commit (6 jobs), of a CoW merge keyed on the
-    partition column (7 -> 5 -> 4 jobs) and of a CoW merge that matches a
-    whole file over an older deletion vector (12 -> 7 jobs).
+    """Pin the driver-job floor of a CoW merge commit (16 -> 10 -> 8 -> 6
+    jobs), of a merge-on-read commit (6 jobs), of a CoW merge keyed on the
+    partition column (7 -> 5 -> 4 jobs), of a CoW merge that matches a
+    whole file over an older deletion vector (12 -> 7 jobs) and of an
+    OPTIMIZE of three small files (2 -> 1 job).
 
     Per-job fixed cost dominates commit wall time on the local harness
     (and schedules a full round-trip at any scale), so the fusions are
@@ -660,7 +661,7 @@ def test_merge_commit_job_count_ceiling(spark, tmp_path):
             key="k",
             stats_cols=["k"],
         )
-    assert s.jobs <= 8, s
+    assert s.jobs <= 6, s
 
     # merge-on-read: the data-file write, then the DV semi-join write
     t = SnapshotTable(str(tmp_path / "jc_mor"))
@@ -703,6 +704,15 @@ def test_merge_commit_job_count_ceiling(spark, tmp_path):
             stats_cols=["k"],
         )
     assert s.jobs <= 7, s
+
+    # OPTIMIZE: one repack bin, one job
+    t = SnapshotTable(str(tmp_path / "jc_optimize"))
+    for lo in (0, 100, 200):
+        t.commit_append(spark.range(lo, lo + 100).selectExpr("id as k", "id*2 as v"))
+    with span(spark) as s:
+        t.commit_compact_small(spark, threshold_bytes=1 << 30)
+    assert s.jobs <= 1, s
+    assert sorted(t.read(spark).collect()) == [(k, 2 * k) for k in range(300)]
 
 
 def test_channel_report_full_job_count_ceiling(spark, sf_dir):
@@ -764,6 +774,25 @@ def test_graph_loop_job_count_ceiling(spark, sf_dir):
         counts[name] = s.jobs
         assert cached() <= before_cached, name
     assert all(counts[n] <= c for n, c in ceilings.items()), counts
+
+
+def test_dedup_canonical_keep_warm_calls_repeat(spark, sf_dir):
+    """Warm calls of ``dedup_canonical_keep`` schedule the same jobs and
+    compile nothing once warm.  The label loop's join of the edges with the
+    labels took its build side from AQE's runtime sizes, which flipped
+    between calls (15 or 16 jobs, and the join's two classes compiled again
+    with the build and stream rows swapped); a shuffle-hash hint on the
+    labels pins it."""
+    from bigdata_homed_spark.plans import QUERIES
+
+    QUERIES["dedup_canonical_keep"](spark, sf_dir).collect()  # warm-up
+    spans = []
+    for _ in range(4):
+        with span(spark) as s:
+            QUERIES["dedup_canonical_keep"](spark, sf_dir).collect()
+        spans.append(s)
+    assert len({s.jobs for s in spans}) == 1, spans
+    assert all(s.compiles == 0 for s in spans[1:]), spans
 
 
 def test_merge_latest_job_count_ceiling(spark, tmp_path):

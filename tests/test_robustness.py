@@ -9,6 +9,7 @@ import subprocess
 import sys
 import textwrap
 
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_homed_spark.functions.maps import kv_string_to_map
@@ -257,3 +258,174 @@ def test_span_counts_jobs_past_status_store_retention(tmp_path):
     jobs, tracker_delta = map(int, out.stdout.split()[-2:])
     assert jobs == 5
     assert tracker_delta != 5
+
+
+# ---------------------------------------------------------------------------
+# The driver's class-data archive (session module docstring): every case
+# runs sessions in subprocesses against a private cache, and each must give
+# the same query result as a session without an archive, with no error.
+
+ARCHIVE_SCRIPT = """
+import sys
+sys.path.insert(0, {root!r})
+from bigdata_homed_spark.session import get_spark
+
+spark = get_spark("archive_probe", master="local[1]")
+rows = (
+    spark.range(0, 2000, 1, 4).selectExpr("id % 7 as k", "id")
+    .groupBy("k").sum("id").orderBy("k").collect()
+)
+print("OPTS", spark.sparkContext.getConf().get("spark.driver.extraJavaOptions", ""))
+print("CONF", spark.sparkContext.getConf().get("spark.archive.probe", "-"))
+print("ROWS", [tuple(r) for r in rows], flush=True)
+{tail}
+"""
+ARCHIVE_ROWS = str([(k, sum(range(k, 2000, 7))) for k in range(7)])
+
+
+def _archive_env(cache, **extra) -> dict:
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_CONF_DIR"}
+    return dict(env, XDG_CACHE_HOME=str(cache), SPARK_GRAFT_DRIVER_MEM="1g", **extra)
+
+
+def _archive_session(tmp_path, env: dict, tail: str = "") -> subprocess.Popen:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "archive_probe.py"
+    script.write_text(textwrap.dedent(ARCHIVE_SCRIPT).format(root=root, tail=tail))
+    return subprocess.Popen(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+    )
+
+
+def _archive_result(proc: subprocess.Popen) -> dict:
+    """The session's printed lines by tag, after checking it exited 0 and
+    gave the no-archive result."""
+    out, err = proc.communicate(timeout=300)
+    assert proc.returncode == 0, err[-3000:]
+    lines = dict(ln.split(" ", 1) for ln in out.splitlines() if " " in ln)
+    assert lines["ROWS"] == ARCHIVE_ROWS, out
+    return lines
+
+
+def _archive_path(cache, monkeypatch) -> str:
+    """The archive path a 1g session gets under ``cache``."""
+    from bigdata_homed_spark.session import _driver_archive
+
+    monkeypatch.setenv("XDG_CACHE_HOME", str(cache))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    found = _driver_archive("1g")
+    if found is None:
+        pytest.skip("this Spark home's configuration directory rules out an archive")
+    return found[0]
+
+
+def _cache_files(final: str) -> list[str]:
+    return sorted(n for n in os.listdir(os.path.dirname(final)) if n != "conf")
+
+
+def test_driver_archive_replaces_garbage_truncated_and_stale_files(tmp_path, monkeypatch):
+    """A garbage file at the key's path and a truncated archive are neither
+    mapped nor kept: the session runs without them and dumps a whole
+    archive in their place, which the next session maps.  An older key's
+    archive is deleted when the new one lands."""
+    from bigdata_homed_spark.session import _archive_complete
+
+    final = _archive_path(tmp_path / "cache", monkeypatch)
+    stale = os.path.join(os.path.dirname(final), "driver-0123456789abcdef.jsa")
+    with open(stale, "wb") as f:
+        f.write(b"old key")
+    with open(final, "wb") as f:
+        f.write(os.urandom(4096))
+    env = _archive_env(tmp_path / "cache")
+    assert "ArchiveClassesAtExit" in _archive_result(_archive_session(tmp_path, env))["OPTS"]
+    assert _cache_files(final) == [os.path.basename(final)]
+    assert _archive_complete(final)
+
+    size = os.path.getsize(final)
+    os.chmod(final, 0o644)
+    os.truncate(final, size // 2)
+    assert "ArchiveClassesAtExit" in _archive_result(_archive_session(tmp_path, env))["OPTS"]
+    assert _archive_complete(final) and _cache_files(final) == [os.path.basename(final)]
+
+    opts = _archive_result(_archive_session(tmp_path, env))["OPTS"]
+    assert f"-XX:SharedArchiveFile={final}" in opts
+
+
+def test_driver_archive_unwritable_cache_root(tmp_path):
+    """A cache root that cannot be made means no archive and no error."""
+    blocker = tmp_path / "file"
+    blocker.write_text("")
+    lines = _archive_result(_archive_session(tmp_path, _archive_env(blocker / "cache")))
+    assert "Archive" not in lines["OPTS"]
+
+
+def test_driver_archive_never_hides_a_real_conf_dir(tmp_path, monkeypatch):
+    """A SPARK_CONF_DIR with real configuration is used as it is, left
+    untouched, and gets no archive."""
+    final = _archive_path(tmp_path / "cache", monkeypatch)
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.archive.probe  from-conf\n")
+    env = _archive_env(tmp_path / "cache", SPARK_CONF_DIR=str(conf))
+    lines = _archive_result(_archive_session(tmp_path, env))
+    assert lines["CONF"] == "from-conf"
+    assert "Archive" not in lines["OPTS"]
+    assert os.listdir(conf) == ["spark-defaults.conf"]
+    assert (conf / "spark-defaults.conf").read_text() == "spark.archive.probe  from-conf\n"
+    assert _cache_files(final) == []
+
+
+def test_driver_archive_two_first_sessions_land_one(tmp_path, monkeypatch):
+    """Two sessions that start on an empty cache at once: one takes the
+    lock and dumps, the other runs without; exactly one archive lands and
+    no temp or lock file is left."""
+    final = _archive_path(tmp_path / "cache", monkeypatch)
+    env = _archive_env(tmp_path / "cache")
+    (tmp_path / "a").mkdir()
+    (tmp_path / "b").mkdir()
+    procs = [_archive_session(tmp_path / d, env) for d in ("a", "b")]
+    opts = [_archive_result(p)["OPTS"] for p in procs]
+    assert sum("ArchiveClassesAtExit" in o for o in opts) == 1, opts
+    assert _cache_files(final) == [os.path.basename(final)]
+
+
+def test_driver_archive_killed_dumper_is_never_promoted(tmp_path, monkeypatch):
+    """A dumping session killed with SIGKILL promotes nothing: its JVM may
+    still write its temp file, but only the exit hook renames, and the
+    next session takes the dead process's lock over, dumps and lands its
+    own archive, dropping the dead one's temp file."""
+    import signal
+    import time
+
+    final = _archive_path(tmp_path / "cache", monkeypatch)
+    env = _archive_env(tmp_path / "cache")
+    tail = 'print("JVM", spark.sparkContext._gateway.proc.pid, flush=True)\n'
+    tail += "import time\ntime.sleep(600)"
+    proc = _archive_session(tmp_path, env, tail)
+    jvm = None
+    for line in proc.stdout:
+        if line.startswith("JVM "):
+            jvm = int(line.split()[1])
+            break
+    assert jvm is not None, proc.stderr.read()[-3000:]
+    proc.send_signal(signal.SIGKILL)
+    proc.communicate()
+
+    def running(pid: int) -> bool:
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+        except FileNotFoundError:
+            return False
+
+    # the orphaned JVM sees its stdin close, dumps and exits
+    deadline = time.monotonic() + 180
+    while running(jvm) and time.monotonic() < deadline:
+        time.sleep(0.5)
+    assert not running(jvm)
+    assert not os.path.exists(final)
+    assert os.path.exists(final + ".lock")
+
+    assert "ArchiveClassesAtExit" in _archive_result(_archive_session(tmp_path, env))["OPTS"]
+    assert _cache_files(final) == [os.path.basename(final)]
